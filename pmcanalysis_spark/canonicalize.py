@@ -378,7 +378,6 @@ def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 50,
-    checkpoint_every: int = 5,
     driver_threshold: int = 100_000,
     n_edges: int | None = None,
 ) -> DataFrame:
@@ -547,7 +546,7 @@ def connected_components(
     sym = sym.repartition("dst").persist()
     labels = labels.persist()
     converged = False
-    for i in range(max_iter):
+    for _ in range(max_iter):
         neighbor_min = (
             sym.join(labels, sym.dst == labels.id)
             .groupBy("src")
@@ -577,10 +576,9 @@ def connected_components(
                 ).alias("component"),
             )
         )
-        if (i + 1) % checkpoint_every == 0:
-            new_full = new_full.localCheckpoint(eager=True)
-        else:
-            new_full = new_full.persist()
+        # each iteration reads ``labels`` four times (neighbor_min, stepped,
+        # lk), so an untruncated plan grows ~4^i; truncate it every time
+        new_full = new_full.localCheckpoint(eager=True)
         # convergence check straight off the carried old label — labels only
         # ever decrease, so "any row where new != old" needs no old-vs-new
         # join (one full shuffle join per iteration saved)

@@ -9,61 +9,68 @@ stripped body text — the whitespace-collapsed text of ``<p>`` elements in
 document order, joined by single spaces, lowercased. Boilerplate containers
 (``script, style, nav, footer, header, head, title``) contribute nothing.
 
-The parser is pure Python (stdlib ``html.parser``) so the bytes are frozen —
-no version-floating HTML library behavior. The Spark-side wrapper is an
-Arrow-batched pandas UDF (no per-row Python round trips).
+The bytes are frozen by this module's own grammar, not by an HTML library:
+``_MARKUP`` is the tokenizer of CPython 3.11's ``html.parser`` (tag-end
+rule, comments, declarations, processing instructions, marked sections and
+the text fallback for a construct with no end) written as one regex, and
+``extract_text_py`` is that parser's event loop reduced to what reaches the
+output. Attribute values, line/offset bookkeeping and per-callback dispatch
+are never computed. A pinned stdlib parser would move with the interpreter:
+its comment and script handling changed in recent CPython patch releases.
+The differential test keeps the ``html.parser`` subclass this replaced as
+the reference. One deliberate difference: a ``<![`` marked section with an
+unknown keyword, or none, on which ``html.parser`` raises, is skipped to
+the next ``>`` like a bogus comment, so one malformed page cannot fail a
+whole job. The Spark-side wrapper is an Arrow-batched pandas UDF (no
+per-row Python round trips).
 """
 
 from __future__ import annotations
 
-from html.parser import HTMLParser
+import re
+from html import unescape
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-_BOILERPLATE = {"script", "style", "nav", "footer", "header", "head", "title"}
-_CONTENT = {"p"}
+_BOILERPLATE = frozenset({"script", "style", "nav", "footer", "header", "head", "title"})
 
+# One construct per match, at a "<"; a "<" that opens none of them is text.
+# Start tags follow html.parser's locatestarttagend_tolerant: a quoted
+# attribute value may hold ">", so a tag ends at the first ">" outside
+# quotes. Group 3 is None when that scan stops short of a ">": a letter, "="
+# or "/" (or the end of input) after it means the tag never ends, anything
+# else that the text up to there is data.
+_MARKUP = re.compile(r"""
+<(?:
+    ([a-zA-Z][^\t\n\r\f />\x00]*)                   # 1 start tag name
+    (?:[\s/]*(                                      # 2 attributes
+      (?:(?<=['"\s/])[^\s/>][^\s/=>]*
+        (?:\s*=+\s*(?:'[^']*'|"[^"]*"|(?!['"])[^>\s]*)\s*)?
+        (?:\s|/(?!>))*
+      )*))?
+    \s*(/?>)?                                       # 3 tag close
+  | /(?:\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>            # 4 end tag name
+      | ([a-zA-Z][^\t\n\r\f />\x00]*)[^>]*>           # 5 end tag name, junk to ">"
+      | [^>]*>)                                      # bogus comment, "</>"
+  | !--.*?--\s*>                                    # comment
+  | !\[(?:(?ai:temp|cdata|ignore|include|rcdata)(?![-_.a-zA-Z0-9]).*?]\s*]\s*>  # marked section
+      | (?ai:if|else|endif)(?![-_.a-zA-Z0-9]).*?]\s*>  # MS Office section
+      | (?!(?ai:temp|cdata|ignore|include|rcdata|if|else|endif)(?![-_.a-zA-Z0-9]))
+        [^>]*>)          # other keyword or none: a bogus comment (html.parser raises)
+  | !(?!--|\[)[^>]*>                                # doctype, bogus comment
+  | \?[^>]*>                                        # processing instruction
+  | (?=[/!?])                                       # one of the above, unended
+)""", re.VERBOSE | re.DOTALL)
 
-class _Extractor(HTMLParser):
-    """Collects whitespace-collapsed text of <p> elements outside boilerplate."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self._skip_depth = 0
-        self._p_depth = 0
-        self._chunks: list[str] = []
-        self._current: list[str] = []
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if tag in _BOILERPLATE:
-            self._skip_depth += 1
-        elif tag in _CONTENT and self._skip_depth == 0:
-            self._p_depth += 1
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag in _BOILERPLATE:
-            self._skip_depth = max(0, self._skip_depth - 1)
-        elif tag in _CONTENT and self._p_depth > 0:
-            self._p_depth -= 1
-            if self._p_depth == 0 and self._current:
-                chunk = " ".join("".join(self._current).split())
-                if chunk:
-                    self._chunks.append(chunk)
-                self._current = []
-
-    def handle_data(self, data: str) -> None:
-        if self._skip_depth == 0 and self._p_depth > 0:
-            self._current.append(data)
-
-    def result(self) -> str:
-        if self._current:  # unterminated final <p>
-            chunk = " ".join("".join(self._current).split())
-            if chunk:
-                self._chunks.append(chunk)
-            self._current = []
-        return " ".join(self._chunks).lower()
+# html.parser leaves script/style at the first end tag whose name is the
+# element's, in any ASCII case.
+_RAW_TEXT_END = {
+    "script": re.compile(r"</\s*[sS][cC][rR][iI][pP][tT]\s*>"),
+    "style": re.compile(r"</\s*[sS][tT][yY][lL][eE]\s*>"),
+}
+_UNENDED_TAG = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ=/"
 
 
 def extract_text_py(html: bytes | str | None) -> str:
@@ -72,10 +79,83 @@ def extract_text_py(html: bytes | str | None) -> str:
         return ""
     if isinstance(html, (bytes, bytearray, memoryview)):
         html = bytes(html).decode("utf-8", errors="replace")
-    p = _Extractor()
-    p.feed(html)
-    p.close()
-    return p.result()
+    s = html
+    n = len(s)
+    out: list[str] = []  # <p> text; " " marks the end of each outermost <p>
+    skip = 0  # open boilerplate elements
+    depth = 0  # open <p> elements
+    pos = 0
+    search = _MARKUP.search
+    while pos < n:
+        m = search(s, pos)
+        if m is None:
+            if depth and not skip:
+                out.append(unescape(s[pos:]))
+            break
+        i, end = m.span()
+        if i > pos and depth and not skip:
+            out.append(unescape(s[pos:i]))
+        pos = end
+        name, attrs, close, end_name, end_junk = m.groups()
+        if name is not None:
+            if close is None:
+                if s[pos:pos + 1] in _UNENDED_TAG:  # or "": the tag never ends
+                    pos = _unended(s, i, out, depth and not skip)
+                elif depth and not skip:
+                    out.append(s[i:pos])  # html.parser passes it on unescaped
+                continue
+            tag = name.lower()
+            # "/>" self-closes; so does "/" + ">" unless the "/" ends an
+            # attribute value
+            if close == ">" and (s[pos - 2] != "/" or attrs):
+                if tag in _BOILERPLATE:
+                    skip += 1
+                    raw_end = _RAW_TEXT_END.get(tag)
+                    if raw_end is not None:
+                        m = raw_end.search(s, pos)
+                        if m is None:
+                            break
+                        pos = m.end()
+                        skip -= 1
+                elif tag == "p" and not skip:
+                    depth += 1
+                continue
+            # self-closing: a start tag, then an end tag
+            if tag in _BOILERPLATE:
+                continue
+            if tag == "p" and not skip:
+                depth += 1
+        else:
+            tag = end_name or end_junk
+            if tag is None:
+                if pos == i + 1:  # "<" opening a construct with no end
+                    pos = _unended(s, i, out, depth and not skip)
+                continue
+            tag = tag.lower()
+        if tag in _BOILERPLATE:
+            if skip:
+                skip -= 1
+        elif tag == "p" and depth:
+            depth -= 1
+            if not depth:
+                out.append(" ")
+    return " ".join("".join(out).split()).lower()
+
+
+def _unended(s: str, i: int, out: list[str], keep: bool) -> int:
+    """html.parser's end-of-input rule for a construct at ``i`` that never
+    ends: text up to and including the next ">", else up to the next "<",
+    else the "<" alone. Returns where scanning resumes."""
+    k = s.find(">", i + 1)
+    if k >= 0:
+        k += 1
+    else:
+        k = s.find("<", i + 1)
+        if k < 0:
+            k = i + 1
+    if keep:
+        out.append(unescape(s[i:k]))
+    return k
 
 
 @pandas_udf(StringType())

@@ -7,6 +7,14 @@ with deterministic rule-based equivalents so goldens are byte-stable:
 - sentences: split on ``[.!?]`` followed by whitespace (rule-based, not the
   opaque maxent en-sent.bin binary).
 - tokens: maximal runs of ``[a-z0-9_]`` over the lowercased sentence.
+- doc tokens (the fused flagship path, ``detect_doc_terms``): one
+  ``findall`` over the lowercased page, of a token or a whitespace run
+  after ``[.!?]``, gives every token in order plus one whitespace item at
+  each sentence break, instead of a split, a ``lower()`` and a ``findall``
+  per sentence. Trie keys are ``name.split()`` pieces, which never hold
+  whitespace, so no match can contain a break item and the matches are
+  exactly the per-sentence ones. A non-space marker such as ``"."`` would
+  not be safe: a lexicon name could have it as a token.
 - mentions: token-aligned, longest-match, non-overlapping dictionary scan —
   exactly DictionaryNameFinder's contract — against a token-level trie built
   once on the driver and **broadcast** to executors (SURVEY.md N3). A name
@@ -31,6 +39,7 @@ from .schemas import DOC_TERMS, MENTIONS
 
 _SENT_RE = re.compile(r"(?<=[.!?])\s+")
 _TOKEN_RE = re.compile(r"[a-z0-9_]+")
+_DOC_TOKEN_RE = re.compile(r"[a-z0-9_]+|(?<=[.!?])\s+")
 
 MINLENGTH = 3  # names with len(name) <= MINLENGTH are dropped (ParsePMC.groovy:25,196)
 
@@ -43,6 +52,13 @@ def split_sentences_py(text: str) -> list[str]:
 
 def tokenize_py(sentence: str) -> list[str]:
     return _TOKEN_RE.findall(sentence.lower())
+
+
+def doc_tokens_py(text: str) -> list[str]:
+    """The tokens of every sentence of ``text`` in one scan, with a
+    whitespace item at each sentence break; ``TokenTrie.find`` on it matches
+    what it matches on each ``tokenize_py(sentence)`` (module docstring)."""
+    return _DOC_TOKEN_RE.findall(text.lower())
 
 
 class TokenTrie:
@@ -153,7 +169,7 @@ def detect_doc_terms(
     ancestors: dict[str, tuple[str, ...]] | None = None,
     passthrough_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Fused hot path: html -> extract -> sentence split -> trie NER ->
+    """Fused hot path: html -> extract -> one token scan -> trie NER ->
     per-doc distinct term set, in ONE mapInPandas crossing.
 
     Rationale (measured, local[32]): chaining extract (pandas UDF) and NER
@@ -199,10 +215,8 @@ def detect_doc_terms(
                 if not text:
                     continue
                 seen: set[str] = set()
-                for sent in split_sentences_py(text):
-                    toks = tokenize_py(sent)
-                    for _b, _e, _name, ids in trie.find(toks):
-                        seen.update(ids)
+                for _b, _e, _name, ids in trie.find(doc_tokens_py(text)):
+                    seen.update(ids)
                 if anc:
                     for tid in list(seen):
                         seen.update(anc.get(tid, ()))

@@ -12,6 +12,23 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_MEM_MB = 24 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of the machine's memory, capped at 24g (the old fixed default,
+    which is what a machine without ``meminfo`` still gets). In local mode
+    the driver JVM also runs every task, but the Python workers, the page
+    cache and the OS need the other half: a 24g heap on a 15 GB machine got
+    the JVM killed by the kernel."""
+    try:
+        with open(meminfo) as f:
+            total_kb = next(int(line.split()[1]) for line in f
+                            if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return f"{_MAX_DRIVER_MEM_MB}m"
+    return f"{min(total_kb // 2048, _MAX_DRIVER_MEM_MB)}m"
+
 
 def get_spark(
     app_name: str = "pmcanalysis-spark",
@@ -21,13 +38,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    cores: local parallelism; defaults to $SPARK_GRAFT_CPUS or 32.
+    cores: local parallelism; defaults to $SPARK_GRAFT_CPUS or the CPU count.
     shuffle_partitions: defaults to cores (right-sized for local mode; on a
     real cluster this would be ~2-3x total executor cores, and AQE coalesces
     down from there anyway).
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     if shuffle_partitions is None:
         shuffle_partitions = cores
 
@@ -46,9 +63,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # local mode: one JVM hosts all executor threads — size the heap for
-        # 32 concurrent tasks' shuffle/cache buffers or GC eats the scaling
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # local mode: one JVM hosts all executor threads, so the heap holds
+        # every concurrent task's shuffle/cache buffers; $SPARK_DRIVER_MEM
+        # overrides the machine-sized default
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -365,3 +365,17 @@ def test_cc_contraction_loop_matches_driver_union_find(spark):
             for r in connected_components(e, driver_threshold=0).collect()}
     assert fast == loop
     assert loop[40] == 1 and loop[102] == 100 and loop[207] == 200
+
+
+def test_cc_loop_plan_does_not_grow_with_chain_length(spark):
+    """The iterative path truncates its plan every iteration. A chain needs
+    more label-propagation rounds the longer it is, yet the result's
+    analyzed plan is the same size for an 80-chain as for a 10-chain; an
+    untruncated round multiplies it by ~4."""
+    def plan_chars(k):
+        e = spark.createDataFrame([(i, i + 1) for i in range(1, k)], "src long, dst long")
+        out = connected_components(e, driver_threshold=0)
+        return len(out._jdf.queryExecution().analyzed().toString())
+
+    short, long_ = plan_chars(10), plan_chars(80)
+    assert long_ <= 1.2 * short and short <= 1.2 * long_, (short, long_)

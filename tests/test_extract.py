@@ -29,6 +29,15 @@ def test_extractor_handles_nested_and_unclosed():
     assert extract_text_py(None) == ""
 
 
+def test_malformed_marked_section_is_skipped_not_raised():
+    """html.parser raises AssertionError on these (unknown marked-section
+    keyword; no name token), which failed the whole fused task. Such a
+    section is skipped to the next ">" like a bogus comment; with no ">"
+    left, the rest stays text outside any <p>."""
+    assert extract_text_py(b"<p>a</p><![foo[x]]><p>b</p>") == "a b"
+    assert extract_text_py(b"<p>a</p><![ x") == "a"
+
+
 def test_udf_bytes_match_golden_column(spark):
     pages = build_web_pages(100)
     df = spark.createDataFrame(pages, WEB_PAGES)

@@ -114,3 +114,46 @@ def test_n4_spark_operator(spark):
     assert ("T:1", "red table", 1, 3) in got and ("T:9", "red table", 1, 3) in got
     assert ("T:4", "big room", 6, 8) in got
     assert all(r.sent_idx == 0 for r in rows)
+
+
+# --- one token scan per page (detect_doc_terms) ------------------------------
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+_WORDS = ["aaaa", "bbbb", "cccc", "dddd", "ab_1", "x9", "Aaaa", "BBBB", "İbbbb", "aKaa"]
+_SEPARATORS = [" ", "  ", ". ", "! ", "? ", ".\n", ".\t", ".\x1c", ".\xa0", ".",
+               "?.  ", ",", " - ", "é", "Σ ", "\n"]
+_texts = st.lists(st.tuples(st.sampled_from(_WORDS), st.sampled_from(_SEPARATORS)),
+                  max_size=25).map(lambda ps: "".join(w + s for w, s in ps))
+# names of 1-3 words: most span a sentence break somewhere in the texts
+_lexicons = st.lists(
+    st.tuples(st.lists(st.sampled_from(_WORDS), min_size=1, max_size=3).map(" ".join),
+              st.sampled_from(["T:1", "T:2", "T:3"])),
+    max_size=8)
+
+
+@given(_texts, _lexicons)
+@settings(derandomize=True, deadline=None, max_examples=500)
+def test_one_scan_matches_per_sentence_scan(text, lexicon):
+    """trie.find over doc_tokens_py(text) finds exactly the per-sentence
+    matches of split_sentences_py -> tokenize_py -> trie.find, in order, so
+    the per-doc term set is identical; no match crosses a sentence break."""
+    from pmcanalysis_spark.nlp import doc_tokens_py
+
+    trie = TokenTrie.from_lexicon(lexicon)
+    per_sentence = [(name, ids) for sent in split_sentences_py(text)
+                    for _b, _e, name, ids in trie.find(tokenize_py(sent))]
+    one_scan = [(name, ids) for _b, _e, name, ids in trie.find(doc_tokens_py(text))]
+    assert one_scan == per_sentence
+    assert [t for t in doc_tokens_py(text) if not t.isspace()] == [
+        t for sent in split_sentences_py(text) for t in tokenize_py(sent)]
+
+
+def test_one_scan_break_is_never_matched():
+    from pmcanalysis_spark.nlp import doc_tokens_py
+
+    trie = TokenTrie.from_lexicon([("aaaa bbbb", "T:1"), ("bbbb", "T:2")])
+    toks = doc_tokens_py("x AAAA. bbbb y")
+    assert toks == ["x", "aaaa", " ", "bbbb", "y"]
+    assert [m[2] for m in trie.find(toks)] == ["bbbb"]
