@@ -17,8 +17,8 @@ the text fallback for a construct with no end) written as one regex, and
 output. Attribute values, line/offset bookkeeping and per-callback dispatch
 are never computed. A pinned stdlib parser would move with the interpreter:
 its comment and script handling changed in recent CPython patch releases.
-The differential test keeps the ``html.parser`` subclass this replaced as
-the reference. One deliberate difference: a ``<![`` marked section with an
+``tests/test_extract_differential.py`` keeps that parser's extractor as
+the reference this module must match. One deliberate difference: a ``<![`` marked section with an
 unknown keyword, or none, on which ``html.parser`` raises, is skipped to
 the next ``>`` like a bogus comment, so one malformed page cannot fail a
 whole job. The Spark-side wrapper is an Arrow-batched pandas UDF (no
