@@ -165,25 +165,21 @@ def q_kg_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pmcanalysis_spark.operators.cooccur import (
-        corpus_size_df,
-        pair_counts,
+        doc_term_sets,
         scored_pairs,
-        term_stats,
+        set_pair_counts,
+        set_term_stats,
     )
 
-    # the distinct mentions table feeds FOUR consumers (total, stats, both
-    # pair_counts sides) and the static plan shows no exchange reuse across
-    # them — persist the small distinct set so the scan+explode+join runs
-    # once (same rationale as triples_from_doc_terms' persist; released by
-    # LRU / the caller's clearCache). A/B at sf0.1: 1.34s vs 1.51s.
-    m = _mentions(spark, sf_dir).select("term_id", "doc_id").persist()
-    # corpus size as a broadcast scalar (corpus_size_df) instead of a
-    # separate blocking .count() job — the old form re-ran the whole
-    # mentions subtree once just to fetch the total (r6, guide §5: no
+    # the per-doc term sets feed THREE consumers (total, stats, pairs):
+    # persist them so the scan+explode+join runs once (released by LRU /
+    # the caller's clearCache). Corpus size rides along as a broadcast
+    # scalar instead of a separate blocking .count() job (r6, guide §5: no
     # driver-blocking actions on the query path). Same value, same scores.
-    total = corpus_size_df(m)
-    stats = term_stats(m)
-    pairs = pair_counts(m, a_prefix="OP:", b_prefix="DS:")
+    sets = doc_term_sets(_mentions(spark, sf_dir)).persist()
+    total = sets.agg(F.count("*").alias("t"))
+    stats = set_term_stats(sets)
+    pairs = set_pair_counts(sets, a_prefix="OP:", b_prefix="DS:")
     return scored_pairs(pairs, stats, total, pred="co-occurs-with", round_to=6)
 
 

@@ -8,8 +8,8 @@ as idiomatic Spark DataFrame jobs over Common-Crawl-style web-page tables:
       → extracted(url, text)                 [byte-identical HTML→text, Arrow UDF]
       → sentences(url, sent_idx, sentence)
       → mentions(url, sent_idx, term_id, name, begin, end)   [broadcast Aho-Corasick]
-      → doc_terms(term_id, doc_id)           [distinct, hierarchy-closed]
-      → pair_counts(a_id, b_id, nab)         [self-join on doc, salted agg]
+      → doc_term_sets(doc_id, term_ids)      [one row per doc, hierarchy-closed]
+      → pair_counts(a_id, b_id, nab)         [explode × explode per set, salted agg]
       → triples(subj, pred, obj, tscore, zscore, lmi, npmi, lgl, nab, na, nb)
       → entities(...)                        [connected-components canonicalization]
 

@@ -12,9 +12,10 @@ location, fsync, rename the manifest last); swap ``format("parquet")`` for
 ``format("iceberg")`` and the manifest for the catalog and nothing else
 changes shape.
 
-Lineage rows are collected ON THE EXECUTORS during the write pass itself via
-``mapPartitions``-style instrumentation inside a ``mapInArrow`` no-op wrapper
-— no second scan of the data.
+Lineage rows come from one aggregate over the freshly written snapshot
+(a second scan of the data, one job): one row per partition, collected to
+the driver, which derives the stage's row and partition counts from them
+and writes them next to the data.
 """
 
 from __future__ import annotations
@@ -28,6 +29,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .schemas import LINEAGE
 
 MANIFEST = "_lineage_manifest.json"
 
@@ -115,7 +118,7 @@ def materialize_stage(
     result). If a committed manifest with the same input fingerprint exists,
     SKIP the write and resume from the snapshot (north_rule resume path).
 
-    Lineage is written next to the data as ``<stage>_lineage`` parquet with
+    Lineage is written next to the data as ``<stage>/lineage`` parquet with
     schema (stage, partition_id, row_count, min_key, max_key, wall_ms,
     run_id).
     """
@@ -124,19 +127,16 @@ def materialize_stage(
     manifest_path = os.path.join(path, MANIFEST)
     fp = fingerprint or _fingerprint(df, input_fingerprint_extra)
 
+    resumed = try_resume(spark, base_dir, stage, fp)
+    if resumed is not None:
+        return resumed
     if os.path.exists(manifest_path):
-        with open(manifest_path) as f:
-            m = json.load(f)
-        if m.get("input_fingerprint") == fp and m.get("committed"):
-            out = spark.read.parquet(os.path.join(path, "data"))
-            return out, StageResult(
-                stage, path, m["run_id"], fp, m["row_count"], m["n_partitions"],
-                0, resumed=True,
-            )
         # stale/uncommitted snapshot: discard and rebuild — but never delete
         # a previously COMMITTED snapshot silently (a fingerprint mismatch
         # there usually means changed inputs, which is legitimate, but the
         # operator should see that an old snapshot was replaced)
+        with open(manifest_path) as f:
+            m = json.load(f)
         if m.get("committed"):
             import warnings
 
@@ -155,16 +155,15 @@ def materialize_stage(
         writer = writer.partitionBy(*partition_by)
     writer.parquet(data_path)
     out = spark.read.parquet(data_path)
-    lineage = (
-        partition_lineage(out, key_col)
-        .withColumn("stage", F.lit(stage))
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("wall_ms", F.lit(int((time.perf_counter() - t0) * 1000)))
-    )
-    lineage.write.mode("overwrite").parquet(os.path.join(path, "lineage"))
-    lrows = spark.read.parquet(os.path.join(path, "lineage"))
-    row_count = lrows.agg(F.sum("row_count")).first()[0] or 0
-    n_parts = lrows.count()
+    # one job gathers the per-partition rows; both counts come from them and
+    # the driver writes them back (one row per partition: small)
+    parts = partition_lineage(out, key_col).collect()
+    row_count = sum(r["row_count"] for r in parts)
+    n_parts = len(parts)
+    lineage_wall_ms = int((time.perf_counter() - t0) * 1000)
+    spark.createDataFrame(
+        [(stage, *r, lineage_wall_ms, run_id) for r in parts], LINEAGE
+    ).write.mode("overwrite").parquet(os.path.join(path, "lineage"))
     wall_ms = int((time.perf_counter() - t0) * 1000)
     # manifest rename-last = the commit point (Iceberg snapshot analog)
     tmp = manifest_path + ".tmp"
@@ -174,8 +173,8 @@ def materialize_stage(
                 "stage": stage,
                 "run_id": run_id,
                 "input_fingerprint": fp,
-                "row_count": int(row_count),
-                "n_partitions": int(n_parts),
+                "row_count": row_count,
+                "n_partitions": n_parts,
                 "wall_ms": wall_ms,
                 "committed": True,
             },
@@ -185,7 +184,7 @@ def materialize_stage(
         os.fsync(f.fileno())
     os.replace(tmp, manifest_path)
     return out, StageResult(
-        stage, path, run_id, fp, int(row_count), int(n_parts), wall_ms, resumed=False
+        stage, path, run_id, fp, row_count, n_parts, wall_ms, resumed=False
     )
 
 

@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .schemas import DOC_TERMS, MENTIONS
+from .schemas import DOC_TERM_SETS, MENTIONS
 
 _SENT_RE = re.compile(r"(?<=[.!?])\s+")
 _TOKEN_RE = re.compile(r"[a-z0-9_]+")
@@ -161,7 +161,7 @@ def detect_mentions(
     return extracted.select("url", "text").mapInPandas(scan, schema=MENTIONS)
 
 
-def detect_doc_terms(
+def detect_doc_term_sets(
     web_pages: DataFrame,
     lexicon_entries: list[tuple[str, str]],
     lang: str | None = "en",
@@ -170,7 +170,7 @@ def detect_doc_terms(
     passthrough_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Fused hot path: html -> extract -> one token scan -> trie NER ->
-    per-doc distinct term set, in ONE mapInPandas crossing.
+    per-doc term set, in ONE mapInPandas crossing.
 
     Rationale (measured, local[32]): chaining extract (pandas UDF) and NER
     (mapInPandas) gives every task TWO python workers — 2x processes on the
@@ -178,8 +178,10 @@ def detect_doc_terms(
     the *document-level* flagship (FindDiseasePhenotypes2 semantics: a doc
     counts once per term regardless of mention count), fusing halves the
     python-process pressure and shrinks the UDF output from O(mentions) to
-    O(distinct doc-terms) before it ever hits the JVM — the distinct's
-    map-side combine happens inside the UDF for free.
+    one row per matched page before it ever hits the JVM — the per-doc
+    dedupe happens inside the UDF for free, and the set is exactly the unit
+    co-occurrence counts over (``operators.cooccur``), so no regrouping by
+    doc is needed downstream.
 
     ``ancestors`` (term_id -> transitive ancestor ids, the small ontology
     closure) pushes the subclass-closure union (SURVEY.md J3/U2) into the
@@ -188,11 +190,12 @@ def detect_doc_terms(
     extra shuffles (the DataFrame-side closure join would re-run this UDF or
     force a cache of its output).
 
-    Output: (term_id, doc_id) — already distinct per doc. With
+    Output: (doc_id, term_ids array<string>, *passthrough_cols) — one row
+    per page that matched any term, ids sorted and distinct. With
     ``passthrough_cols`` (e.g. ("warc_ts",)), each input row's values ride
-    along on every emitted (term, doc) row — this is what lets a streaming
-    caller keep event time without a stream-stream join (the join needs
-    unbounded state on both sides; the passthrough needs none).
+    along on its output row — this is what lets a streaming caller keep
+    event time without a stream-stream join (the join needs unbounded state
+    on both sides; the passthrough needs none).
     """
     from pyspark.sql.types import StructType
 
@@ -207,9 +210,7 @@ def detect_doc_terms(
         trie = btrie.value
         anc = banc.value
         for pdf in batches:
-            tids, docs = [], []
-            extra_vals: list[list] = [[] for _ in extra]
-            extra_in = [pdf[c] for c in extra]
+            docs, sets, rows = [], [], []
             for i, (url, html) in enumerate(zip(pdf["url"], pdf["html"])):
                 text = extract_text_py(html)
                 if not text:
@@ -217,32 +218,49 @@ def detect_doc_terms(
                 seen: set[str] = set()
                 for _b, _e, _name, ids in trie.find(doc_tokens_py(text)):
                     seen.update(ids)
+                if not seen:
+                    continue
                 if anc:
                     for tid in list(seen):
                         seen.update(anc.get(tid, ()))
-                for tid in seen:
-                    tids.append(tid)
-                    docs.append(url)
-                    for j, col in enumerate(extra_in):
-                        extra_vals[j].append(col.iloc[i])
+                docs.append(url)
+                sets.append(sorted(seen))
+                rows.append(i)
             out = {
-                "term_id": pd.Series(tids, dtype="object"),
                 "doc_id": pd.Series(docs, dtype="object"),
+                "term_ids": pd.Series(sets, dtype="object"),
             }
-            for j, c in enumerate(extra):
-                out[c] = pd.Series(extra_vals[j])
+            for c in extra:
+                out[c] = pdf[c].iloc[rows].reset_index(drop=True)
             yield pd.DataFrame(out)
 
     df = web_pages
     if lang is not None:
         df = df.filter(F.col("lang") == lang)
-    schema = DOC_TERMS
-    if extra:
-        schema = StructType(
-            list(DOC_TERMS.fields)
-            + [web_pages.schema[c] for c in extra]
-        )
+    schema = StructType(
+        list(DOC_TERM_SETS.fields) + [web_pages.schema[c] for c in extra]
+    )
     return df.select("url", "html", *extra).mapInPandas(scan, schema=schema)
+
+
+def detect_doc_terms(
+    web_pages: DataFrame,
+    lexicon_entries: list[tuple[str, str]],
+    lang: str | None = "en",
+    min_name_len: int = MINLENGTH,
+    ancestors: dict[str, tuple[str, ...]] | None = None,
+    passthrough_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """Long form of ``detect_doc_term_sets``: (term_id, doc_id,
+    *passthrough_cols), one row per distinct term of each page — the same
+    scan, exploded in the JVM. For consumers that keep doc-term rows
+    (streaming accumulators, serving tables)."""
+    sets = detect_doc_term_sets(
+        web_pages, lexicon_entries, lang, min_name_len, ancestors, passthrough_cols
+    )
+    return sets.select(
+        F.explode("term_ids").alias("term_id"), "doc_id", *passthrough_cols
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -2,38 +2,43 @@
 
 The reference builds per-class OpenBitSets over dense doc indices and takes
 pairwise ``intersectionCount`` in a nested loop
-(/root/reference/FindDiseasePhenotypes2.groovy:196-231). The Spark-native
-equivalent is a self-equi-join of the distinct ``doc_terms`` table on
-``doc_id`` followed by a two-level hash aggregate — Catalyst's partial
-(map-side) aggregation plays the role of the bitset kernel, and only nonzero
-pairs ever materialize (the sparse-matrix property comes free).
+(/root/reference/FindDiseasePhenotypes2.groovy:196-231). Here the unit is the
+per-doc term set ``(doc_id, term_ids)``: every pair of a doc's terms is one
+co-occurrence, so a pair's count is the number of sets holding both terms.
+Each count has one implementation, over sets:
+
+- corpus size = number of sets (A3);
+- doc frequency = ``explode`` + ``count(*)`` (A1);
+- pair counts = ``explode`` of the a-family members × ``explode`` of the
+  b-family members + ``count(*)`` (A2).
+
+No join on doc_id is needed — the set already is the doc's row — and only
+nonzero pairs ever materialize (the sparse-matrix property comes free).
+The long-form functions take ``(term_id, doc_id)`` rows and group them into
+sets first (``doc_term_sets``), which also dedupes them.
 
 Scale notes (10^12-doc design):
-- ``doc_terms`` is distinct-per-(term, doc) so the join fan-out per doc is
-  bounded by the number of *distinct* terms in the doc, not mention count.
-- Family prefix filters are applied *before* the join (predicate pushdown is
-  also automatic, but explicit filters keep the plan obvious) — J5.
+- The pair fan-out per doc is bounded by the number of *distinct* terms in
+  the doc, not mention count.
+- Family prefix filters are applied to each set before the explode — J5.
 - Head terms ("disease"-like labels that hit a large share of docs) make the
-  (a_id, b_id) aggregation skewed. The shuffle key of the join itself is
-  ``doc_id`` (well distributed); for the pair aggregation we rely on
-  partial aggregation + AQE skew handling, and expose an explicit
-  ``salt_buckets`` two-phase aggregate for the worst head-pair skew.
+  (a_id, b_id) aggregation skewed. We rely on partial aggregation + AQE and
+  expose an explicit ``salt_buckets`` two-phase aggregate (salted on doc_id)
+  for the worst head-pair skew.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def doc_terms(mentions: DataFrame) -> DataFrame:
-    """mentions -> distinct (term_id, doc_id).
-
-    Set-insert semantics of the reference (``id2pmid[k].add(pmid)``,
-    FindDiseasePhenotypes2.groovy:163-169): a doc counts once per term no
-    matter how many mentions.
-    """
-    return mentions.select("term_id", F.col("url").alias("doc_id")).distinct()
+def doc_term_sets(dt: DataFrame) -> DataFrame:
+    """doc_terms(term_id, doc_id) -> (doc_id, term_ids): one row per doc,
+    its distinct terms as an array. Set-insert semantics of the reference
+    (``id2pmid[k].add(pmid)``, FindDiseasePhenotypes2.groovy:163-169): a doc
+    counts once per term no matter how many rows name the pair."""
+    return dt.groupBy("doc_id").agg(F.collect_set("term_id").alias("term_ids"))
 
 
 def close_over_hierarchy(
@@ -58,21 +63,73 @@ def close_over_hierarchy(
     return out.distinct() if distinct else out
 
 
+def set_term_stats(sets: DataFrame) -> DataFrame:
+    """Per-term doc frequency over term sets: na = |docs(term)| (A1)."""
+    return (
+        sets.select(F.explode("term_ids").alias("term_id"))
+        .groupBy("term_id")
+        .agg(F.count("*").alias("n"))
+    )
+
+
 def term_stats(dt: DataFrame) -> DataFrame:
-    """Per-term doc frequency: na = |docs(term)| (A1)."""
-    return dt.groupBy("term_id").agg(F.countDistinct("doc_id").alias("n"))
-
-
-def corpus_size(dt: DataFrame) -> int:
-    """|∪ docs(term)| — distinct docs mentioning any term (A3). Exact, to
-    match the reference (approx_count_distinct only for monitoring)."""
-    return dt.select("doc_id").distinct().count()
+    """``set_term_stats`` over doc_terms(term_id, doc_id) rows."""
+    return set_term_stats(doc_term_sets(dt))
 
 
 def corpus_size_df(dt: DataFrame) -> DataFrame:
-    """corpus_size as a 1-row DataFrame (column ``t``) for use as a
-    broadcast scalar inside the scoring job — saves one blocking job."""
-    return dt.agg(F.countDistinct("doc_id").alias("t"))
+    """Distinct docs in doc_terms(term_id, doc_id) (A3) as a 1-row
+    DataFrame (column ``t``), for use as a broadcast scalar inside the
+    scoring job — saves one blocking job."""
+    return doc_term_sets(dt).agg(F.count("*").alias("t"))
+
+
+def _has_prefix(col: Column, prefixes: "str | tuple[str, ...]") -> Column:
+    if isinstance(prefixes, str):
+        prefixes = (prefixes,)
+    cond = col.startswith(prefixes[0])
+    for p in prefixes[1:]:
+        cond = cond | col.startswith(p)
+    return cond
+
+
+def set_pair_counts(
+    sets: DataFrame,
+    a_prefix: str | None = None,
+    b_prefix: "str | tuple[str, ...] | None" = None,
+    salt_buckets: int = 0,
+) -> DataFrame:
+    """Term sets -> (a_id, b_id, nab) with nab > 0 only (J4/A2/P5).
+
+    ``a_prefix``/``b_prefix`` restrict the two sides (J5: e.g. "DOID:" ×
+    "HP:"): each set keeps its a-family and b-family members, and the two
+    are exploded against each other. ``b_prefix`` may be a tuple of
+    prefixes — one pass covers every b family. With both prefixes None the
+    pairing is symmetric: canonical orientation ``a_id < b_id``, no
+    self-pairs.
+
+    ``salt_buckets > 0`` enables an explicit two-phase aggregate for skewed
+    head pairs: groupBy(a, b, salt) partial -> groupBy(a, b) final, the salt
+    a hash of doc_id.
+    """
+
+    def members(prefix):
+        if not prefix:
+            return F.col("term_ids")
+        return F.filter("term_ids", lambda t: _has_prefix(t, prefix))
+
+    pairs = (
+        sets.select("doc_id", members(a_prefix).alias("_a"), members(b_prefix).alias("_b"))
+        .select("doc_id", F.explode("_a").alias("a_id"), "_b")
+        .select("doc_id", "a_id", F.explode("_b").alias("b_id"))
+    )
+    if a_prefix is None and b_prefix is None:
+        pairs = pairs.filter(F.col("a_id") < F.col("b_id"))
+    if salt_buckets > 0:
+        salted = pairs.withColumn("_salt", F.pmod(F.hash("doc_id"), F.lit(salt_buckets)))
+        partial = salted.groupBy("a_id", "b_id", "_salt").agg(F.count("*").alias("_c"))
+        return partial.groupBy("a_id", "b_id").agg(F.sum("_c").alias("nab"))
+    return pairs.groupBy("a_id", "b_id").agg(F.count("*").alias("nab"))
 
 
 def pair_counts(
@@ -81,66 +138,8 @@ def pair_counts(
     b_prefix: "str | tuple[str, ...] | None" = None,
     salt_buckets: int = 0,
 ) -> DataFrame:
-    """Self-join on doc_id -> (a_id, b_id, nab) with nab > 0 only (J4/A2/P5).
-
-    ``a_prefix``/``b_prefix`` restrict the two sides (J5: e.g. "DOID:" ×
-    "HP:") so the theta-pairing of the reference becomes a plain equi-join.
-    ``b_prefix`` may be a tuple of prefixes — ONE join with an OR filter
-    covers every b family (two separate joins would shuffle dt twice).
-
-    ``salt_buckets > 0`` enables an explicit two-phase aggregate for skewed
-    head pairs: groupBy(a, b, salt) partial -> groupBy(a, b) final. The salt
-    is derived from doc_id so it costs no extra shuffle of the join itself.
-    """
-
-    def _prefix_filter(col, prefixes):
-        if isinstance(prefixes, str):
-            prefixes = (prefixes,)
-        cond = col.startswith(prefixes[0])
-        for p in prefixes[1:]:
-            cond = cond | col.startswith(p)
-        return cond
-
-    a = dt
-    b = dt
-    if a_prefix:
-        a = a.filter(_prefix_filter(F.col("term_id"), a_prefix))
-    if b_prefix:
-        b = b.filter(_prefix_filter(F.col("term_id"), b_prefix))
-    a = a.select(F.col("term_id").alias("a_id"), "doc_id")
-    b = b.select(F.col("term_id").alias("b_id"), "doc_id")
-    joined = a.join(b, "doc_id")
-    if a_prefix is None and b_prefix is None:
-        # symmetric self-pairing: keep canonical orientation, drop self-pairs
-        joined = joined.filter(F.col("a_id") < F.col("b_id"))
-    if salt_buckets > 0:
-        salted = joined.withColumn("_salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)))
-        partial = salted.groupBy("a_id", "b_id", "_salt").agg(F.count("*").alias("_c"))
-        return partial.groupBy("a_id", "b_id").agg(F.sum("_c").alias("nab"))
-    return joined.groupBy("a_id", "b_id").agg(F.count("*").alias("nab"))
-
-
-def materialize_bucketed_doc_terms(
-    dt: DataFrame, table: str = "doc_terms_bucketed", buckets: int = 64
-) -> DataFrame:
-    """Write doc_terms bucketed+sorted by doc_id and return the table.
-
-    The J4 self-join on a bucketed table is exchange-free: both sides are
-    already hash-partitioned on the join key at rest, so Catalyst plans a
-    SortMergeJoin with ZERO shuffles (the 100 TB co-location play — the
-    shuffle cost moves into the one-time write and is amortized over every
-    downstream pair family / re-run). Bucket count should match the target
-    parallelism granularity (64 here; thousands on a real cluster).
-    """
-    spark = dt.sparkSession
-    (
-        dt.write.mode("overwrite")
-        .bucketBy(buckets, "doc_id")
-        .sortBy("doc_id")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    return spark.table(table)
+    """``set_pair_counts`` over doc_terms(term_id, doc_id) rows."""
+    return set_pair_counts(doc_term_sets(dt), a_prefix, b_prefix, salt_buckets)
 
 
 def scored_pairs(

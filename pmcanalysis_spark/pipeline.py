@@ -1,11 +1,17 @@
 """End-to-end KG construction: web_pages -> triples (SURVEY.md §3.1, §7.2).
 
-Stage boundaries (each an exchange in the physical plan):
-  scan(web_pages) -> extract UDF -> NER UDF      [narrow, Arrow-batched]
-  -> distinct doc_terms                          [shuffle on (term, doc)]
-  -> hierarchy closure                           [broadcast join, no shuffle]
-  -> self-join on doc_id + pair agg              [shuffle doc_id, then (a,b)]
+Stages:
+  scan(web_pages) -> fused extract + NER + hierarchy closure
+                     -> one (doc_id, term_ids) set per matched page
+                                                 [narrow, one Arrow-batched UDF]
+  -> persist the sets; corpus size = their count [one job]
+  -> doc frequency: explode + count(*)           [shuffle on term_id]
+  -> pairs: explode a-family × explode b-family
+     + count(*)                                  [shuffle on (a, b)]
   -> broadcast na/nb + score exprs               [narrow]
+
+A materialized doc_terms(term_id, doc_id) table enters the same back half
+after one groupBy(doc_id) into sets (``triples_from_doc_terms``).
 
 Equivalent of /root/reference/FindDiseasePhenotypes2.groovy end-to-end, with
 the documented improvements: no 32768-hit truncation (W5), exact doc sets,
@@ -14,20 +20,18 @@ NaN-filter fixed (P6), and all-candidate entity links preserved (J1).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .extract import extract_text_udf
-from .nlp import MINLENGTH, detect_mentions
+from .nlp import MINLENGTH, detect_doc_term_sets, detect_mentions
 from .operators.cooccur import (
-    close_over_hierarchy,
-    corpus_size_df,
-    doc_terms,
-    pair_counts,
+    doc_term_sets,
     scored_pairs,
-    term_stats,
+    set_pair_counts,
+    set_term_stats,
 )
 
 
@@ -38,8 +42,6 @@ class PipelineConfig:
     b_prefixes: tuple[str, ...] = ("HP:", "MP:")
     pred: str = "has-phenotype"
     min_name_len: int = MINLENGTH
-    salt_buckets: int = 0
-    extra: dict = field(default_factory=dict)
 
 
 def ingest(web_pages: DataFrame, range_partitions: int | None = None) -> DataFrame:
@@ -74,49 +76,38 @@ def build_mentions(
     return detect_mentions(extracted, lexicon_entries, cfg.min_name_len)
 
 
+def ancestor_map(hierarchy: DataFrame | None) -> dict[str, tuple[str, ...]] | None:
+    """hierarchy(term_id, ancestor_id) closure -> {term: sorted ancestors},
+    collected once on the driver for the scan's broadcast ancestor map."""
+    if hierarchy is None:
+        return None
+    anc: dict[str, set[str]] = {}
+    for r in hierarchy.select("term_id", "ancestor_id").collect():
+        anc.setdefault(r["term_id"], set()).add(r["ancestor_id"])
+    return {k: tuple(sorted(v)) for k, v in anc.items()}
+
+
 def build_triples(
     web_pages: DataFrame,
     lexicon_entries: list[tuple[str, str]],
     hierarchy: DataFrame | None = None,
     cfg: PipelineConfig | None = None,
-    sentence_grain: bool = False,
 ) -> DataFrame:
     """The flagship query. Returns triples(subj, pred, obj, 5 scores, nab, na, nb).
 
-    ``sentence_grain=False`` (default) takes the fused single-UDF hot path
-    (detect_doc_terms) — document-level semantics identical to the two-stage
-    extract->mentions->distinct path, half the python-process pressure.
-    Set True to route through the full mention table (provenance spans).
+    One fused scan (``detect_doc_term_sets``) emits each matched page's
+    term set, with the hierarchy closure folded in as a per-doc ancestor
+    expansion; the sets go straight to the back half.
     """
-    from .nlp import detect_doc_terms
-
     cfg = cfg or PipelineConfig()
-    if sentence_grain:
-        mentions = build_mentions(web_pages, lexicon_entries, cfg)
-        dt = doc_terms(mentions)
-        if hierarchy is not None:
-            # persist before the closure union: both branches reference dt
-            # and the NER scan must not run twice
-            dt = close_over_hierarchy(dt.persist(), hierarchy)
-    else:
-        # hierarchy closure folds into the scan as a per-doc ancestor
-        # expansion (the closure table is small: collect once, broadcast)
-        anc: dict[str, tuple[str, ...]] | None = None
-        if hierarchy is not None:
-            anc_map: dict[str, set[str]] = {}
-            for r in hierarchy.select("term_id", "ancestor_id").collect():
-                anc_map.setdefault(r["term_id"], set()).add(r["ancestor_id"])
-            anc = {k: tuple(sorted(v)) for k, v in anc_map.items()}
-        # already distinct: the UDF dedupes per doc and urls are unique in
-        # the input (input_hint key) — no global distinct shuffle needed
-        dt = detect_doc_terms(
-            web_pages,
-            lexicon_entries,
-            lang=cfg.lang,
-            min_name_len=cfg.min_name_len,
-            ancestors=anc,
-        )
-    return triples_from_doc_terms(dt, cfg=cfg, assume_distinct=True)
+    sets = detect_doc_term_sets(
+        web_pages,
+        lexicon_entries,
+        lang=cfg.lang,
+        min_name_len=cfg.min_name_len,
+        ancestors=ancestor_map(hierarchy),
+    )
+    return triples_from_term_sets(sets, cfg)
 
 
 def triples_from_doc_terms(
@@ -127,28 +118,24 @@ def triples_from_doc_terms(
     """doc_terms(term_id, doc_id) -> scored triples: the back half of the
     flagship, exposed so callers holding a MATERIALIZED doc_terms table
     (e.g. the incremental streaming accumulator) can re-score without
-    re-running NER. ``assume_distinct=True`` skips the dedup shuffle when
-    the input is already per-doc distinct (the fused UDF's contract).
+    re-running NER. Duplicate rows (re-crawls accumulated across appends)
+    are harmless: grouping into sets dedupes them. ``assume_distinct`` has
+    no effect and is kept only for callers that pass it.
     """
+    return triples_from_term_sets(doc_term_sets(dt), cfg)
+
+
+def triples_from_term_sets(
+    sets: DataFrame, cfg: PipelineConfig | None = None
+) -> DataFrame:
+    """Term sets (doc_id, term_ids) -> scored triples. The sets feed every
+    count (corpus size, doc frequency, pairs), so they are persisted and
+    materialized once; the count that materializes them is the corpus size.
+    The caller materializes the result (write/count)."""
     cfg = cfg or PipelineConfig()
-    if not assume_distinct:
-        # accumulated tables may carry re-crawl duplicates across appends
-        dt = dt.select("term_id", "doc_id").distinct()
-    # 64-bit surrogate doc keys: string urls off the shuffle path (collision
-    # probability ~n^2/2^65; at true 10^12-doc scale swap for the raw url or
-    # a 128-bit key — flagged in LINEAGE docs)
-    dt = dt.select("term_id", F.xxhash64("doc_id").alias("doc_id"))
-    # one NER pass feeds every downstream consumer (stats, both pair
-    # families, corpus size): cache the small distinct set, materialize once
-    dt = dt.persist()
-    dt.count()
-    total_df = corpus_size_df(dt)
-    stats = term_stats(dt)
-    # all b families in ONE self-join (OR of prefixes) — one shuffle of dt,
-    # not one per family; corpus size rides along as a broadcast scalar so
-    # the whole score stage is ONE job; caller materializes (write/count)
-    pairs = pair_counts(
-        dt, a_prefix=cfg.a_prefix, b_prefix=cfg.b_prefixes,
-        salt_buckets=cfg.salt_buckets,
-    )
-    return scored_pairs(pairs, stats, total_df, pred=cfg.pred)
+    sets = sets.persist()
+    total = sets.count()
+    stats = set_term_stats(sets)
+    # all b families in ONE pass over the sets (OR of prefixes)
+    pairs = set_pair_counts(sets, a_prefix=cfg.a_prefix, b_prefix=cfg.b_prefixes)
+    return scored_pairs(pairs, stats, total, pred=cfg.pred)

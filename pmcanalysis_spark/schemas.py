@@ -70,10 +70,10 @@ HIERARCHY = StructType(
     ]
 )
 
-DOC_TERMS = StructType(
+DOC_TERM_SETS = StructType(
     [
-        StructField("term_id", StringType(), False),
         StructField("doc_id", StringType(), False),
+        StructField("term_ids", ArrayType(StringType(), False), False),
     ]
 )
 

@@ -21,17 +21,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-from ..pipeline import PipelineConfig, triples_from_doc_terms
+from ..pipeline import PipelineConfig, ancestor_map, triples_from_doc_terms
 from .ingest import read_web_pages_stream
-
-
-def _ancestor_map(hierarchy) -> dict[str, tuple[str, ...]] | None:
-    if hierarchy is None:
-        return None
-    anc: dict[str, set[str]] = {}
-    for r in hierarchy.select("term_id", "ancestor_id").collect():
-        anc.setdefault(r["term_id"], set()).add(r["ancestor_id"])
-    return {k: tuple(sorted(v)) for k, v in anc.items()}
 
 
 def _snapshot_fingerprint(spark: SparkSession, path: str) -> str:
@@ -70,7 +61,7 @@ def run_incremental_kg(
         lexicon_entries,
         lang=cfg.lang,
         min_name_len=cfg.min_name_len,
-        ancestors=_ancestor_map(hierarchy),
+        ancestors=ancestor_map(hierarchy),
     )
     q = (
         dt_stream.writeStream.format("parquet")
@@ -84,7 +75,7 @@ def run_incremental_kg(
 
     acc = spark.read.parquet(dt_path)
     fp = _snapshot_fingerprint(spark, dt_path)
-    triples = triples_from_doc_terms(acc, cfg=cfg, assume_distinct=False)
+    triples = triples_from_doc_terms(acc, cfg=cfg)
     return materialize_stage(
         triples, "triples", work_dir, key_col="subj", fingerprint=fp
     )

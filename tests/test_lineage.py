@@ -20,6 +20,7 @@ def test_materialize_writes_lineage_and_resumes(spark, tmp_path):
     lin = read_lineage(spark, base, "stage_a")
     rows = lin.collect()
     assert sum(r.row_count for r in rows) == 1000
+    assert res.n_partitions == len(rows)
     assert {r.stage for r in rows} == {"stage_a"}
     assert all(r.run_id == res.run_id for r in rows)
     # min/max key per partition recorded

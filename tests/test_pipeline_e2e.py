@@ -45,23 +45,6 @@ def test_mentions_match_oracle(spark, corpus, lexicon):
     assert got == expected
 
 
-def test_sentence_grain_routing_matches_fused_path(spark, corpus, lexicon):
-    """Doc-level semantics are identical whichever scan path runs: the fused
-    single-UDF hot path and the mention-table (sentence_grain=True) route
-    must emit the same triples."""
-    df = spark.createDataFrame(corpus, WEB_PAGES)
-    entries = [(e.name, e.term_id) for e in lexicon]
-    fused = {
-        (r.subj, r.obj, r.nab, r.na, r.nb)
-        for r in build_triples(df, entries).collect()
-    }
-    via_mentions = {
-        (r.subj, r.obj, r.nab, r.na, r.nb)
-        for r in build_triples(df, entries, sentence_grain=True).collect()
-    }
-    assert fused == via_mentions and fused
-
-
 @pytest.mark.parametrize("use_hierarchy", [False, True])
 def test_triples_match_oracle(spark, corpus, lexicon, use_hierarchy):
     _, closure = build_hierarchy_terms()

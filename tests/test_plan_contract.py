@@ -32,6 +32,22 @@ def test_flagship_single_python_crossing(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
+def test_flagship_plan_has_no_doc_id_join(spark):
+    """Co-occurrence is counted over per-doc term sets: the executed plan
+    of the flagship joins only the broadcast dims (na/nb), never doc_id."""
+    import re
+
+    pages = build_web_pages(50)
+    lex = [(e.name, e.term_id) for e in build_lexicon()]
+    df = spark.createDataFrame(pages, WEB_PAGES)
+    t = build_triples(df, lex)
+    t.collect()
+    plan = _plan(t)
+    joins = re.findall(r"\w*Join \[[^\]]*\]", plan)
+    assert joins, plan
+    assert not [j for j in joins if "doc_id#" in j], joins
+
+
 def test_dim_joins_are_broadcast_not_shuffled(spark):
     pages = build_web_pages(50)
     lex = [(e.name, e.term_id) for e in build_lexicon()]
@@ -95,6 +111,12 @@ def test_multi_prefix_single_join_equals_union(spark):
         for r in pair_counts(dt, "DOID:", b).collect():
             union[(r.a_id, r.b_id)] = r.nab
     assert single == union
+    # no prefixes: every unordered pair of distinct terms, once, a_id < b_id
+    symmetric = {(r.a_id, r.b_id): r.nab for r in pair_counts(dt).collect()}
+    assert symmetric == {
+        ("DOID:1", "HP:1"): 1, ("DOID:1", "MP:1"): 1, ("HP:1", "MP:1"): 1,
+        ("DOID:1", "HP:2"): 1,
+    }
 
 
 def test_neardup_scalable_never_cartesian(spark):
