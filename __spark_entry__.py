@@ -539,7 +539,7 @@ def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     # bounded query set (vec_id < 200): keeps the oracle compare O(q*n)
-    out = cosine_topk(emb, queries=emb.filter(F.col("vec_id") < 200), k=3, impl="numpy")
+    out = cosine_topk(emb, queries=emb.filter(F.col("vec_id") < 200), k=3)
     return out.select("query_id", "item_id", F.round("cosine", 6).alias("cosine"), "rank")
 
 
@@ -771,19 +771,19 @@ def q_sim_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in emb.filter(F.col("vec_id") < 8).orderBy("vec_id").collect()
     ]
-    cents = train_centroids(emb, init, n_iter=2, impl="numpy")
+    cents = train_centroids(emb, init, n_iter=2)
     out = ivf_topk(emb, cents, k=3)
     return out.select("query_id", "item_id", F.round("cosine", 6).alias("cosine"), "rank")
 
 
 def q_sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH ANN (the bucket-join scale path). The md5-derived
-    planes are regenerated bit-for-bit by the oracle (hashlib vs Spark
-    md5/conv is itself part of the cross-check)."""
+    planes are regenerated bit-for-bit by the oracle (``_lsh_bucket_sql``,
+    DuckDB's list_dot_product over the same hashlib constants)."""
     from pmcanalysis_spark.operators.similarity import lsh_bucketed_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    out = lsh_bucketed_topk(emb, dim=64, num_planes=6, k=3, impl="numpy")
+    out = lsh_bucketed_topk(emb, dim=64, num_planes=6, k=3)
     return out.select(
         "query_id", "item_id", F.round("cosine", 6).alias("cosine"), "rank"
     )
@@ -1241,10 +1241,11 @@ def _lsh_bucket_sql(num_planes: int = 6, dim: int = 64, plane_offset: int = 0) -
     """DuckDB expression for the hyperplane-LSH bucket of column ``vec``.
 
     Plane coefficients are regenerated here with hashlib md5 — the same
-    int(hex[:8],16)/2^32 - 0.5 mapping similarity._plane_component computes
-    with F.md5/F.conv, so Spark's JVM hash path is cross-checked against
-    CPython's. repr() literals round-trip doubles exactly; list_dot_product
-    sums left-to-right like the Column fold, so the sign bit agrees."""
+    int(hex[:8],16)/2^32 - 0.5 mapping similarity.plane_component_py
+    computes for the numpy kernel — and repr() literals round-trip doubles
+    exactly, so both engines use identical planes. The sign bit can only
+    differ for a dot product within rounding of 0, since the kernel's BLAS
+    sum and list_dot_product's fold add in different orders."""
     import hashlib
 
     parts = []
@@ -2048,7 +2049,7 @@ def q_sim_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in emb.filter(F.col("vec_id") < 16).orderBy("vec_id").collect()
     ]
     init = pq_codebooks_from_vectors(seeds, m=8)
-    cbs = train_pq_codebooks(emb, init, n_iter=2, impl="numpy")
+    cbs = train_pq_codebooks(emb, init, n_iter=2)
     queries = [
         (int(r.vec_id), [float(x) for x in r.embedding])
         for r in emb.filter(F.col("vec_id") < 3).collect()

@@ -198,7 +198,9 @@ def pair_scores(
     coauthors, which is exactly the reference's strongest attach signal
     (coauthorscore > 0). Records with no coauthors degrade to singletons.
     A block that is itself over ``max_group_size`` (a hub coauthor) is cut,
-    never partially exploded — surface those via ``mega_key_stats`` lineage.
+    never partially exploded — surface those via ``mega_key_stats`` lineage;
+    a pair that shares such a hot block is still scored through any other
+    band it shares.
     """
     wcount = F.count("*").over(Window.partitionBy("author_key"))
     sized = records.withColumn("_gs", wcount)
@@ -228,17 +230,32 @@ def pair_scores(
     mega = sized.filter(F.col("_gs") > max_group_size).drop("_gs")
     pid = F.xxhash64("coauthors", "mesh", "title_tokens", "affiliation_tokens")
     recs = mega.withColumn("_pid", pid)
-    blocked = recs.withColumn(
-        "_bands", _block_expr(n_blocking_bands, blocking_col)
-    ).select(
-        "author_key", "doc_id", "_pid", "_bands",
-        F.posexplode("_bands").alias("_bi", "_block"),
+    banded = recs.withColumn("_bands", _block_expr(n_blocking_bands, blocking_col))
+    # hot blocks (over the cap) per key: at most |mega| * bands / cap of
+    # them, so the set is broadcast. A record's band vector keeps only its
+    # LIVE blocks (hot ones become NULL): the cap cuts those rows here, and
+    # the first-shared-band filter below then skips a band whose block was
+    # cut, so a pair is kept in its lowest shared live band.
+    hot = (
+        banded.select("author_key", F.explode("_bands").alias("_block"))
+        .groupBy("author_key", "_block")
+        .count()
+        .filter(F.col("count") > max_group_size)
+        .groupBy("author_key")
+        .agg(F.collect_set("_block").alias("_hot"))
     )
-    bcount = F.count("*").over(Window.partitionBy("author_key", "_block"))
+    live = F.transform(
+        "_bands",
+        lambda blk: F.when(F.array_contains("_hot", blk), F.lit(None)).otherwise(blk),
+    )
     blocked = (
-        blocked.withColumn("_bs", bcount)
-        .filter(F.col("_bs") <= max_group_size)
-        .drop("_bs")
+        banded.join(F.broadcast(hot), "author_key", "left")
+        .select("author_key", "doc_id", "_pid", live.alias("_bands"))
+        .select(
+            "author_key", "doc_id", "_pid", "_bands",
+            F.posexplode("_bands").alias("_bi", "_block"),
+        )
+        .filter(F.col("_block").isNotNull())
     )
     # explicit width: the banded table is only ~bands x |mega| SMALL rows,
     # so AQE's size-based coalescing would happily run the whole n²/block
@@ -266,10 +283,12 @@ def pair_scores(
     # count of indexed compares — higher-order exists/zip_with/slice runs
     # INTERPRETED per row, which at candidate-stream volume costs more
     # than the shuffle it replaces (same lesson as hamming_pairs, r6)
+    # (a NULL band is a cut hot block: it never counts as shared)
     earlier_band_matched = F.lit(False)
     for _j in range(n_blocking_bands - 1):
         earlier_band_matched = earlier_band_matched | (
-            (F.col("_bi") > _j) & (F.col("_ba")[_j] == F.col("_bb")[_j])
+            (F.col("_bi") > _j)
+            & F.coalesce(F.col("_ba")[_j] == F.col("_bb")[_j], F.lit(False))
         )
     cand = (
         a.join(b, ["author_key", "_bi", "_block"])
@@ -374,6 +393,37 @@ def similarity_edges(
     return scored.filter(similar).select("author_key", "src", "dst", "simm")
 
 
+def _label_with_union_find(edge_rows, vertices: DataFrame) -> DataFrame:
+    """Driver-side union-find over collected (src, dst) rows -> vertices
+    labeled (id, component) with the min id of their component, broadcast
+    back; a vertex on no edge labels itself."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for r in edge_rows:
+        a, b = r["src"], r["dst"]
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    labels = [(k, find(k)) for k in parent]
+    spark = vertices.sparkSession
+    if labels:
+        lmap = spark.createDataFrame(labels, ["id", "component"])
+    else:
+        lmap = spark.createDataFrame([], vertices.select(
+            F.col("id"), F.col("id").alias("component")).schema)
+    return vertices.join(F.broadcast(lmap), "id", "left").select(
+        "id", F.coalesce("component", F.col("id")).alias("component")
+    )
+
+
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -432,31 +482,8 @@ def connected_components(
         vertices = sym.select(F.col("src").alias("id")).distinct()
 
     if n_edges <= driver_threshold:
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in (probe_rows if probe_rows is not None else e.distinct().collect()):
-            a, b = r["src"], r["dst"]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        labels = [(k, find(k)) for k in parent]
-        spark = edges.sparkSession
-        if labels:
-            lmap = spark.createDataFrame(labels, ["id", "component"])
-        else:
-            lmap = spark.createDataFrame([], vertices.select(
-                F.col("id"), F.col("id").alias("component")).schema)
-        return vertices.join(F.broadcast(lmap), "id", "left").select(
-            "id", F.coalesce("component", F.col("id")).alias("component")
-        )
+        rows = probe_rows if probe_rows is not None else e.distinct().collect()
+        return _label_with_union_find(rows, vertices)
     # ---- star-contraction pre-pass (r6) ----------------------------------
     # One round of f(v) = min(v ∪ N(v)) contraction before the generic loop:
     # every vertex is connected to f(v) (itself or a neighbor), so replacing
@@ -506,32 +533,7 @@ def connected_components(
 
     if n2 <= driver_threshold:
         # the contracted graph fits the driver: finish with union-find
-        parent = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in contracted.collect():
-            a, b = r["src"], r["dst"]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        labels = [(k, find(k)) for k in parent]
-        spark = edges.sparkSession
-        if labels:
-            lmap = spark.createDataFrame(labels, ["id", "component"])
-        else:
-            lmap = spark.createDataFrame([], cverts.select(
-                F.col("id"), F.col("id").alias("component")).schema)
-        comp = cverts.join(F.broadcast(lmap), "id", "left").select(
-            "id", F.coalesce("component", F.col("id")).alias("component")
-        )
-        out = _unwind(comp)
+        out = _unwind(_label_with_union_find(contracted.collect(), cverts))
         sym.unpersist()
         return out
     # ---- generic O(log d) loop on the contracted graph -------------------

@@ -10,8 +10,8 @@ bit-for-bit, and all expressed as native Column algebra (zero Python UDFs):
   hash, banding -> bucket self-join -> candidate pairs (the scale path: the
   shingle self-join above is quadratic on hot shingles; LSH bounds work to
   band-bucket collisions).
-- simhash64: 64-bit simhash from token hashes, via bit-position explode +
-  weighted majority (pure SQL algebra, oracle-checkable).
+- simhash64: 64-bit simhash from token hashes, via per-bit set counts in
+  one groupBy + majority (pure SQL algebra, oracle-checkable).
 
 - neardup_text_scalable: THE text near-dup scale path — MinHash-LSH
   candidates, then the exact n-gram Jaccard computed ONLY on candidate
@@ -782,59 +782,35 @@ def embedding_neardup_scalable(
 
 
 def simhash64(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    impl: str = "packed",
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(doc_id, simhash bigint): bit b of the hash is 1 iff the majority of
     the doc's distinct tokens have bit b set in their portable hash.
     Uses the 60-bit portable hash (bits 0..59) so the DuckDB oracle matches
-    exactly. Both impls produce identical rows (tested).
+    exactly.
 
-    impl='packed' (default): ONE groupBy(doc) with 60 set-bit-count partial
-    aggregations + a token count; bit b of the result is 1 iff
-    2*count_set > n_tokens (same majority as the ±1 vote sum). No row
-    amplification at all — the r2 version exploded 60 rows per distinct
-    token, a 60x CPU tax on the biggest input column even though map-side
-    combine bounded the shuffle.
-
-    impl='explode': the original two-shuffle bit-explode algebra, kept as
-    the parity twin for the row-identical test.
+    ONE groupBy(doc) with 60 set-bit-count partial aggregations + a token
+    count; bit b of the result is 1 iff 2*count_set > n_tokens (the
+    majority of the ±1 bit votes). No row amplification: exploding 60 vote
+    rows per distinct token would put a 60x CPU tax on the biggest input
+    column even though map-side combine bounded the shuffle.
     """
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("tok"),
     ).filter(F.col("tok") != "")
     hashed = toks.select("doc_id", portable_hash64(F.col("tok")).alias("h"))
-    if impl == "packed":
-        counts = [
-            F.sum(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1))).alias(f"c{b}")
-            for b in range(60)
-        ]
-        agg = hashed.groupBy("doc_id").agg(F.count("*").alias("n"), *counts)
-        total = F.lit(0).cast("long")
-        for b in range(60):
-            total = total + F.when(
-                F.col(f"c{b}") * 2 > F.col("n"), F.lit(1 << b).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        return agg.select("doc_id", total.alias("simhash"))
-    bits = hashed.select(
-        "doc_id",
-        "h",
-        F.explode(F.sequence(F.lit(0), F.lit(59))).alias("bit"),
-    ).select(
-        "doc_id",
-        "bit",
-        # vote +1 if bit set else -1 (column-valued shift needs expr form)
-        (F.expr("shiftright(h, bit)").bitwiseAND(F.lit(1)) * 2 - 1).alias("vote"),
-    )
-    votes = bits.groupBy("doc_id", "bit").agg(F.sum("vote").alias("v"))
-    return votes.groupBy("doc_id").agg(
-        F.sum(
-            F.when(F.col("v") > 0, F.expr("shiftleft(1L, bit)")).otherwise(
-                F.lit(0).cast("long")
-            )
-        ).alias("simhash")
-    )
+    counts = [
+        F.sum(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1))).alias(f"c{b}")
+        for b in range(60)
+    ]
+    agg = hashed.groupBy("doc_id").agg(F.count("*").alias("n"), *counts)
+    total = F.lit(0).cast("long")
+    for b in range(60):
+        total = total + F.when(
+            F.col(f"c{b}") * 2 > F.col("n"), F.lit(1 << b).cast("long")
+        ).otherwise(F.lit(0).cast("long"))
+    return agg.select("doc_id", total.alias("simhash"))
 
 
 def canonical_url(col):
@@ -1062,7 +1038,6 @@ def simhash_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     bands: int = 4,
-    impl: str = "packed",
     materialize: bool = True,
 ) -> DataFrame:
     """SimHash near-duplicate pairs: (a_id, b_id, hamming) for every doc
@@ -1079,7 +1054,7 @@ def simhash_pairs(
     (shuffle key = 15-bit band value, well-distributed by the hash), never
     the n² scan. ``materialize`` persists the signature table, which both
     join sides reference (Catalyst won't CSE the 61-aggregate groupBy)."""
-    sig = simhash64(docs, id_col, text_col, impl=impl)
+    sig = simhash64(docs, id_col, text_col)
     if materialize:
         from pyspark.storagelevel import StorageLevel
 
@@ -1361,7 +1336,7 @@ def semantic_dedup(
     from .similarity import _chunk_pairs, ivf_assign
 
     assigned = ivf_assign(
-        embeddings, centroids, id_col=id_col, vec_col=vec_col, impl="numpy"
+        embeddings, centroids, id_col=id_col, vec_col=vec_col
     )
 
     empty = pd.DataFrame({"id": pd.Series([], dtype="int64")})
@@ -1572,7 +1547,6 @@ def semantic_decontaminate(
     id_col: str = "vec_id",
     vec_col: str = "vec",
     threshold: float = 0.95,
-    impl: str = "numpy",
 ) -> DataFrame:
     """(vec_id, max_sim, contaminated) — embedding-grain benchmark
     decontamination: flag every corpus item whose embedding cosine to ANY
@@ -1584,72 +1558,47 @@ def semantic_decontaminate(
     Cross-engine exactness: each pairwise cosine is ROUND(6) BEFORE the
     per-item max on both engines, the module's ANN recipe.
 
-    impl='numpy' (default, the scale path): the eval matrix is a deploy
-    artifact (benchmarks are MBs) collected once and closed over ONE
-    mapInPandas — per corpus Arrow batch a single (b × m) matmul and a
-    row max; the 100 TB side is ONE pass, no shuffle at all (the output
-    is per-item, no aggregation needed). impl='sql': broadcast eval cross
-    join + groupBy(id) max — the JVM-only twin the parity test pins."""
-    if impl == "numpy":
-        import numpy as np
-        import pandas as pd
+    The eval matrix is a deploy artifact (benchmarks are MBs) collected
+    once and closed over ONE mapInPandas — per corpus Arrow batch a single
+    (b × m) matmul and a row max; the 100 TB side is ONE pass, no shuffle
+    at all (the output is per-item, no aggregation needed)."""
+    import numpy as np
+    import pandas as pd
 
-        erows = (
-            eval_vecs.select(
-                F.col(id_col).cast("long").alias("id"),
-                F.col(vec_col).cast("array<double>").alias("vec"),
-            )
-            .orderBy("id")
-            .collect()
-        )
-        E = [list(r["vec"]) for r in erows]
-
-        def part(batches):
-            Em = np.asarray(E, dtype="float64")
-            en = np.sqrt((Em * Em).sum(axis=1))
-            en[en == 0.0] = 1.0
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.vstack(pdf["vec"].to_numpy())
-                vn = np.sqrt((V * V).sum(axis=1))
-                vn[vn == 0.0] = 1.0
-                if len(Em):
-                    S = np.round((V @ Em.T) / np.outer(vn, en), 6)
-                    mx = S.max(axis=1)
-                else:
-                    mx = np.full(len(V), float("-inf"))
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["id"].astype("int64"),
-                        "max_sim": mx,
-                        "contaminated": mx >= threshold,
-                    }
-                )
-
-        return corpus.select(
+    erows = (
+        eval_vecs.select(
             F.col(id_col).cast("long").alias("id"),
             F.col(vec_col).cast("array<double>").alias("vec"),
-        ).mapInPandas(part, "vec_id long, max_sim double, contaminated boolean")
+        )
+        .orderBy("id")
+        .collect()
+    )
+    E = [list(r["vec"]) for r in erows]
 
-    dot = lambda a, b: F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    norm = lambda a: F.sqrt(dot(a, a))
-    c = corpus.select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    e = F.broadcast(
-        eval_vecs.select(F.col(vec_col).cast("array<double>").alias("e"))
-    )
-    sims = c.crossJoin(e).select(
-        "vec_id",
-        F.round(
-            dot(F.col("v"), F.col("e")) / (norm(F.col("v")) * norm(F.col("e"))), 6
-        ).alias("c"),
-    )
-    return sims.groupBy("vec_id").agg(
-        F.max("c").alias("max_sim"),
-        (F.max("c") >= F.lit(threshold)).alias("contaminated"),
-    )
+    def part(batches):
+        Em = np.asarray(E, dtype="float64")
+        en = np.sqrt((Em * Em).sum(axis=1))
+        en[en == 0.0] = 1.0
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.vstack(pdf["vec"].to_numpy())
+            vn = np.sqrt((V * V).sum(axis=1))
+            vn[vn == 0.0] = 1.0
+            if len(Em):
+                S = np.round((V @ Em.T) / np.outer(vn, en), 6)
+                mx = S.max(axis=1)
+            else:
+                mx = np.full(len(V), float("-inf"))
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["id"].astype("int64"),
+                    "max_sim": mx,
+                    "contaminated": mx >= threshold,
+                }
+            )
+
+    return corpus.select(
+        F.col(id_col).cast("long").alias("id"),
+        F.col(vec_col).cast("array<double>").alias("vec"),
+    ).mapInPandas(part, "vec_id long, max_sim double, contaminated boolean")

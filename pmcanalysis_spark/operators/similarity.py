@@ -1,14 +1,17 @@
 """Similarity search over embedding columns (array<float>).
 
-- cosine_topk: brute-force all-pairs cosine + per-query top-k. The dot
-  product is native Column algebra (``aggregate`` over ``zip_with``) so the
-  whole plan stays in the JVM; the baseline for correctness.
-- lsh_bucketed_topk: random-hyperplane LSH (sign of dot with deterministic
-  pseudo-random planes) buckets vectors; candidates only join within a
-  bucket — the scale path (work ∝ bucket collisions, not n^2).
+Every operator is one vectorized numpy kernel at the Python boundary
+(``mapInPandas`` / ``applyInPandas``): one BLAS matmul per Arrow batch or
+candidate group. The DuckDB oracles in ``__spark_entry__``
+(``sim_*``) are the reference for correctness.
 
-Scale notes: brute force is O(n*q) pair evaluations — fine for reranking a
-candidate set, unusable at corpus scale; the LSH variant bounds candidates.
+- cosine_topk: brute-force cosine top-k of a bounded query side against
+  the corpus (one pass over the corpus, per-batch partial top-k).
+- ivf_topk / lsh_bucketed_topk: exact cosine within an IVF cell or a
+  random-hyperplane LSH bucket — the scale paths (work ∝ Σ group_size², not
+  n²), mega-groups bounded by ``max_group_size``.
+- pq_encode / pq_adc_topk / ivfpq_topk: product quantization and IVFADC.
+
 Hyperplanes derive from a hash of (plane index, dimension index), so both
 Spark and any oracle can regenerate them bit-for-bit without a stored model.
 """
@@ -42,7 +45,7 @@ def _norm(a, dim: int | None = None):
     """L2 norm with the zero-vector guard (norm 0 -> 1): a degenerate
     all-zero vector then scores cosine 0 against everything instead of
     0/0 = NaN (which Spark's desc ordering ranks FIRST — the numpy kernels
-    apply the same ``n[n == 0] = 1`` guard so every impl agrees)."""
+    apply the same ``n[n == 0] = 1`` guard)."""
     if dim is not None:
         s = a[0] * a[0]
         for i in range(1, dim):
@@ -55,112 +58,75 @@ def _norm(a, dim: int | None = None):
 
 def cosine_topk(
     embeddings: DataFrame,
-    queries: DataFrame | None = None,
+    queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    dim: int | None = None,
-    impl: str = "sql",
 ) -> DataFrame:
-    """Brute-force cosine top-k. ``queries`` defaults to the corpus itself
-    (all-pairs self-search, excluding self-matches).
+    """Brute-force cosine top-k of each query against the corpus, excluding
+    self-matches (same id). ``queries`` must be bounded: the query matrix is
+    collected to the driver and closed over a mapInPandas that computes
+    Q @ V.T per corpus Arrow batch and emits only the per-batch top-k per
+    query; a final window merges partials. ONE pass over the corpus, no q×n
+    row materialization — at 100 TB the corpus-side shuffle volume is
+    q×k×n_batches rows, not q×n. (Top-k of a union of per-batch top-ks IS
+    the global top-k; tie order preserved by the shared (-cosine, item_id)
+    sort key.)"""
+    import numpy as np
+    import pandas as pd
 
-    impl='numpy' (requires an explicit bounded ``queries`` side): the query
-    matrix is collected to the driver and closed over a mapInPandas that
-    computes Q @ V.T per corpus Arrow batch and emits only the per-batch
-    top-k per query; a final window merges partials. ONE pass over the
-    corpus, no q×n row materialization — at 100 TB the corpus-side shuffle
-    volume is q×k×n_batches rows, not q×n. (Top-k of a union of per-batch
-    top-ks IS the global top-k; tie order preserved by the shared
-    (-cosine, item_id) sort key.)
-
-    impl='sql': broadcast the (small) query side, cross-join the corpus,
-    JVM-side dot products, then a row_number window on query_id —
-    TakeOrderedAndProject keeps only k rows per query past the window."""
-    if impl == "numpy":
-        import numpy as np
-        import pandas as pd
-
-        if queries is None:
-            raise ValueError("impl='numpy' needs an explicit bounded queries side")
-        qrows = (
-            queries.select(
-                F.col(id_col).cast("long").alias("id"),
-                F.col(vec_col).cast("array<double>").alias("vec"),
-            )
-            .orderBy("id")
-            .collect()
-        )
-        qids = [int(r["id"]) for r in qrows]
-        Q = [list(r["vec"]) for r in qrows]
-        if not qids:
-            spark = embeddings.sparkSession
-            return spark.createDataFrame([], _TOPK_SCHEMA)
-
-        def part(batches):
-            Qm = np.asarray(Q, dtype="float64")
-            qn = np.sqrt((Qm * Qm).sum(axis=1))
-            qn[qn == 0.0] = 1.0
-            qida = np.asarray(qids, dtype="int64")
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.vstack(pdf["vec"].to_numpy())
-                vn = np.sqrt((V * V).sum(axis=1))
-                vn[vn == 0.0] = 1.0  # zero-vector guard, mirrors _norm
-                ids = pdf["id"].to_numpy(dtype="int64")
-                S = (Qm @ V.T) / np.outer(qn, vn)  # (q, batch)
-                S[qida[:, None] == ids[None, :]] = -np.inf  # self-match
-                kk = min(k, S.shape[1])
-                out_q, out_i, out_c = [], [], []
-                for qi in range(len(qida)):
-                    row = S[qi]
-                    order = np.lexsort((ids, -row))[:kk]
-                    keep = row[order] > -np.inf
-                    out_q.extend([qida[qi]] * int(keep.sum()))
-                    out_i.extend(ids[order][keep])
-                    out_c.extend(row[order][keep])
-                yield pd.DataFrame(
-                    {
-                        "query_id": pd.Series(out_q, dtype="int64"),
-                        "item_id": pd.Series(out_i, dtype="int64"),
-                        "cosine": pd.Series(out_c, dtype="float64"),
-                    }
-                )
-
-        partials = embeddings.select(
+    qrows = (
+        queries.select(
             F.col(id_col).cast("long").alias("id"),
             F.col(vec_col).cast("array<double>").alias("vec"),
-        ).mapInPandas(part, "query_id long, item_id long, cosine double")
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cosine"), F.asc("item_id")
         )
-        return (
-            partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "item_id", "cosine", "rank")
-        )
-    corpus = embeddings.select(
-        F.col(id_col).alias("item_id"),
-        F.col(vec_col).cast("array<double>").alias("item_vec"),
-    ).withColumn("item_norm", _norm(F.col("item_vec"), dim))
-    qs = (queries or embeddings).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("query_vec"),
-    ).withColumn("query_norm", _norm(F.col("query_vec"), dim))
-    # norms computed once per vector (n + q folds), not per pair (3x saving)
-    pairs = qs.crossJoin(corpus).filter(F.col("query_id") != F.col("item_id"))
-    scored = pairs.select(
-        "query_id",
-        "item_id",
-        (
-            _dot(F.col("query_vec"), F.col("item_vec"), dim)
-            / (F.col("query_norm") * F.col("item_norm"))
-        ).alias("cosine"),
+        .orderBy("id")
+        .collect()
     )
+    qids = [int(r["id"]) for r in qrows]
+    Q = [list(r["vec"]) for r in qrows]
+    if not qids:
+        spark = embeddings.sparkSession
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+
+    def part(batches):
+        Qm = np.asarray(Q, dtype="float64")
+        qn = np.sqrt((Qm * Qm).sum(axis=1))
+        qn[qn == 0.0] = 1.0
+        qida = np.asarray(qids, dtype="int64")
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.vstack(pdf["vec"].to_numpy())
+            vn = np.sqrt((V * V).sum(axis=1))
+            vn[vn == 0.0] = 1.0  # zero-vector guard, mirrors _norm
+            ids = pdf["id"].to_numpy(dtype="int64")
+            S = (Qm @ V.T) / np.outer(qn, vn)  # (q, batch)
+            S[qida[:, None] == ids[None, :]] = -np.inf  # self-match
+            kk = min(k, S.shape[1])
+            out_q, out_i, out_c = [], [], []
+            for qi in range(len(qida)):
+                row = S[qi]
+                order = np.lexsort((ids, -row))[:kk]
+                keep = row[order] > -np.inf
+                out_q.extend([qida[qi]] * int(keep.sum()))
+                out_i.extend(ids[order][keep])
+                out_c.extend(row[order][keep])
+            yield pd.DataFrame(
+                {
+                    "query_id": pd.Series(out_q, dtype="int64"),
+                    "item_id": pd.Series(out_i, dtype="int64"),
+                    "cosine": pd.Series(out_c, dtype="float64"),
+                }
+            )
+
+    partials = embeddings.select(
+        F.col(id_col).cast("long").alias("id"),
+        F.col(vec_col).cast("array<double>").alias("vec"),
+    ).mapInPandas(part, _PARTIAL_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("item_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        partials.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "item_id", "cosine", "rank")
     )
@@ -173,10 +139,10 @@ def _group_topk_fn(k: int):
     per group (O(n) transfer), not once per pair (O(n²)) — the reason this
     beats both the interpreted HOF fold and a per-pair pandas UDF.
 
-    Ordering matches the Column/window implementation exactly: rank by
-    (-cosine, item_id) via lexsort; ulp-level differences between BLAS
-    blocked summation and the sequential fold are absorbed by the callers'
-    ROUND(cosine, 6)."""
+    Ordering matches the oracles' window exactly: rank by (-cosine,
+    item_id) via lexsort; ulp-level differences between BLAS blocked
+    summation and the oracles' sequential fold are absorbed by ROUND(cosine,
+    6)."""
     import numpy as np
     import pandas as pd
 
@@ -356,43 +322,12 @@ def plane_component_py(plane: int, dim: int) -> float:
     int(md5(f'{plane}:{dim}')[:8], 16) / 2^32 - 0.5. Computed ONCE on the
     driver — the planes are index-derived constants, so folding them here
     (instead of an F.md5 expression evaluated per row) removes
-    planes×dim md5 calls from every row. tests/test_similarity.py pins this
-    against the equivalent Spark md5/conv column expression."""
+    planes×dim md5 calls from every row. The ``sim_lsh_topk`` oracle
+    derives the same planes with DuckDB's md5."""
     import hashlib
 
     h = int(hashlib.md5(f"{plane}:{dim}".encode()).hexdigest()[:8], 16)
     return h / float(1 << 32) - 0.5
-
-
-def _plane_component(plane: int, dim: int):
-    return F.lit(plane_component_py(plane, dim))
-
-
-def _plane_component_spark_md5(plane: int, dim: int):
-    """The original in-plan derivation; kept ONLY for the parity unit test
-    (cross-checks JVM md5/conv against CPython hashlib)."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws(":", F.lit(plane), F.lit(dim))), 1, 8), 16, 10
-    ).cast("double")
-    return h / F.lit(float(1 << 32)) - 0.5
-
-
-def lsh_bucket(vec_col, dim: int, num_planes: int = 8, plane_offset: int = 0):
-    """Bucket id = bit pattern of sign(v . plane_p) for p in
-    plane_offset..plane_offset+num_planes-1. ``plane_offset`` selects an
-    independent plane set (multi-table LSH: union candidates over several
-    tables to raise recall)."""
-    bucket = F.lit(0).cast("long")
-    for p in range(num_planes):
-        comp = [
-            F.col(vec_col)[d] * _plane_component(plane_offset + p, d)
-            for d in range(dim)
-        ]
-        dot = comp[0]
-        for c in comp[1:]:
-            dot = dot + c
-        bucket = bucket + F.when(dot >= 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0))
-    return bucket
 
 
 def ivf_assign(
@@ -400,74 +335,49 @@ def ivf_assign(
     centroids: list[tuple[int, list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
-    impl: str = "sql",
 ) -> DataFrame:
     """IVF coarse quantization: assign each vector to its nearest centroid
     (argmin L2 == argmax dot for unit-ish cells; we use max cosine for
     stability). Centroids are a small driver-side list (typically k-means
     output; any deterministic pick works for the index structure itself) —
-    the assignment is one narrow pass, no shuffle.
-    Returns (id, vec, norm, cell).
-
-    impl='numpy': mapInPandas with the centroid matrix closed over — one
-    V @ C.T per Arrow batch instead of n_centroids interpreted folds per
-    row. Ties (two equal cosines) break to the FIRST centroid in the given
-    list in both impls (argmax first-occurrence == the > comparison chain).
+    the assignment is one narrow pass, no shuffle: a mapInPandas with the
+    centroid matrix closed over, one V @ C.T per Arrow batch.
+    Returns (id, vec, norm, cell). Ties (two equal cosines) break to the
+    FIRST centroid in the given list (argmax first-occurrence).
     """
-    if impl == "numpy":
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        cell_ids = [int(c) for c, _ in centroids]
-        C = [[float(x) for x in cvec] for _, cvec in centroids]
+    cell_ids = [int(c) for c, _ in centroids]
+    C = [[float(x) for x in cvec] for _, cvec in centroids]
 
-        def assign(batches):
-            Cm = np.asarray(C, dtype="float64")
-            cn = np.sqrt((Cm * Cm).sum(axis=1))
-            cn[cn == 0.0] = 1.0
-            cells = np.asarray(cell_ids, dtype="int64")
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.vstack(pdf["vec"].to_numpy())
-                vn = np.sqrt((V * V).sum(axis=1))
-                vn[vn == 0.0] = 1.0  # zero-vector guard, mirrors _norm
-                scores = (V @ Cm.T) / np.outer(vn, cn)
-                best = cells[np.argmax(scores, axis=1)]  # first max = lowest id
-                yield pd.DataFrame(
-                    {
-                        "id": pdf["id"].to_numpy(dtype="int64"),
-                        "vec": pdf["vec"],
-                        "norm": vn,
-                        "cell": best,
-                    }
-                )
+    def assign(batches):
+        Cm = np.asarray(C, dtype="float64")
+        cn = np.sqrt((Cm * Cm).sum(axis=1))
+        cn[cn == 0.0] = 1.0
+        cells = np.asarray(cell_ids, dtype="int64")
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.vstack(pdf["vec"].to_numpy())
+            vn = np.sqrt((V * V).sum(axis=1))
+            vn[vn == 0.0] = 1.0  # zero-vector guard, mirrors _norm
+            scores = (V @ Cm.T) / np.outer(vn, cn)
+            best = cells[np.argmax(scores, axis=1)]  # first max = lowest id
+            yield pd.DataFrame(
+                {
+                    "id": pdf["id"].to_numpy(dtype="int64"),
+                    "vec": pdf["vec"],
+                    "norm": vn,
+                    "cell": best,
+                }
+            )
 
-        v = embeddings.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
-        )
-        return v.mapInPandas(
-            assign, "id long, vec array<double>, norm double, cell long"
-        )
     v = embeddings.select(
-        F.col(id_col).alias("id"),
+        F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
-    ).withColumn("norm", _norm(F.col("vec"), dim))
-    best_cell = None
-    best_score = None
-    for cid, cvec in centroids:
-        carr = F.array(*[F.lit(float(x)) for x in cvec])
-        cnorm = float(sum(x * x for x in cvec)) ** 0.5 or 1.0
-        score = _dot(F.col("vec"), carr, dim) / (F.col("norm") * F.lit(cnorm))
-        if best_score is None:
-            best_cell, best_score = F.lit(cid), score
-        else:
-            cond = score > best_score
-            best_cell = F.when(cond, F.lit(cid)).otherwise(best_cell)
-            best_score = F.when(cond, score).otherwise(best_score)
-    return v.select("id", "vec", "norm", best_cell.alias("cell"))
+    )
+    return v.mapInPandas(assign, "id long, vec array<double>, norm double, cell long")
 
 
 def ivf_topk(
@@ -476,50 +386,20 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    dim: int | None = None,
-    impl: str = "numpy",
     max_group_size: int | None = 4096,
 ) -> DataFrame:
     """IVF ANN (the scale path alongside LSH): candidates share a coarse
     cell; exact cosine + top-k within the cell. Work ∝ Σ cell_size², not
     n².
 
-    impl='numpy' (default): one shuffle on cell, then ONE BLAS matmul per
-    cell via applyInPandas — each vector crosses Arrow once per cell.
-    applyInPandas groups can't be AQE-skew-split, so a mega-cell is guarded
-    by ``max_group_size`` (default 4096): oversized cells run as bounded
-    chunk-pair matmuls + a partial-top-k merge (see _chunk_pairs); cells
-    under the cap take exactly the r2 single-matmul path.
-    impl='sql': cell self-join + JVM-side dot + row_number window — every
-    shuffle AQE-manageable, slower locally (interpreted HOF per pair).
-    Both produce identical rows after ROUND(cosine, 6); tested equal."""
-    assigned = ivf_assign(embeddings, centroids, id_col, vec_col, dim, impl=impl)
-    if impl == "numpy":
-        return _grouped_topk(assigned, ["cell"], k, max_group_size)
-    a = assigned.select(
-        F.col("id").alias("query_id"), F.col("vec").alias("query_vec"),
-        F.col("norm").alias("query_norm"), "cell",
-    )
-    b = assigned.select(
-        F.col("id").alias("item_id"), F.col("vec").alias("item_vec"),
-        F.col("norm").alias("item_norm"), "cell",
-    )
-    pairs = a.join(b, "cell").filter(F.col("query_id") != F.col("item_id"))
-    # norms reused from the assignment pass — only the dot is per-pair
-    scored = pairs.select(
-        "query_id",
-        "item_id",
-        (
-            _dot(F.col("query_vec"), F.col("item_vec"), dim)
-            / (F.col("query_norm") * F.col("item_norm"))
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("item_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "item_id", F.col("cosine"), "rank")
-    )
+    One shuffle on cell, then ONE BLAS matmul per cell via applyInPandas —
+    each vector crosses Arrow once per cell. applyInPandas groups can't be
+    AQE-skew-split, so a mega-cell is guarded by ``max_group_size`` (default
+    4096): oversized cells run as bounded chunk-pair matmuls + a
+    partial-top-k merge (see _chunk_pairs); cells under the cap take the
+    single-matmul path."""
+    assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
+    return _grouped_topk(assigned, ["cell"], k, max_group_size)
 
 
 def lsh_bucketed_topk(
@@ -529,76 +409,44 @@ def lsh_bucketed_topk(
     dim: int = 64,
     num_planes: int = 8,
     k: int = 10,
-    impl: str = "sql",
     max_group_size: int | None = 4096,
 ) -> DataFrame:
     """ANN: candidates share a hyperplane-sign bucket; exact cosine + top-k
     within candidates. Recall < 1 by design; union multiple plane sets for
     higher recall (standard multi-probe trade-off).
 
-    impl='numpy': bucket bits + norms from ONE V @ P.T mapInPandas pass,
-    then one BLAS matmul per bucket, mega-buckets chunk-pair-bounded by
-    ``max_group_size`` (see ivf_topk); impl='sql' (default, oracle-parity):
-    Column-algebra bucket + self-join + JVM dot + window."""
-    if impl == "numpy":
-        import numpy as np
-        import pandas as pd
+    Bucket bits (bit p = sign of v · plane_p, planes from
+    ``plane_component_py``) and norms come from ONE V @ P.T mapInPandas
+    pass, then one BLAS matmul per bucket, mega-buckets chunk-pair-bounded
+    by ``max_group_size`` (see ivf_topk)."""
+    import numpy as np
+    import pandas as pd
 
-        P = [
-            [plane_component_py(p, d) for d in range(dim)]
-            for p in range(num_planes)
-        ]
+    P = [[plane_component_py(p, d) for d in range(dim)] for p in range(num_planes)]
 
-        def bucketize(batches):
-            Pm = np.asarray(P, dtype="float64")
-            w = 1 << np.arange(num_planes, dtype="int64")
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.vstack(pdf["vec"].to_numpy())
-                vn = np.sqrt((V * V).sum(axis=1))
-                vn[vn == 0.0] = 1.0  # zero-vector guard, mirrors _norm
-                yield pd.DataFrame(
-                    {
-                        "id": pdf["id"].to_numpy(dtype="int64"),
-                        "vec": pdf["vec"],
-                        "norm": vn,
-                        "bucket": ((V @ Pm.T) >= 0.0) @ w,
-                    }
-                )
+    def bucketize(batches):
+        Pm = np.asarray(P, dtype="float64")
+        w = 1 << np.arange(num_planes, dtype="int64")
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.vstack(pdf["vec"].to_numpy())
+            vn = np.sqrt((V * V).sum(axis=1))
+            vn[vn == 0.0] = 1.0  # zero-vector guard, mirrors _norm
+            yield pd.DataFrame(
+                {
+                    "id": pdf["id"].to_numpy(dtype="int64"),
+                    "vec": pdf["vec"],
+                    "norm": vn,
+                    "bucket": ((V @ Pm.T) >= 0.0) @ w,
+                }
+            )
 
-        bucketed = embeddings.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
-        ).mapInPandas(
-            bucketize, "id long, vec array<double>, norm double, bucket long"
-        )
-        return _grouped_topk(bucketed, ["bucket"], k, max_group_size)
-    with_bucket = embeddings.select(
-        F.col(id_col).alias("id"),
+    bucketed = embeddings.select(
+        F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
-    ).withColumn("bucket", lsh_bucket("vec", dim, num_planes))
-    a = with_bucket.select(
-        F.col("id").alias("query_id"), F.col("vec").alias("query_vec"), "bucket"
-    )
-    b = with_bucket.select(
-        F.col("id").alias("item_id"), F.col("vec").alias("item_vec"), "bucket"
-    )
-    pairs = a.join(b, "bucket").filter(F.col("query_id") != F.col("item_id"))
-    scored = pairs.select(
-        "query_id",
-        "item_id",
-        (
-            _dot(F.col("query_vec"), F.col("item_vec"), dim)
-            / (_norm(F.col("query_vec"), dim) * _norm(F.col("item_vec"), dim))
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("item_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "item_id", "cosine", "rank")
-    )
+    ).mapInPandas(bucketize, "id long, vec array<double>, norm double, bucket long")
+    return _grouped_topk(bucketed, ["bucket"], k, max_group_size)
 
 
 def train_centroids(
@@ -607,7 +455,6 @@ def train_centroids(
     n_iter: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "numpy",
 ) -> list[tuple[int, list[float]]]:
     """Distributed Lloyd's k-means for the IVF coarse quantizer: refine the
     ``init`` centroids with ``n_iter`` assign→mean iterations and return the
@@ -630,13 +477,13 @@ def train_centroids(
     ``n_iter`` (no float-noise-coupled stopping rule) for the same
     reproducibility reason. Cells that capture no vectors are dropped
     (FAISS-style empty-cell reseeding is a production knob, not index
-    semantics); ties assign to the lowest cell id in both impls.
+    semantics); ties assign to the lowest cell id.
     """
     cents = sorted(((int(c), [float(x) for x in v]) for c, v in init))
     for _ in range(n_iter):
         if not cents:
             break
-        assigned = ivf_assign(embeddings, cents, id_col, vec_col, impl=impl)
+        assigned = ivf_assign(embeddings, cents, id_col, vec_col)
         rows = (
             assigned.select("cell", F.posexplode("vec").alias("pos", "val"))
             .groupBy("cell", "pos")
@@ -688,7 +535,6 @@ def train_pq_codebooks(
     n_iter: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "numpy",
 ) -> list[list[tuple[int, list[float]]]]:
     """Per-subspace Lloyd's k-means for the PQ codebooks (arXiv:1102.3828
     §III trains each subquantizer independently) — the training half that
@@ -730,9 +576,7 @@ def train_pq_codebooks(
         F.col(vec_col).cast("array<double>").alias(vec_d),
     )
     for _ in range(n_iter):
-        enc = pq_encode(
-            prepped, books, id_col, vec_col, impl=impl, carry_cols=(vec_d,)
-        )
+        enc = pq_encode(prepped, books, id_col, vec_col, carry_cols=(vec_d,))
         comp = enc.select(
             F.posexplode("codes").alias("s", "code"), F.col(vec_d).alias("vec")
         ).select(
@@ -777,7 +621,6 @@ def pq_encode(
     codebooks: list[list[tuple[int, list[float]]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "numpy",
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Product-quantization encode: each vector becomes ``m`` small codes,
@@ -787,109 +630,63 @@ def pq_encode(
     THE memory lever for web-scale ANN: a 64-dim float vector (256 B+)
     compresses to m=8 one-byte codes, so a 10^12-vector index fits a
     cluster's RAM and the ADC scan (``pq_adc_topk``) never touches raw
-    vectors again. Encode itself is one narrow pass, no shuffle in the
-    numpy impl.
+    vectors again. Encode itself is ONE narrow mapInPandas pass, no
+    shuffle: a (batch × k) matmul per subspace with the codebook matrix
+    closed over.
 
     Cross-engine determinism: distances are ROUND(6) then ties break to
-    the LOWEST code id, in both impls and the SQL oracle — same recipe as
-    ``ivf_assign``. impl='numpy': ONE mapInPandas, a (batch × k) matmul
-    per subspace with the codebook matrix closed over. impl='sql': items
-    explode to (id, s, subvec), equi-join the m·k-row codeword table on
-    the subspace key, JVM-side fold distance, per-(id,s) argmin window —
-    every shuffle AQE-manageable; kept as the parity twin (tested
-    row-identical). ``carry_cols`` pass through unchanged (e.g. the IVF
-    cell id in ``ivfpq_topk``) — through the UDF batch in the numpy impl,
-    through the groupBy key in the sql impl — so composing with a routing
+    the LOWEST code id, as in the SQL oracle — same recipe as
+    ``ivf_assign``. ``carry_cols`` pass through the UDF batch unchanged
+    (e.g. the IVF cell id in ``ivfpq_topk``), so composing with a routing
     stage costs no extra join."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
     m = len(codebooks)
     if not m:
         raise ValueError("empty codebooks")
     d_sub = len(codebooks[0][0][1])
     books = [sorted(((int(c), [float(x) for x in v]) for c, v in cb)) for cb in codebooks]
-
     carry = list(carry_cols)
-    if impl == "numpy":
-        import numpy as np
-        import pandas as pd
 
-        def encode(batches):
-            Cs = [np.asarray([v for _, v in cb], dtype="float64") for cb in books]
-            ids_per_s = [np.asarray([c for c, _ in cb], dtype="int64") for cb in books]
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.vstack(pdf["vec"].to_numpy())
-                codes = np.empty((len(pdf), m), dtype="int64")
-                for s in range(m):
-                    Vs = V[:, s * d_sub : (s + 1) * d_sub]
-                    C = Cs[s]
-                    d2 = (
-                        (Vs * Vs).sum(axis=1, keepdims=True)
-                        - 2.0 * (Vs @ C.T)
-                        + (C * C).sum(axis=1)
-                    )
-                    # ROUND(6)+lowest-code tie-break, same rule as the oracle
-                    d2 = np.round(d2, 6)
-                    codes[:, s] = ids_per_s[s][np.argmin(d2, axis=1)]
-                out = {"id": pdf["id"].to_numpy(dtype="int64"), "codes": list(codes)}
-                for c in carry:
-                    out[c] = pdf[c]
-                yield pd.DataFrame(out)
+    def encode(batches):
+        Cs = [np.asarray([v for _, v in cb], dtype="float64") for cb in books]
+        ids_per_s = [np.asarray([c for c, _ in cb], dtype="int64") for cb in books]
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.vstack(pdf["vec"].to_numpy())
+            codes = np.empty((len(pdf), m), dtype="int64")
+            for s in range(m):
+                Vs = V[:, s * d_sub : (s + 1) * d_sub]
+                C = Cs[s]
+                d2 = (
+                    (Vs * Vs).sum(axis=1, keepdims=True)
+                    - 2.0 * (Vs @ C.T)
+                    + (C * C).sum(axis=1)
+                )
+                # ROUND(6)+lowest-code tie-break, same rule as the oracle
+                d2 = np.round(d2, 6)
+                codes[:, s] = ids_per_s[s][np.argmin(d2, axis=1)]
+            out = {"id": pdf["id"].to_numpy(dtype="int64"), "codes": list(codes)}
+            for c in carry:
+                out[c] = pdf[c]
+            yield pd.DataFrame(out)
 
-        v = embeddings.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
-            *[F.col(c) for c in carry],
-        )
-        from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-        schema = StructType(
-            [
-                StructField("id", LongType()),
-                StructField("codes", ArrayType(LongType())),
-            ]
-            + [v.schema[c] for c in carry]
-        )
-        return v.mapInPandas(encode, schema)
-
-    spark = embeddings.sparkSession
-    cw = spark.createDataFrame(
-        [(s, c, v) for s, cb in enumerate(books) for c, v in cb],
-        "s int, code long, cvec array<double>",
-    )
-    sub = embeddings.select(
+    v = embeddings.select(
         F.col(id_col).cast("long").alias("id"),
+        F.col(vec_col).cast("array<double>").alias("vec"),
         *[F.col(c) for c in carry],
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.slice(
-                    F.col(vec_col).cast("array<double>"), s * d_sub + 1, d_sub
-                ),
-            )
-        ).alias("s", "svec"),
     )
-    dist = sub.join(F.broadcast(cw), "s").select(
-        "id",
-        *carry,
-        "s",
-        "code",
-        F.round(
-            F.aggregate(
-                F.zip_with(F.col("svec"), F.col("cvec"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        ).alias("d2"),
+    schema = StructType(
+        [
+            StructField("id", LongType()),
+            StructField("codes", ArrayType(LongType())),
+        ]
+        + [v.schema[c] for c in carry]
     )
-    w = Window.partitionBy("id", "s").orderBy("d2", "code")
-    best = dist.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    return best.groupBy("id", *carry).agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("s", "code"))), lambda x: x["code"]
-        ).alias("codes")
-    )
+    return v.mapInPandas(encode, schema)
 
 
 def pq_adc_topk(
@@ -899,7 +696,6 @@ def pq_adc_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "numpy",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: per query, the m·k
     lookup table term[s][code] = ||q_s − codeword||² is computed ONCE,
@@ -943,7 +739,7 @@ def pq_adc_topk(
             9,
         ).alias("term"),
     )
-    codes = pq_encode(embeddings, codebooks, id_col, vec_col, impl=impl)
+    codes = pq_encode(embeddings, codebooks, id_col, vec_col)
     exploded = codes.select(
         F.col("id").alias("item_id"), F.posexplode("codes").alias("s", "code")
     )
@@ -973,7 +769,6 @@ def ivfpq_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "numpy",
 ) -> DataFrame:
     """IVFADC — the canonical trillion-vector ANN design (FAISS IVF-PQ,
     arXiv:1102.3828 §IV): vectors route to an IVF cell, their RESIDUAL
@@ -1002,7 +797,7 @@ def ivfpq_topk(
     d_sub = len(codebooks[0][0][1])
     cents = sorted(((int(c), [float(x) for x in v]) for c, v in centroids))
 
-    assigned = ivf_assign(embeddings, cents, id_col, vec_col, impl=impl)
+    assigned = ivf_assign(embeddings, cents, id_col, vec_col)
     cent_df = spark.createDataFrame(cents, "cell long, centv array<double>")
     residuals = assigned.join(F.broadcast(cent_df), "cell").select(
         "id",
@@ -1010,8 +805,7 @@ def ivfpq_topk(
         F.zip_with(F.col("vec"), F.col("centv"), lambda a, b: a - b).alias("rvec"),
     )
     codes = pq_encode(
-        residuals, codebooks, id_col="id", vec_col="rvec", impl=impl,
-        carry_cols=("cell",),
+        residuals, codebooks, id_col="id", vec_col="rvec", carry_cols=("cell",)
     )
 
     def _fold_dot(xs: list[float]) -> float:

@@ -907,8 +907,7 @@ def length_quantiles(
     truncation budgets and flags degenerate sources (a crawl feed whose p99
     collapses to a boilerplate length) before training-mix decisions.
 
-    Two impls, same contract as the ANN/dedup families (exact anchor +
-    sketch scale path):
+    Two modes with one contract (exact anchor + sketch scale path):
 
     - ``exact=True``: ``percentile`` — buffers every group's values in the
       aggregation state, so it is the small-scale correctness anchor and

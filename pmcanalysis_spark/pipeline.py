@@ -131,11 +131,13 @@ def triples_from_term_sets(
     """Term sets (doc_id, term_ids) -> scored triples. The sets feed every
     count (corpus size, doc frequency, pairs), so they are persisted and
     materialized once; the count that materializes them is the corpus size.
-    The caller materializes the result (write/count)."""
+    Doc frequency feeds both the na and the nb side of scoring, so it is
+    persisted too and aggregates once. The caller materializes the result
+    (write/count)."""
     cfg = cfg or PipelineConfig()
     sets = sets.persist()
     total = sets.count()
-    stats = set_term_stats(sets)
+    stats = set_term_stats(sets).persist()
     # all b families in ONE pass over the sets (OR of prefixes)
     pairs = set_pair_counts(sets, a_prefix=cfg.a_prefix, b_prefix=cfg.b_prefixes)
     return scored_pairs(pairs, stats, total, pred=cfg.pred)

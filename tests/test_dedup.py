@@ -136,18 +136,6 @@ def test_simhash_equal_for_equal_and_close_for_near(spark):
     assert hamming(hs[1], hs[3]) < hamming(hs[1], hs[4])
 
 
-def test_simhash_impls_row_identical(spark):
-    """The packed single-groupBy impl (no 60x bit explode) equals the
-    original explode algebra bit-for-bit — on the toy docs AND the sf0.001
-    documents table."""
-    toy = _docs(spark)
-    real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for docs in (toy, real):
-        packed = sorted(tuple(r) for r in simhash64(docs, impl="packed").collect())
-        exploded = sorted(tuple(r) for r in simhash64(docs, impl="explode").collect())
-        assert packed == exploded and len(packed) > 0
-
-
 def test_exact_dedup_full_text_confirm_splits_collisions(spark):
     """confirm_full_text=True: a hash collision (injected via a degenerate
     hash_expr) yields separate clusters per distinct text, where the default
@@ -796,32 +784,32 @@ def test_line_dedup_partition_invariance(spark):
 
 def test_semantic_decontaminate_flags_planted_paraphrases(spark):
     """An eval vector's scaled near-copy (no shared tokens needed) is
-    flagged; an orthogonal vector is not; numpy and sql impls agree
-    row-for-row after the ROUND(6) recipe."""
+    flagged; an orthogonal vector is not; every max_sim equals the max over
+    the eval set of the ROUND(6) cosine computed here in plain Python."""
+    import math
+
     from pmcanalysis_spark.operators.dedup import semantic_decontaminate
 
-    ev = spark.createDataFrame(
-        [(100, [1.0, 0.0, 0.0, 0.0]), (101, [0.0, 1.0, 0.0, 0.0])],
-        "vec_id long, vec array<double>",
-    )
-    corpus = spark.createDataFrame(
-        [
-            (1, [2.0, 0.1, 0.0, 0.0]),   # near eval 100 (cos ~0.999)
-            (2, [0.0, 0.0, 1.0, 0.0]),   # orthogonal to both
-            (3, [0.0, 3.0, 0.0, 0.0]),   # exact direction of eval 101
-        ],
-        "vec_id long, vec array<double>",
-    )
+    evs = [(100, [1.0, 0.0, 0.0, 0.0]), (101, [0.0, 1.0, 0.0, 0.0])]
+    docs = [
+        (1, [2.0, 0.1, 0.0, 0.0]),   # near eval 100 (cos ~0.999)
+        (2, [0.0, 0.0, 1.0, 0.0]),   # orthogonal to both
+        (3, [0.0, 3.0, 0.0, 0.0]),   # exact direction of eval 101
+    ]
+    ev = spark.createDataFrame(evs, "vec_id long, vec array<double>")
+    corpus = spark.createDataFrame(docs, "vec_id long, vec array<double>")
     got = {
         r.vec_id: (r.max_sim, r.contaminated)
         for r in semantic_decontaminate(corpus, ev, threshold=0.95).collect()
     }
-    assert got[1][1] and got[3] == (1.0, True) and not got[2][1]
-    sql = {
-        tuple(r)
-        for r in semantic_decontaminate(corpus, ev, threshold=0.95, impl="sql").collect()
-    }
-    assert sql == {(k, *v) for k, v in got.items()}
+
+    def cos(u, v):
+        norm = lambda x: math.sqrt(sum(a * a for a in x))
+        return sum(a * b for a, b in zip(u, v)) / (norm(u) * norm(v))
+
+    want = {i: max(round(cos(v, e), 6) for _, e in evs) for i, v in docs}
+    assert want == {1: 0.998752, 2: 0.0, 3: 1.0}
+    assert got == {i: (m, m >= 0.95) for i, m in want.items()}
 
 
 def test_minhash_signatures_duplicate_invariant_raw_path(spark):

@@ -48,6 +48,28 @@ def test_flagship_plan_has_no_doc_id_join(spark):
     assert not [j for j in joins if "doc_id#" in j], joins
 
 
+def test_flagship_doc_frequency_aggregates_once(spark):
+    """Doc frequency feeds both the na and the nb broadcast; it must be
+    aggregated once per job. Every materialized term_id shuffle stage of
+    the executed plan is the same exchange (one plan_id; a cached subtree
+    prints once per reference), where computing it per side runs two."""
+    import re
+
+    pages = build_web_pages(200)
+    lex = [(e.name, e.term_id) for e in build_lexicon()]
+    _, closure = build_hierarchy_terms()
+    df = spark.createDataFrame(pages, WEB_PAGES)
+    t = build_triples(df, lex, hierarchy=spark.createDataFrame(closure, HIERARCHY))
+    t.collect()
+    plan = _plan(t)
+    stages = set(re.findall(
+        r"ShuffleQueryStage \d+\n[ :]*\+- Exchange hashpartitioning\(term_id#\d+, \d+\)"
+        r".*plan_id=(\d+)\]",
+        plan,
+    ))
+    assert len(stages) == 1, plan
+
+
 def test_dim_joins_are_broadcast_not_shuffled(spark):
     pages = build_web_pages(50)
     lex = [(e.name, e.term_id) for e in build_lexicon()]

@@ -18,14 +18,14 @@ def _emb(spark):
 
 
 def test_cosine_topk_nearest(spark):
-    out = cosine_topk(_emb(spark), k=1).collect()
+    out = cosine_topk(_emb(spark), queries=_emb(spark), k=1).collect()
     nearest = {r.query_id: r.item_id for r in out}
     assert nearest[1] == 2 and nearest[2] == 1
     assert nearest[3] == 4 and nearest[4] == 3
 
 
 def test_cosine_value_exact(spark):
-    out = cosine_topk(_emb(spark), k=4).collect()
+    out = cosine_topk(_emb(spark), queries=_emb(spark), k=4).collect()
     c15 = [r.cosine for r in out if r.query_id == 1 and r.item_id == 5][0]
     assert math.isclose(c15, -1.0)
 
@@ -50,87 +50,10 @@ def test_lsh_buckets_parallel_vectors_together(spark):
     pairs = {(r.query_id, r.item_id) for r in out}
     assert (1, 2) in pairs or (2, 1) in pairs
     # recall may be <1 for others; but results must be a subset of brute force order
-    brute = cosine_topk(_emb(spark), k=4)
+    brute = cosine_topk(_emb(spark), queries=_emb(spark), k=4)
     bvals = {(r.query_id, r.item_id): r.cosine for r in brute.collect()}
     for r in out:
         assert math.isclose(bvals[(r.query_id, r.item_id)], r.cosine, rel_tol=1e-9)
-
-
-def test_ivf_numpy_impl_matches_sql_impl(spark):
-    """The BLAS-matmul applyInPandas path and the join+window path produce
-    identical rows after ROUND(cosine, 6)."""
-    from pyspark.sql import functions as F
-
-    from pmcanalysis_spark.operators.similarity import ivf_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in emb.filter(F.col("vec_id") < 8).orderBy("vec_id").collect()
-    ]
-
-    def rows(impl):
-        out = ivf_topk(emb, cents, k=3, impl=impl).select(
-            F.col("query_id").cast("long"), F.col("item_id").cast("long"),
-            F.round("cosine", 6).alias("cosine"), F.col("rank").cast("int"),
-        )
-        return sorted(tuple(r) for r in out.collect())
-
-    assert rows("numpy") == rows("sql")
-
-
-def test_lsh_numpy_impl_matches_sql_impl(spark):
-    from pyspark.sql import functions as F
-
-    from pmcanalysis_spark.operators.similarity import lsh_bucketed_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-
-    def rows(impl):
-        out = lsh_bucketed_topk(emb, dim=64, num_planes=6, k=3, impl=impl).select(
-            F.col("query_id").cast("long"), F.col("item_id").cast("long"),
-            F.round("cosine", 6).alias("cosine"), F.col("rank").cast("int"),
-        )
-        return sorted(tuple(r) for r in out.collect())
-
-    assert rows("numpy") == rows("sql")
-
-
-def test_plane_component_python_matches_spark_md5(spark):
-    """The driver-side hashlib plane constants equal the original
-    F.md5/F.conv column derivation bit-for-bit (the cross-engine hash
-    parity the LSH oracles rely on)."""
-    from pyspark.sql import functions as F
-
-    from pmcanalysis_spark.operators.similarity import (
-        _plane_component_spark_md5,
-        plane_component_py,
-    )
-
-    pairs = [(p, d) for p in (0, 3, 31) for d in (0, 17, 63)]
-    cols = [_plane_component_spark_md5(p, d).alias(f"c{i}")
-            for i, (p, d) in enumerate(pairs)]
-    [row] = spark.range(1).select(*cols).collect()
-    for i, (p, d) in enumerate(pairs):
-        assert row[f"c{i}"] == plane_component_py(p, d), (p, d)
-
-
-def test_cosine_numpy_impl_matches_sql_impl(spark):
-    from pyspark.sql import functions as F
-
-    from pmcanalysis_spark.operators.similarity import cosine_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") < 30)
-
-    def rows(impl):
-        out = cosine_topk(emb, queries=qs, k=3, impl=impl).select(
-            F.col("query_id").cast("long"), F.col("item_id").cast("long"),
-            F.round("cosine", 6).alias("cosine"), F.col("rank").cast("int"),
-        )
-        return sorted(tuple(r) for r in out.collect())
-
-    assert rows("numpy") == rows("sql")
 
 
 def test_chunk_pairs_bounded_and_exact(spark):
@@ -177,7 +100,7 @@ def test_ivf_topk_mega_cell_chunked_identical(spark):
     cents = [(0, [1.0] * 64)]
 
     def rows(mgs):
-        out = ivf_topk(emb, cents, k=3, impl="numpy", max_group_size=mgs).select(
+        out = ivf_topk(emb, cents, k=3, max_group_size=mgs).select(
             "query_id", "item_id", F.round("cosine", 6).alias("cosine"), "rank"
         )
         return sorted(tuple(r) for r in out.collect())
@@ -187,36 +110,65 @@ def test_ivf_topk_mega_cell_chunked_identical(spark):
 
 
 def test_lsh_topk_chunked_matches_sql(spark):
-    """The chunked numpy path still equals the SQL impl row-for-row."""
+    """The chunked LSH path equals the uncapped one-matmul-per-bucket path
+    row for row (the bucket assignment itself is pinned by the
+    ``sim_lsh_topk`` DuckDB oracle)."""
     from pyspark.sql import functions as F
 
     from pmcanalysis_spark.operators.similarity import lsh_bucketed_topk
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
-    def rows(impl, mgs=4096):
+    def rows(mgs):
         out = lsh_bucketed_topk(
-            emb, dim=64, num_planes=4, k=3, impl=impl, max_group_size=mgs
+            emb, dim=64, num_planes=4, k=3, max_group_size=mgs
         ).select(
             "query_id", "item_id", F.round("cosine", 6).alias("cosine"), "rank"
         )
         return sorted(tuple(r) for r in out.collect())
 
     # 4 planes over 1500 vectors -> buckets of ~90; cap 32 forces chunking
-    assert rows("numpy", mgs=32) == rows("sql")
+    capped = rows(32)
+    assert capped == rows(None) and len(capped) == 3 * emb.count()
+
+
+def _brute_topk(vecs, k, group=None):
+    """Reference top-k by cosine in plain numpy: (query, item, ROUND(cos, 6),
+    rank) over every pair in the same ``group`` (all pairs when None),
+    self-pairs excluded, zero norms guarded to 1, ties to the lower id."""
+    import numpy as np
+
+    ids = [i for i, _ in vecs]
+    X = np.asarray([v for _, v in vecs], dtype="float64")
+    n = np.sqrt((X * X).sum(axis=1))
+    n[n == 0.0] = 1.0
+    S = (X @ X.T) / np.outer(n, n)
+    out = []
+    for a, q in enumerate(ids):
+        cand = sorted(
+            (-S[a, b], i)
+            for b, i in enumerate(ids)
+            if b != a and (group is None or group[q] == group[i])
+        )[:k]
+        out += [(q, i, round(-c, 6), r) for r, (c, i) in enumerate(cand, 1)]
+    return sorted(out)
 
 
 def test_zero_vector_impls_agree(spark):
-    """Regression (ADVICE r2): a degenerate all-zero vector must score
-    cosine 0 (zero-norm guard) in BOTH impls of every kernel — unguarded,
-    numpy emitted NaNs that were silently dropped while SQL ranked NaN
-    cosines FIRST, so the impls diverged on degenerate input."""
+    """Regression: a degenerate all-zero vector must score cosine 0
+    (zero-norm guard) in every kernel — unguarded, the numpy kernels
+    emitted NaNs that were silently dropped, and a NaN ranks FIRST under
+    Spark's descending order. Each kernel's rows equal a numpy brute force
+    over the same candidate groups."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from pmcanalysis_spark.operators.similarity import (
         cosine_topk,
+        ivf_assign,
         ivf_topk,
         lsh_bucketed_topk,
+        plane_component_py,
     )
 
     vecs = VECS + [(6, [0.0, 0.0, 0.0, 0.0])]
@@ -229,28 +181,31 @@ def test_zero_vector_impls_agree(spark):
         )
         return sorted(tuple(r) for r in out.collect())
 
-    # cosine_topk: numpy needs an explicit bounded query side
-    sql = rows(cosine_topk(emb, queries=emb, k=3, impl="sql"))
-    npy = rows(cosine_topk(emb, queries=emb, k=3, impl="numpy"))
-    assert sql == npy
-    assert all(not (c != c) for (_, _, c, _) in sql)  # no NaNs survive
-    # the zero vector scores 0 against everything, never first
-    zero_ranks = [(i, c) for (q, i, c, _) in sql if q == 6]
-    assert all(c == 0.0 for _, c in zero_ranks)
+    got = rows(cosine_topk(emb, queries=emb, k=3))
+    assert all(c == c for (_, _, c, _) in got)  # no NaNs survive
+    # the zero vector scores 0 against everything, and never ranks first
+    assert [c for (q, _, c, _) in got if q == 6] == [0.0, 0.0, 0.0]
+    assert all(i != 6 for (_, i, _, r) in got if r == 1)
+    assert got == _brute_topk(vecs, 3)
 
     cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
-    assert rows(ivf_topk(emb, cents, k=3, impl="numpy")) == rows(
-        ivf_topk(emb, cents, k=3, impl="sql")
-    )
-    assert rows(lsh_bucketed_topk(emb, dim=4, num_planes=4, k=3, impl="numpy")) == rows(
-        lsh_bucketed_topk(emb, dim=4, num_planes=4, k=3, impl="sql")
+    cell = {r["id"]: r["cell"] for r in ivf_assign(emb, cents).collect()}
+    assert cell[6] == 0  # all-zero cosines: ties go to the first centroid
+    assert rows(ivf_topk(emb, cents, k=3)) == _brute_topk(vecs, 3, cell)
+
+    P = np.asarray([[plane_component_py(p, d) for d in range(4)] for p in range(4)])
+    bucket = {
+        i: int(((np.asarray(v) @ P.T) >= 0.0) @ (1 << np.arange(4))) for i, v in vecs
+    }
+    assert rows(lsh_bucketed_topk(emb, dim=4, num_planes=4, k=3)) == _brute_topk(
+        vecs, 3, bucket
     )
 
 
 def test_train_centroids_matches_numpy_lloyds(spark):
     """Distributed trainer == independent scalar Lloyd's (same init, same
     fixed iterations, cosine assignment + plain mean update) within the
-    decimal-vs-float sum ulp; lowest-cell tie-break; both impls agree."""
+    decimal-vs-float sum ulp; lowest-cell tie-break."""
     import numpy as np
 
     from pmcanalysis_spark.operators.similarity import train_centroids
@@ -278,12 +233,11 @@ def test_train_centroids_matches_numpy_lloyds(spark):
             }
         return cents
 
-    for impl in ("numpy", "sql"):
-        got = dict(train_centroids(emb, init, n_iter=2, impl=impl))
-        want = ref_lloyds(2)
-        assert sorted(got) == sorted(want)
-        for c in got:
-            assert np.allclose(got[c], want[c], atol=1e-9), (impl, c)
+    got = dict(train_centroids(emb, init, n_iter=2))
+    want = ref_lloyds(2)
+    assert sorted(got) == sorted(want)
+    for c in got:
+        assert np.allclose(got[c], want[c], atol=1e-9), c
 
 
 def test_train_centroids_exact_and_empty_cell(spark):
@@ -327,7 +281,7 @@ def test_train_centroids_improves_single_probe_recall(spark):
 
     def recall(cents):
         got: dict = {}
-        for r in ivf_topk(emb, cents, k=3, impl="numpy").collect():
+        for r in ivf_topk(emb, cents, k=3).collect():
             got.setdefault(r["query_id"], set()).add(r["item_id"])
         return sum(len(got.get(q, set()) & truth[q]) for q in truth) / (3 * len(truth))
 
@@ -337,8 +291,8 @@ def test_train_centroids_improves_single_probe_recall(spark):
 
 
 def test_pq_encode_impls_agree_and_adc_python_replica(spark):
-    """PQ: numpy and sql encodes are row-identical under the ROUND(6)+
-    lowest-code rule; ADC distances match a straight-Python replica of
+    """PQ: every vector's codes equal a straight-Python replica of the
+    ROUND(6)+lowest-code encode rule; ADC distances match a replica of
     encode + LUT-gather; and the codes actually compress (m longs per
     vector)."""
     from pmcanalysis_spark.operators.similarity import (
@@ -355,9 +309,8 @@ def test_pq_encode_impls_agree_and_adc_python_replica(spark):
     cbs = pq_codebooks_from_vectors(seeds, m=8)
     assert len(cbs) == 8 and len(cbs[0]) == 16 and len(cbs[0][0][1]) == 8
 
-    a = {r.id: tuple(r.codes) for r in pq_encode(emb, cbs, impl="numpy").collect()}
-    b = {r.id: tuple(r.codes) for r in pq_encode(emb, cbs, impl="sql").collect()}
-    assert a == b and len(a) == emb.count()
+    a = {r.id: list(r.codes) for r in pq_encode(emb, cbs).collect()}
+    assert len(a) == emb.count()
     assert all(len(c) == 8 for c in a.values())
 
     # python replica of encode + ADC on a query
@@ -378,7 +331,7 @@ def test_pq_encode_impls_agree_and_adc_python_replica(spark):
                     best = (d, c)
             out.append(best[1])
         return out
-    assert [list(a[i]) for i in sorted(a)][:20] == [enc(vecs[i]) for i in sorted(a)][:20]
+    assert a == {i: enc(v) for i, v in vecs.items()}
 
     qid = 0
     q = vecs[qid]
@@ -439,10 +392,10 @@ def test_pq_adc_recall_vs_exact(spark):
 
 
 def test_ivfpq_impls_agree_and_probe_semantics(spark):
-    """IVFADC: numpy and sql impls row-identical; a query only sees items
-    from its nprobe probed cells (the routing contract); with nprobe =
-    n_cells the scan covers every item, and results stay identical across
-    partitioning."""
+    """IVFADC: a query gets k rows, only items from its nprobe probed
+    cells (the routing contract); with nprobe = n_cells the scan covers
+    every item, and results stay identical across partitioning. The
+    distances themselves are pinned by the ``sim_ivfpq`` DuckDB oracle."""
     from pmcanalysis_spark.operators.similarity import (
         ivf_assign,
         ivfpq_topk,
@@ -455,11 +408,9 @@ def test_ivfpq_impls_agree_and_probe_semantics(spark):
     cbs = pq_codebooks_from_vectors([vecs[i] for i in range(16)], m=8)
     queries = [(i, vecs[i]) for i in (0, 1, 2)]
 
-    a = ivfpq_topk(emb, cents, cbs, queries, k=10, nprobe=2, impl="numpy")
-    b = ivfpq_topk(emb, cents, cbs, queries, k=10, nprobe=2, impl="sql")
+    a = ivfpq_topk(emb, cents, cbs, queries, k=10, nprobe=2)
     ra = sorted((r.query_id, r.item_id, r.adist, r.rank) for r in a.collect())
-    rb = sorted((r.query_id, r.item_id, r.adist, r.rank) for r in b.collect())
-    assert ra == rb and len(ra) == 30
+    assert len(ra) == 30
 
     # routing contract: returned items belong to the query's 2 best cells
     cell_of = {
@@ -488,9 +439,8 @@ def ra_rows(rows, qid):
 
 
 def test_train_pq_codebooks(spark):
-    """Per-subspace Lloyd's trainer: numpy and sql assignment paths yield
-    identical books; training reduces subspace distortion on planted
-    clusters; a codeword that captures nothing keeps its previous value;
+    """Per-subspace Lloyd's trainer: training reduces subspace distortion
+    on planted clusters; a codeword that captures nothing keeps its previous value;
     and the decimal-mean recipe makes the result partition-invariant."""
     from pmcanalysis_spark.operators.similarity import (
         pq_codebooks_from_vectors,
@@ -510,9 +460,7 @@ def test_train_pq_codebooks(spark):
     far = [1e6] * 4
     init = [cb + [(len(cb), list(far))] for cb in init]
 
-    a = train_pq_codebooks(emb, init, n_iter=2, impl="numpy")
-    b = train_pq_codebooks(emb, init, n_iter=2, impl="sql")
-    assert a == b
+    a = train_pq_codebooks(emb, init, n_iter=2)
     assert len(a) == 4 and all(len(cb) == 5 for cb in a)
     # empty codeword kept verbatim (never renumbered, never dropped)
     assert all(cb[-1] == (4, far) for cb in a)
@@ -532,5 +480,5 @@ def test_train_pq_codebooks(spark):
 
     assert distortion(a) < distortion(init) * 0.5
 
-    c = train_pq_codebooks(emb.repartition(7), init, n_iter=2, impl="numpy")
+    c = train_pq_codebooks(emb.repartition(7), init, n_iter=2)
     assert c == a
