@@ -12,27 +12,40 @@ location, fsync, rename the manifest last); swap ``format("parquet")`` for
 ``format("iceberg")`` and the manifest for the catalog and nothing else
 changes shape.
 
-Lineage rows come from one aggregate over the freshly written snapshot
-(a second scan of the data, one job): one row per partition, collected to
-the driver, which derives the stage's row and partition counts from them
-and writes them next to the data.
+Lineage rows come from the Parquet footers of the freshly written files, the
+sandbox's stand-in for the Iceberg manifest, which keeps the same numbers per
+data file (``record_count``, ``lower_bounds``, ``upper_bounds``). The driver
+reads each ``part-NNNNN-*.parquet`` footer: the write task's partition id from
+the file name, the row count, and the key column's min/max from the row-group
+statistics. No second scan of the data and no Spark job beyond the write
+itself; the driver writes the few rows next to the data with pyarrow. Parquet
+leaves min/max out of a footer when a value exceeds its 4 KB statistics
+limit, so a partition holding such a key records NULL bounds.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, StringType
 
 from .schemas import LINEAGE
 
 MANIFEST = "_lineage_manifest.json"
+# key types whose Parquet min/max, printed with str(), equal Spark's
+# CAST(min/max(key) AS STRING): UTF-8 strings order bytewise in both
+_KEY_TYPES = (StringType, ByteType, ShortType, IntegerType, LongType)
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet")
 
 
 @dataclass
@@ -90,19 +103,46 @@ def try_resume(
     )
 
 
-def partition_lineage(df: DataFrame, key_col: str) -> DataFrame:
-    """Per-partition lineage rows computed in one pass over the data:
-    (partition_id, row_count, min_key, max_key). Used standalone when the
-    caller wants lineage without a full checkpoint."""
-    return (
-        df.select(F.spark_partition_id().alias("partition_id"), F.col(key_col))
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("row_count"),
-            F.min(key_col).cast("string").alias("min_key"),
-            F.max(key_col).cast("string").alias("max_key"),
-        )
-    )
+def _footer_lineage(data_path: str, key_col: str) -> list[tuple[int, int, str | None, str | None]]:
+    """(partition_id, row_count, min_key, max_key) per write partition, read
+    from the footers of the ``part-*.parquet`` files under ``data_path``.
+    Empty files are skipped and the files of one partition (several under
+    ``maxRecordsPerFile``) merge into one row. An all-NULL row group adds no
+    bounds; one with values but no footer min/max (a key over the 4 KB
+    statistics limit) makes its partition's bounds NULL."""
+    parts: dict[int, list] = {}  # partition id -> [rows, min, max, bounds known]
+    for name in os.listdir(data_path):
+        m = _PART_FILE.fullmatch(name)
+        if not m:
+            continue
+        md = pq.read_metadata(os.path.join(data_path, name))
+        if not md.num_rows:
+            continue
+        col = next(i for i in range(md.num_columns) if md.schema.column(i).path == key_col)
+        acc = parts.setdefault(int(m.group(1)), [0, None, None, True])
+        acc[0] += md.num_rows
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            st = rg.column(col).statistics
+            if st is not None and st.has_min_max:
+                acc[1] = st.min if acc[1] is None else min(acc[1], st.min)
+                acc[2] = st.max if acc[2] is None else max(acc[2], st.max)
+            elif st is None or not st.has_null_count or st.null_count < rg.num_rows:
+                acc[3] = False
+    return [
+        (pid, n, *((str(lo), str(hi)) if known and lo is not None else (None, None)))
+        for pid, (n, lo, hi, known) in sorted(parts.items())
+    ]
+
+
+def _write_lineage(path: str, rows: list[tuple]) -> None:
+    """Write the lineage rows from the driver as one Parquet file with the
+    ``LINEAGE`` schema (a zero-row file for an empty stage)."""
+    schema = to_arrow_schema(LINEAGE)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
 
 def materialize_stage(
@@ -111,17 +151,29 @@ def materialize_stage(
     base_dir: str,
     key_col: str,
     input_fingerprint_extra: str = "",
-    partition_by: list[str] | None = None,
     fingerprint: str | None = None,
 ) -> tuple[DataFrame, StageResult]:
-    """Write ``df`` as the checkpoint of ``stage`` and return (re-read df,
-    result). If a committed manifest with the same input fingerprint exists,
-    SKIP the write and resume from the snapshot (north_rule resume path).
+    """Write ``df`` as the checkpoint of ``stage`` and return (the snapshot
+    read back lazily, result). If a committed manifest with the same input
+    fingerprint exists, SKIP the write and resume from the snapshot
+    (north_rule resume path).
 
-    Lineage is written next to the data as ``<stage>/lineage`` parquet with
-    schema (stage, partition_id, row_count, min_key, max_key, wall_ms,
-    run_id).
+    It starts no Spark job beyond the data write's. Lineage is written next
+    to the data as ``<stage>/lineage`` parquet with schema (stage, partition_id,
+    row_count, min_key, max_key, wall_ms, run_id), one row per write
+    partition that holds rows, taken from the Parquet footers:
+    ``partition_id`` is the partition that wrote the data, min/max_key equal
+    ``CAST(min/max(key_col) AS STRING)``, and both are NULL for a partition
+    with a key over Parquet's 4 KB statistics limit. ``wall_ms`` is the
+    stage's, on every row. ``key_col`` must be a string or integer column
+    (``TypeError`` otherwise, before anything is written).
     """
+    key_type = df.schema[key_col].dataType
+    if not isinstance(key_type, _KEY_TYPES):
+        raise TypeError(
+            f"materialize_stage: key_col {key_col!r} is {key_type.simpleString()}; "
+            "lineage bounds need a string or integer key"
+        )
     spark = df.sparkSession
     path = os.path.join(base_dir, stage)
     manifest_path = os.path.join(path, MANIFEST)
@@ -150,20 +202,17 @@ def materialize_stage(
     run_id = uuid.uuid4().hex[:12]
     t0 = time.perf_counter()
     data_path = os.path.join(path, "data")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(data_path)
-    out = spark.read.parquet(data_path)
-    # one job gathers the per-partition rows; both counts come from them and
-    # the driver writes them back (one row per partition: small)
-    parts = partition_lineage(out, key_col).collect()
-    row_count = sum(r["row_count"] for r in parts)
+    df.write.mode("overwrite").parquet(data_path)
+    # the known schema spares the re-read a schema-inference job
+    out = spark.read.schema(df.schema).parquet(data_path)
+    parts = _footer_lineage(data_path, key_col)
+    row_count = sum(r[1] for r in parts)
     n_parts = len(parts)
     lineage_wall_ms = int((time.perf_counter() - t0) * 1000)
-    spark.createDataFrame(
-        [(stage, *r, lineage_wall_ms, run_id) for r in parts], LINEAGE
-    ).write.mode("overwrite").parquet(os.path.join(path, "lineage"))
+    _write_lineage(
+        os.path.join(path, "lineage"),
+        [(stage, *r, lineage_wall_ms, run_id) for r in parts],
+    )
     wall_ms = int((time.perf_counter() - t0) * 1000)
     # manifest rename-last = the commit point (Iceberg snapshot analog)
     tmp = manifest_path + ".tmp"

@@ -1577,8 +1577,9 @@ def semantic_decontaminate(
 
     def part(batches):
         Em = np.asarray(E, dtype="float64")
-        en = np.sqrt((Em * Em).sum(axis=1))
-        en[en == 0.0] = 1.0
+        if len(Em):
+            en = np.sqrt((Em * Em).sum(axis=1))
+            en[en == 0.0] = 1.0
         for pdf in batches:
             if not len(pdf):
                 continue

@@ -15,6 +15,8 @@ fixture corpus instead of reading --input.
 
 Every stage checkpoints through lineage.materialize_stage: re-running with
 identical inputs resumes from the committed snapshots (prints "resumed").
+The summary's ``n_partitions`` counts the write partitions of the triples
+stage that hold rows (one lineage row each, from the Parquet footers).
 """
 
 from __future__ import annotations

@@ -812,6 +812,22 @@ def test_semantic_decontaminate_flags_planted_paraphrases(spark):
     assert got == {i: (m, m >= 0.95) for i, m in want.items()}
 
 
+def test_semantic_decontaminate_empty_eval_set(spark):
+    """With no eval vectors nothing can be near one: every corpus row comes
+    back with max_sim -inf and not contaminated."""
+    from pmcanalysis_spark.operators.dedup import semantic_decontaminate
+
+    ev = spark.createDataFrame([], "vec_id long, vec array<double>")
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 2.0]), (3, [0.0, 0.0])], "vec_id long, vec array<double>"
+    )
+    got = {
+        r.vec_id: (r.max_sim, r.contaminated)
+        for r in semantic_decontaminate(corpus, ev).collect()
+    }
+    assert got == {i: (float("-inf"), False) for i in (1, 2, 3)}
+
+
 def test_minhash_signatures_duplicate_invariant_raw_path(spark):
     """r6: the default raw-gram path (no per-doc distinct) must produce the
     same signatures as an explicitly distinct shingle table — a min over

@@ -106,6 +106,128 @@ def test_fingerprint_stable_across_udf_rebuild(spark):
     assert _fingerprint(build()) == _fingerprint(build())
 
 
+
+def _spark_lineage(spark, base, stage, key_col):
+    """The lineage a full scan would give: count/min/max of ``key_col`` per
+    written file, keyed by the partition id in the file name."""
+    from pyspark.sql import functions as F
+
+    pid = F.regexp_extract(F.input_file_name(), r"part-(\d+)-", 1).cast("int")
+    rows = (
+        spark.read.parquet(os.path.join(base, stage, "data"))
+        .groupBy(pid.alias("partition_id"))
+        .agg(
+            F.count("*").alias("n"),
+            F.min(key_col).cast("string").alias("lo"),
+            F.max(key_col).cast("string").alias("hi"),
+        )
+        .collect()
+    )
+    return {r.partition_id: (r.n, r.lo, r.hi) for r in rows}
+
+
+def _footer_rows(spark, base, stage):
+    return {
+        r.partition_id: (r.row_count, r.min_key, r.max_key)
+        for r in read_lineage(spark, base, stage).collect()
+    }
+
+
+def test_footer_lineage_equals_scan_long_key(spark, tmp_path):
+    base = str(tmp_path / "stages")
+    df = spark.range(0, 5000, 7, numPartitions=5).selectExpr("id * 1000003 AS k", "id")
+    _, res = materialize_stage(df, "s", base, key_col="k")
+    want = _spark_lineage(spark, base, "s", "k")
+    assert _footer_rows(spark, base, "s") == want
+    assert len(want) == 5 == res.n_partitions
+    assert res.row_count == sum(n for n, _, _ in want.values()) == df.count()
+
+
+def test_footer_lineage_equals_scan_non_ascii_string_key(spark, tmp_path):
+    """Bounds order by UTF-8 bytes, as Spark's string min/max does; NULL
+    keys count as rows but not as bounds."""
+    base = str(tmp_path / "stages")
+    words = ["abc", "Zeta", "é", "日本語", "\uffff", "😀", "ß", "a\u0301", None]
+    rows = [(w if w is None else f"{w}{i % 3}", i) for i, w in enumerate(words * 20)]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), "name string, i int")
+    _, res = materialize_stage(df, "s", base, key_col="name")
+    want = _spark_lineage(spark, base, "s", "name")
+    assert _footer_rows(spark, base, "s") == want
+    assert res.row_count == len(rows) and res.n_partitions == 4
+    assert max(hi for _, _, hi in want.values()) == "😀2"
+
+
+def test_key_over_statistics_limit_gives_null_bounds(spark, tmp_path):
+    """Parquet keeps no footer min/max for a value over 4 KB, so that
+    partition's bounds are NULL; its count, and the other partition's
+    bounds, are still exact."""
+    base = str(tmp_path / "stages")
+    rows = [("k" * 5000, 0), ("a", 1), ("b", 2), ("c", 3)]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), "name string, i int")
+    _, res = materialize_stage(df, "s", base, key_col="name")
+    assert _footer_rows(spark, base, "s") == {0: (2, None, None), 1: (2, "b", "c")}
+    assert (res.row_count, res.n_partitions) == (4, 2)
+
+
+def test_empty_stage_lineage(spark, tmp_path):
+    from pmcanalysis_spark.schemas import LINEAGE
+
+    base = str(tmp_path / "stages")
+    df = spark.range(100).selectExpr("id").filter("id < 0")
+    out, res = materialize_stage(df, "s", base, key_col="id")
+    assert (res.row_count, res.n_partitions) == (0, 0)
+    assert out.count() == 0
+    lin = read_lineage(spark, base, "s")
+    assert lin.columns == LINEAGE.fieldNames()
+    assert lin.count() == 0
+
+
+def test_several_files_per_partition_merge_into_one_row(spark, tmp_path):
+    base = str(tmp_path / "stages")
+    df = spark.range(0, 1000, 1, numPartitions=2).selectExpr("id")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", 100)
+    try:
+        _, res = materialize_stage(df, "s", base, key_col="id")
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    files = [f for f in os.listdir(os.path.join(base, "s", "data")) if f.startswith("part-")]
+    assert len(files) == 10
+    assert _footer_rows(spark, base, "s") == {0: (500, "0", "499"), 1: (500, "500", "999")}
+    assert (res.row_count, res.n_partitions) == (1000, 2)
+
+
+def test_non_string_non_integer_key_rejected_before_write(spark, tmp_path):
+    base = str(tmp_path / "stages")
+    df = spark.range(10).selectExpr("id", "id / 2 AS score")
+    with pytest.raises(TypeError, match="score"):
+        materialize_stage(df, "s", base, key_col="score")
+    assert not os.path.exists(base)
+
+
+def _jobs_started(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_materialize_runs_no_job_beyond_the_write(spark, tmp_path):
+    """Lineage costs no extra scan: materializing a stage starts no more
+    Spark jobs than writing the same DataFrame."""
+    df = spark.range(2000).selectExpr("id % 50 AS k", "id").groupBy("k").count()
+    write = _jobs_started(
+        spark, "lineage-write", lambda: df.write.parquet(str(tmp_path / "plain"))
+    )
+    stage = _jobs_started(
+        spark, "lineage-stage",
+        lambda: materialize_stage(df, "s", str(tmp_path / "stages"), key_col="k"),
+    )
+    assert write >= 1
+    assert stage <= write
+
 @pytest.mark.slow
 def test_resume_completes_downstream_stages(tmp_path):
     """Regression (ADVICE r1, medium): rerunning after a crash between the
