@@ -244,18 +244,11 @@ def q_kg_closure_docfreq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kg_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6: ancestor count roll-up (sum of descendant doc-freqs + own)."""
+    from pmcanalysis_spark.operators.sentence_grain import rollup_counts
+
     m = _mentions(spark, sf_dir)
     base = m.groupBy("term_id").agg(F.countDistinct("doc_id").alias("cnt"))
-    inherited = (
-        base.join(F.broadcast(_hier_df(spark)), "term_id")
-        .groupBy(F.col("ancestor_id").alias("term_id"))
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    return (
-        base.unionByName(inherited)
-        .groupBy("term_id")
-        .agg(F.sum("cnt").alias("rolled"))
-    )
+    return rollup_counts(base, _hier_df(spark)).withColumnRenamed("cnt", "rolled")
 
 
 def q_kg_leaf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -664,9 +657,9 @@ def _chunk_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kg_sent_occurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5: per-term mention occurrence counts at sentence(chunk) grain —
     every mention counts, multimapped ids each increment."""
-    return _chunk_mentions(spark, sf_dir).groupBy("term_id").agg(
-        F.count("*").alias("cnt")
-    )
+    from pmcanalysis_spark.operators.sentence_grain import mention_occurrence_counts
+
+    return mention_occurrence_counts(_chunk_mentions(spark, sf_dir))
 
 
 def q_kg_sent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2282,17 +2275,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # The driver gates only the FIRST 50 registry entries, so gate membership
-    # is a deliberate documented rotation (COVERAGE.md "Driver-gate rotation").
-    # Final r5 gate = _R5_GATE below: ALL 37 queries that have never earned a
-    # driver CORRECTNESS row (the 18 from VERDICT r4 next-step #1, plus every
-    # r5-new query including the late additions) + 13 kept veterans (flagship
-    # trio, CC, the r4 first-rounders on their 2nd round, the dedup/ANN scale
-    # heads). Displaced veterans all carry 3-4 green driver rounds and remain
-    # exercised by the full-registry local oracle replica (tests/test_entry.py
-    # runs EVERY entry against DuckDB; CI runs it at two SFs).
     base = {
-        # -- core KG family (kept in-gate: flagship + closure + serving) --
         "kg_mentions_docfreq": q_kg_mentions_docfreq,
         "kg_corpus_size": q_kg_corpus_size,
         "kg_pair_counts": q_kg_pair_counts,
@@ -2305,7 +2288,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_cutoff_auc": q_kg_cutoff_auc,
         "kg_connected_components": q_kg_connected_components,
         "kg_serving_conjunction": q_kg_serving_conjunction,
-        # -- r4 rotations staying for a 2nd driver round --
         "ev_topk_users": q_ev_topk_users,
         "ts_pii_redact": q_ts_pii_redact,
         "ts_vocab_encode": q_ts_vocab_encode,
@@ -2313,7 +2295,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mm_image_features": q_mm_image_features,
         "mm_audio_features": q_mm_audio_features,
         "mm_video_frames": q_mm_video_frames,
-        # -- ANN / linking / scale-path dedup (kept in-gate) --
         "sim_ivf_topk": q_sim_ivf_topk,
         "sim_lsh_topk": q_sim_lsh_topk,
         "link_scores": q_link_scores,
@@ -2322,7 +2303,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dd_text_neardup_clusters": q_dd_text_neardup_clusters,
         "dd_embedding_neardup_scalable": q_dd_embedding_neardup_scalable,
         "ts_top_ngrams": q_ts_top_ngrams,
-        # -- rotated IN for r5: never driver-gated before (r4 additions) --
         "ts_pack_sequences": q_ts_pack_sequences,
         "ts_stratified_sample": q_ts_stratified_sample,
         "dd_url_dedup": q_dd_url_dedup,
@@ -2341,15 +2321,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ev_rollup_multigrain": q_ev_rollup_multigrain,
         "ts_token_budget": q_ts_token_budget,
         "dd_minhash_est": q_dd_minhash_est,
-        # -- NEW in r5 (gated in their first round; kg_obo_docfreq, green
-        # -- r1-r4, rotated to 51+ to make the slot) --
         "dd_repeated_runs": q_dd_repeated_runs,
         "dd_cut_runs": q_dd_cut_runs,
         "kg_snippets": q_kg_snippets,
         "ts_length_quantiles": q_ts_length_quantiles,
-        # --- position 51+ (driver-ungated this round; every entry below is
-        # --- green in the full-registry local oracle replica and has >= 2
-        # --- green driver rounds on record, see COVERAGE.md) ---
         "kg_hierarchy_rollup": q_kg_hierarchy_rollup,
         "kg_obo_docfreq": q_kg_obo_docfreq,
         "kg_leaf_terms": q_kg_leaf_terms,
@@ -2384,8 +2359,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_triples_named": q_kg_triples_named,
         "lex_autocomplete": q_lex_autocomplete,
         "dd_embedding_neardup": q_dd_embedding_neardup,
-        # -- NEW in r5 (added after the r5 gate was locked; slated to rotate
-        # -- into the r6 gate per COVERAGE.md) --
         "sim_ivf_trained": q_sim_ivf_trained,
         "kg_pagerank2": q_kg_pagerank2,
         "dd_decontaminate": q_dd_decontaminate,
@@ -2403,50 +2376,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ts_dataset_split": q_ts_dataset_split,
         "src_warc_roundtrip": q_src_warc_roundtrip,
         "src_warc_sink": q_src_warc_sink,
-        # -- NEWEST in r5: gated in their first round (ev_topk_users and
-        # -- ts_pii_redact, both 2+ green driver rounds, rotate to 51+) --
         "dd_line_dedup": q_dd_line_dedup,
         "ts_dsir_weights": q_ts_dsir_weights,
-        # -- link-graph family (r5): gated first-round; the two dedup scale
-        # -- heads (2 and 3 green rounds) rotate to 51+ --
         "kg_host_graph": q_kg_host_graph,
         "kg_host_rank": q_kg_host_rank,
-        # -- anchor-text entity linking (r5): gated first-round;
-        # -- ts_vocab_encode (r4 green) rotates to 51+ --
         "link_anchor_entities": q_link_anchor_entities,
-        # -- harmonic host centrality (r5): gated first-round;
-        # -- mm_metadata (r4 green) rotates to 51+ --
         "kg_host_harmonic": q_kg_host_harmonic,
-        # -- embedding-grain decontamination (r5): gated first-round;
-        # -- mm_image_features (r4 green) rotates to 51+ --
         "dd_semantic_decontam": q_dd_semantic_decontam,
-        # -- perceptual image-hash family (r5, added after the final gate
-        # -- lock; slated for the r6 gate per COVERAGE.md; green in the
-        # -- full-registry local replica at 3 SFs) --
         "mm_image_ahash": q_mm_image_ahash,
         "dd_image_ahash_pairs": q_dd_image_ahash_pairs,
     }
-    gated = {k: base[k] for k in _R5_GATE}
+    gated = {k: base[k] for k in _GATE}
     assert len(gated) == 50
     return {**gated, **{k: v for k, v in base.items() if k not in gated}}
 
 
-# The 50 driver-gated entries for r5 (order = gate membership; see the
-# rotation rationale in queries() and COVERAGE.md "Driver-gate rotation").
-_R5_GATE = [
-    # kept veterans (4): the flagship trio + connected components (the
-    # engine's identity anchors). Yielded slots this round:
-    # ev_topk_users/ts_pii_redact (2+ greens) -> dd_line_dedup/
-    # ts_dsir_weights; dd_text_neardup_scalable (2 greens) /
-    # dd_embedding_neardup_scalable (3 greens) -> the link-graph family;
-    # ts_vocab_encode (r4 green) -> anchor linking; mm_metadata (r4
-    # green) -> harmonic host centrality; mm_image_features (r4 green)
-    # -> embedding-grain decontamination
+# The driver gates the first 50 registry entries: queries() puts _GATE first,
+# in this order, then every other entry in registry order. Every entry, gated
+# or not, runs against its DuckDB oracle in tests/test_entry.py. COVERAGE.md
+# "Driver-gate rotation" records how the list is chosen.
+_GATE = [
     "kg_mentions_docfreq",
     "kg_pair_counts",
     "kg_triples_scored",
     "kg_connected_components",
-    # first driver round: the 18 from VERDICT r4 #1
     "ts_pack_sequences",
     "ts_stratified_sample",
     "dd_url_dedup",
@@ -2465,7 +2418,6 @@ _R5_GATE = [
     "ev_rollup_multigrain",
     "ts_token_budget",
     "dd_minhash_est",
-    # first driver round: every r5-new query
     "dd_repeated_runs",
     "dd_cut_runs",
     "kg_snippets",

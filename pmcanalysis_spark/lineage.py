@@ -37,7 +37,14 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, StringType
+from pyspark.sql.types import (
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructType,
+)
 
 from .schemas import LINEAGE
 
@@ -87,16 +94,24 @@ def try_resume(
 ) -> tuple[DataFrame, StageResult] | None:
     """Resume path that never builds (or executes) the stage plan: if a
     committed manifest matches ``fingerprint``, return the snapshot, else
-    None. Callers with expensive plan construction check this FIRST."""
+    None. Callers with expensive plan construction check this FIRST.
+
+    The snapshot is read with the schema stored in the manifest, so resuming
+    starts no Spark job (a plain ``read.parquet`` runs a schema-inference
+    job). A manifest without a stored schema, as written before the field
+    existed, does not resume: such a stage is recomputed once."""
     path = os.path.join(base_dir, stage)
     manifest_path = os.path.join(path, MANIFEST)
     if not os.path.exists(manifest_path):
         return None
     with open(manifest_path) as f:
         m = json.load(f)
-    if not (m.get("committed") and m.get("input_fingerprint") == fingerprint):
+    if not (
+        m.get("committed") and m.get("input_fingerprint") == fingerprint and "schema" in m
+    ):
         return None
-    out = spark.read.parquet(os.path.join(path, "data"))
+    schema = StructType.fromJson(m["schema"])
+    out = spark.read.schema(schema).parquet(os.path.join(path, "data"))
     return out, StageResult(
         stage, path, m["run_id"], fingerprint, m["row_count"], m["n_partitions"],
         0, resumed=True,
@@ -186,10 +201,11 @@ def materialize_stage(
         # stale/uncommitted snapshot: discard and rebuild — but never delete
         # a previously COMMITTED snapshot silently (a fingerprint mismatch
         # there usually means changed inputs, which is legitimate, but the
-        # operator should see that an old snapshot was replaced)
+        # operator should see that an old snapshot was replaced). A committed
+        # one with a matching fingerprint only lacks the stored schema.
         with open(manifest_path) as f:
             m = json.load(f)
-        if m.get("committed"):
+        if m.get("committed") and m.get("input_fingerprint") != fp:
             import warnings
 
             warnings.warn(
@@ -225,6 +241,7 @@ def materialize_stage(
                 "row_count": row_count,
                 "n_partitions": n_parts,
                 "wall_ms": wall_ms,
+                "schema": df.schema.jsonValue(),
                 "committed": True,
             },
             f,

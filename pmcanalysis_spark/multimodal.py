@@ -717,50 +717,6 @@ def extract_media_features(
     )
 
 
-THUMBNAILS = StructType(
-    [
-        StructField("media_id", StringType(), False),
-        StructField("out_w", IntegerType(), False),
-        StructField("out_h", IntegerType(), False),
-        StructField("channels", IntegerType(), False),
-        StructField("pixels", BinaryType(), False),  # raw out_h*out_w*c RGB
-    ]
-)
-
-
-def decode_and_resize(media: DataFrame, out_w: int = 16, out_h: int = 16) -> DataFrame:
-    """REAL decode+resize pass for codec-free formats (BMP/PGM/PPM):
-    nearest-neighbor thumbnails as raw channel-interleaved bytes. Rows whose
-    payloads need a codec library are dropped (count them against
-    media_metadata to monitor coverage). Arrow-batched; the binary payload
-    column is the only wide column crossing Python."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mids, ws, hs, cs, px = [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                pixels = decode_pixels(bytes(payload) if payload is not None else b"")
-                if pixels is None:
-                    continue
-                thumb = resize_nearest(pixels, out_h, out_w)
-                mids.append(mid)
-                ws.append(out_w)
-                hs.append(out_h)
-                cs.append(int(thumb.shape[2]))
-                px.append(thumb.tobytes())
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(mids, dtype="object"),
-                    "out_w": pd.Series(ws, dtype="int32"),
-                    "out_h": pd.Series(hs, dtype="int32"),
-                    "channels": pd.Series(cs, dtype="int32"),
-                    "pixels": pd.Series(px, dtype="object"),
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(run, schema=THUMBNAILS)
-
-
 def image_ahash(media: DataFrame, size: int = 8) -> DataFrame:
     """(media_id, ahash bigint): average-hash perceptual fingerprint —
     decode (REAL, codec-free formats), luma, ``size``×``size`` thumbnail

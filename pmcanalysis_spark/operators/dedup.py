@@ -478,9 +478,7 @@ def neardup_signature_store(
     perturb a Jaccard by ~|A|·|B|/2^60 — vanishing, and the SQL oracle
     replays the identical hash so the check is still value-exact.
 
-    This is the batch twin of the streaming confirm state
-    (``streaming/neardup_stream``): same bucket keys, same packed shingle
-    store, but laid out as a plain table you append per crawl. ONE corpus
+    The store is a plain table you append per crawl. ONE corpus
     scan, ONE groupBy(doc): minhash mins, the bucket keys, and the sorted
     hash set all come out of the same aggregate.
     """
@@ -1466,8 +1464,7 @@ def common_lines(
     min_docs: int = 2,
 ) -> DataFrame:
     """(line_key): every normalized line form in >= ``min_docs`` DISTINCT
-    documents — the detection half of line dedup, also the batch twin of
-    `streaming/boilerplate_stream.streaming_common_lines`. The df count is
+    documents — the detection half of line dedup. The df count is
     groupBy(key, doc)-distinct FIRST — (key, doc_id) hashes spread a hot
     boilerplate line across all partitions — then a map-side-combinable
     count per key, so no single reducer ever sees a hot line's full
@@ -1494,16 +1491,14 @@ def apply_line_cut(
 ) -> DataFrame:
     """The CUT half of line dedup, decoupled from detection: strip every
     line whose normalized form appears in ``common_lines`` (one ``key_col``
-    row per boilerplate line — the `common_lines` detector's output, or
-    the emitted table of
-    `streaming/boilerplate_stream.streaming_common_lines`). Output:
+    row per boilerplate line — the `common_lines` detector's output).
+    Output:
     (doc_id, n_lines, n_removed, text), survivors rejoined in original
     order, whitespace-only lines dropped from counting and output.
     `line_dedup` IS common_lines + this function — one rebuild code path.
 
     Detect-once / cut-many is the operational shape at crawl scale: the
-    common-line set is a deploy artifact (refreshed daily by the stream or
-    a batch scan), and each ingest batch pays ONE hash join against it
+    common-line set is a deploy artifact (refreshed daily by a batch scan), and each ingest batch pays ONE hash join against it
     (``broadcast=True``, the default, for MB-scale artifacts; line_dedup
     passes False because its corpus-derived set is bounded only by
     distinct repeated lines) plus the unique-key per-doc rebuild; the

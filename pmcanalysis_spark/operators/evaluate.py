@@ -56,10 +56,10 @@ def precision_recall_by_cutoff(
 
 def pr_auc_df(pr: DataFrame) -> DataFrame:
     """Trapezoid area under the (recall, precision) curve as a 1-row
-    DataFrame — the oracle-comparable twin of ``pr_auc``. Ordering is the
-    deterministic (recall asc, cutoff asc): equal recalls at different
-    cutoffs would otherwise make the lag — and hence the AUC — order-
-    ambiguous. Each trapezoid term is ROUND(x, 6) then summed through
+    DataFrame (``auc``) — the GetAUC integration over the sweep output.
+    Ordering is the deterministic (recall asc, cutoff asc): equal recalls at
+    different cutoffs would otherwise make the lag — and hence the AUC —
+    order-ambiguous. Each trapezoid term is ROUND(x, 6) then summed through
     DECIMAL(28,6) so the sum is bit-stable across engines."""
     w = Window.orderBy(F.asc("recall"), F.asc("cutoff"))
     lagged = (
@@ -79,27 +79,6 @@ def pr_auc_df(pr: DataFrame) -> DataFrame:
     return lagged.agg(
         F.round(F.sum(area.cast("decimal(28,6)")).cast("double"), 6).alias("auc")
     )
-
-
-def pr_auc(pr: DataFrame) -> float:
-    """Trapezoid area under the (recall, precision) curve, recall ascending —
-    the GetAUC integration over the sweep output."""
-    w = Window.orderBy(F.asc("recall"))
-    row = (
-        pr.select("recall", "precision")
-        .withColumn("pr_", F.lag("recall").over(w))
-        .withColumn("pp_", F.lag("precision").over(w))
-        .withColumn(
-            "area",
-            F.when(
-                F.col("pr_").isNotNull(),
-                (F.col("recall") - F.col("pr_")) * (F.col("precision") + F.col("pp_")) / 2.0,
-            ).otherwise(F.lit(0.0)),
-        )
-        .agg(F.sum("area").alias("auc"))
-        .first()
-    )
-    return float(row["auc"] or 0.0)
 
 
 def triple_set_pr(

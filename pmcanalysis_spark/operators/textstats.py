@@ -290,41 +290,6 @@ def encode_docs(
     )
 
 
-def compression_ratio(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", level: int = 6
-) -> DataFrame:
-    """(doc_id, n_bytes, n_compressed, ratio): zlib-compressed size over raw
-    size — the standard cheap redundancy signal (near-duplicate boilerplate
-    and degenerate repetition compress far below prose; ratio ~0 flags
-    pathological docs, ratio near 1 flags already-compressed/random bytes).
-
-    zlib is CPU-side Python, so this is the one textstats operator that is
-    a mapInPandas pass instead of Column algebra (and correspondingly has
-    pytest goldens, not a DuckDB oracle) — still narrow, zero shuffle,
-    Arrow-batched."""
-    import pandas as pd
-    import zlib
-
-    def run(batches):
-        for pdf in batches:
-            texts = pdf[text_col].fillna("")
-            raw = texts.str.encode("utf-8")
-            n_bytes = raw.str.len().astype("int64")
-            n_comp = raw.map(lambda b: len(zlib.compress(b, level))).astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": n_bytes,
-                    "n_compressed": n_comp,
-                    "ratio": (n_comp / n_bytes.clip(lower=1)).round(6),
-                }
-            )
-
-    return docs.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        run, f"doc_id long, n_bytes long, n_compressed long, ratio double"
-    )
-
-
 def _two_phase_offsets(
     df: DataFrame,
     order_cols: list[str],

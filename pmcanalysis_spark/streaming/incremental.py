@@ -12,6 +12,11 @@ sound — but the re-score input is O(distinct doc-terms), orders of magnitude
 smaller than the raw pages, and its lineage fingerprint is the accumulator's
 file snapshot, so a drain that added nothing resumes the triples stage
 instead of recomputing it.
+
+This is the engine's one streaming path. The reference is batch-only; the
+scan stage is the one streaming-shaped part, because ``detect_doc_terms`` is
+a stateless mapInPandas and runs unchanged on ``spark.readStream`` over the
+web_pages schema.
 """
 
 from __future__ import annotations
@@ -19,10 +24,20 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ..pipeline import PipelineConfig, ancestor_map, triples_from_doc_terms
-from .ingest import read_web_pages_stream
+from ..schemas import WEB_PAGES
+
+
+def read_web_pages_stream(spark: SparkSession, path: str) -> DataFrame:
+    """File-source stream over a directory of web-page parquet drops.
+    In production: ``readStream.format("iceberg")`` on the same table."""
+    return (
+        spark.readStream.schema(WEB_PAGES)
+        .option("maxFilesPerTrigger", 16)
+        .parquet(path)
+    )
 
 
 def _snapshot_fingerprint(spark: SparkSession, path: str) -> str:

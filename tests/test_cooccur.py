@@ -14,7 +14,7 @@ from pmcanalysis_spark.schemas import HIERARCHY, WEB_PAGES
 
 def test_set_kernel_one_row_per_matched_page(spark):
     """One (doc_id, term_ids) row per page that matched any term, ids sorted
-    and closed over the hierarchy; passthrough values ride on that row."""
+    and closed over the hierarchy."""
     pages = build_web_pages(60)
     lexicon = build_lexicon()
     _, closure = build_hierarchy_terms()
@@ -23,7 +23,6 @@ def test_set_kernel_one_row_per_matched_page(spark):
         spark.createDataFrame(pages, WEB_PAGES),
         [(e.name, e.term_id) for e in lexicon],
         ancestors=ancestor_map(hier),
-        passthrough_cols=("warc_ts",),
     ).collect()
 
     expected: dict[str, set[str]] = defaultdict(set)
@@ -35,8 +34,6 @@ def test_set_kernel_one_row_per_matched_page(spark):
     assert {r.doc_id: r.term_ids for r in rows} == {
         d: sorted(ts) for d, ts in expected.items()
     }
-    warc_ts = {p["url"]: p["warc_ts"] for p in pages}
-    assert all(r.warc_ts == warc_ts[r.doc_id] for r in rows)
 
 
 def test_triples_from_doc_terms_ignores_duplicate_rows(spark):

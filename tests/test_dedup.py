@@ -782,6 +782,38 @@ def test_line_dedup_partition_invariance(spark):
     assert one == many
 
 
+def test_apply_line_cut_consumes_common_line_set(spark):
+    """Detect-once / cut-many: a precomputed common-line table drives
+    apply_line_cut through one broadcast join, and the result equals the
+    one-shot line_dedup."""
+    from pmcanalysis_spark.operators.dedup import apply_line_cut, common_lines, line_dedup
+
+    nav = "Home | About | Contact"
+    cookie = "Accept Cookies"
+    rows = [
+        (1, f"{nav}\nalpha article body\n{cookie}"),
+        (2, f"{nav}\nbeta article body"),
+        (3, f"{cookie}\ngamma article body"),
+        (4, "echo\necho\necho\ndelta body"),
+        (5, f"{nav}\n{cookie}\nepsilon body"),
+        (6, "echo\nzeta body"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    common = spark.createDataFrame(common_lines(docs, min_docs=2).collect(), "line_key string")
+    assert {r.line_key for r in common.collect()} == {nav.lower(), cookie.lower(), "echo"}
+
+    cut = apply_line_cut(docs, common)
+    via_cut = {r.doc_id: (r.n_lines, r.n_removed, r.text) for r in cut.collect()}
+    via_batch = {
+        r.doc_id: (r.n_lines, r.n_removed, r.text)
+        for r in line_dedup(docs, min_docs=2).collect()
+    }
+    assert via_cut == via_batch
+    assert via_cut[5] == (3, 2, "epsilon body")
+    plan = cut._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
+
+
 def test_semantic_decontaminate_flags_planted_paraphrases(spark):
     """An eval vector's scaled near-copy (no shared tokens needed) is
     flagged; an orthogonal vector is not; every max_sim equals the max over

@@ -61,28 +61,15 @@ def test_entry_smoke(spark):
     assert df.columns[0:3] == ["subj", "pred", "obj"]
 
 
-# every query now carries a SQL oracle (r2: sim_lsh_topk + link_scores gained
-# theirs — md5 planes regenerated via hashlib; tf-idf chain in SQL)
-ROWS_ONLY: set = set()
-
-
 def test_every_query_has_oracle():
     qs, osql = entrymod.queries(), entrymod.oracle_sql()
-    missing = set(qs) - set(osql) - ROWS_ONLY
+    missing = set(qs) - set(osql)
     assert not missing, f"queries without oracle: {missing}"
-
-
-@pytest.mark.parametrize("name", sorted(ROWS_ONLY))
-def test_rows_only_queries_run(spark, name):
-    df = entrymod.queries()[name](spark, SF_DIR)
-    assert df.count() > 0
 
 
 @pytest.mark.parametrize("name", QUERIES)
 def test_query_matches_oracle(spark, con, name):
     qs, osql = entrymod.queries(), entrymod.oracle_sql()
-    if name in ROWS_ONLY:
-        pytest.skip("rows-only query (no SQL oracle by design)")
     sdf = qs[name](spark, SF_DIR)
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]

@@ -3,7 +3,7 @@ from __future__ import annotations
 import math
 
 from pmcanalysis_spark.operators.evaluate import (
-    pr_auc,
+    pr_auc_df,
     precision_recall_by_cutoff,
     triple_set_pr,
 )
@@ -27,8 +27,10 @@ def test_precision_recall_by_cutoff(spark):
     # cutoff 3: all 5 predicted -> tp=3, precision=0.6, recall=1.0
     assert pr[3].tp == 3 and math.isclose(pr[3].precision, 0.6)
     assert math.isclose(pr[3].recall, 1.0)
-    auc = pr_auc(precision_recall_by_cutoff(scored, gold, max_cutoff=3))
-    assert 0.0 < auc <= 1.0
+    # cutoff 2: {d1p1, d1p2, d2q1, d2q2} -> tp=2, precision=0.5, recall=2/3;
+    # trapezoids (1/3)(0.5+0.5)/2 + (1/3)(0.5+0.6)/2 = 0.35
+    [row] = pr_auc_df(precision_recall_by_cutoff(scored, gold, max_cutoff=3)).collect()
+    assert math.isclose(row.auc, 0.35)
 
 
 def test_triple_set_pr(spark):

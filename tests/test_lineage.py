@@ -228,6 +228,44 @@ def test_materialize_runs_no_job_beyond_the_write(spark, tmp_path):
     assert write >= 1
     assert stage <= write
 
+
+def test_resume_starts_no_job(spark, tmp_path):
+    """A resumed stage reads its snapshot with the schema stored in the
+    manifest, so resuming starts no Spark job at all."""
+    df = spark.range(2000).selectExpr("id % 50 AS k", "id").groupBy("k").count()
+    base = str(tmp_path / "stages")
+    materialize_stage(df, "s", base, key_col="k")
+    resumed = {}
+
+    def resume():
+        resumed["out"], resumed["res"] = materialize_stage(df, "s", base, key_col="k")
+
+    assert _jobs_started(spark, "lineage-resume", resume) == 0
+    assert resumed["res"].resumed
+    assert resumed["out"].schema == spark.read.parquet(f"{base}/s/data").schema
+    assert resumed["out"].count() == 50
+
+
+def test_manifest_without_schema_is_recomputed(spark, tmp_path):
+    """A committed manifest that predates the stored schema does not resume:
+    the stage is rebuilt once and the new manifest carries the schema."""
+    base = str(tmp_path / "stages")
+    df = spark.range(50).selectExpr("id")
+    materialize_stage(df, "s", base, key_col="id")
+    mpath = os.path.join(base, "s", "_lineage_manifest.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    out, res = materialize_stage(df, "s", base, key_col="id")
+    assert not res.resumed and out.count() == 50
+    with open(mpath) as f:
+        assert "schema" in json.load(f)
+    _, res2 = materialize_stage(df, "s", base, key_col="id")
+    assert res2.resumed
+
+
 @pytest.mark.slow
 def test_resume_completes_downstream_stages(tmp_path):
     """Regression (ADVICE r1, medium): rerunning after a crash between the

@@ -208,23 +208,6 @@ def test_extract_media_features_real_pixels(spark):
     assert abs(feats[1]) < 1e-6  # zero std
 
 
-def test_decode_and_resize_spark_path(spark):
-    from pmcanalysis_spark.multimodal import MEDIA, decode_and_resize
-
-    rows = [[(1, 2, 3), (4, 5, 6)], [(7, 8, 9), (10, 11, 12)]]
-    data = [
-        ("ok", "image", "image/x-portable-pixmap", 30, bytearray(_tiny_ppm(2, 2, rows))),
-        ("codec", "image", "image/png", 20, bytearray(b"\x89PNG\r\n\x1a\nXXXXIHDR")),
-    ]
-    df = spark.createDataFrame(data, MEDIA)
-    got = decode_and_resize(df, out_w=4, out_h=4).collect()
-    assert [r["media_id"] for r in got] == ["ok"]  # codec-needing row dropped
-    r = got[0]
-    assert (r["out_w"], r["out_h"], r["channels"]) == (4, 4, 3)
-    assert len(bytes(r["pixels"])) == 4 * 4 * 3
-    assert bytes(r["pixels"])[:3] == bytes([1, 2, 3])
-
-
 def _make_png(pixels, color_type, filters, palette=None):
     """Forward-filtered PNG builder (the test-side inverse of the decoder's
     unfilter): pixels is an (h, w, c_raw) uint8 array in the color type's

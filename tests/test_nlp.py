@@ -58,64 +58,6 @@ def test_fixture_lexicon_edge_cases_present():
     assert len(by_name["tremor syndrome"]) == 2  # ambiguity
 
 
-# --- N4: POS/chunk + ngram expansion (ParseMedline.groovy:141-191) ---------
-
-def test_n4_chunks_split_on_boundaries():
-    from pmcanalysis_spark.nlp import noun_chunks_py, tokenize_py
-
-    toks = tokenize_py("the red table stands in the big room")
-    chunks = noun_chunks_py(toks)
-    assert [(s, c) for s, c in chunks] == [
-        (1, ["red", "table", "stands"]),
-        (6, ["big", "room"]),
-    ]
-
-
-def test_n4_hits_never_cross_chunks_and_overlap():
-    """The two contract differences vs the trie (N3): hits cannot cross a
-    chunk boundary (the trie WOULD match 'stands in the big' across it),
-    and every matching ngram is emitted — overlaps included — because the
-    reference fed each chunk ngram to the finder independently."""
-    from pmcanalysis_spark.nlp import (
-        TokenTrie,
-        chunk_ngram_hits_py,
-        lexicon_name_map,
-        tokenize_py,
-    )
-
-    lex = [
-        ("red table", "T:1"),
-        ("table", "T:2"),
-        ("stands in the big", "T:3"),  # crosses the 'in the' boundary
-        ("big room", "T:4"),
-    ]
-    toks = tokenize_py("the red table stands in the big room")
-    hits = chunk_ngram_hits_py(toks, lexicon_name_map(lex))
-    names = {h[2] for h in hits}
-    assert names == {"red table", "table", "big room"}  # no cross-chunk hit
-    # overlap: both 'red table' and the contained 'table' are emitted
-    assert ("red table" in names) and ("table" in names)
-    # the plain trie DOES match across the chunk boundary (longest-match)
-    trie_names = {m[2] for m in TokenTrie.from_lexicon(lex).find(toks)}
-    assert "stands in the big" in trie_names
-
-
-def test_n4_spark_operator(spark):
-    from pmcanalysis_spark.nlp import detect_mentions_chunked
-
-    df = spark.createDataFrame(
-        [("u1", "the red table stands in the big room. nothing here.")],
-        "url string, text string",
-    )
-    lex = [("red table", "T:1"), ("red table", "T:9"), ("big room", "T:4")]
-    rows = detect_mentions_chunked(df, lex).collect()
-    got = {(r.term_id, r.name, r.begin, r.end) for r in rows}
-    # ambiguity preserved: one row per candidate id (J1 multimap semantics)
-    assert ("T:1", "red table", 1, 3) in got and ("T:9", "red table", 1, 3) in got
-    assert ("T:4", "big room", 6, 8) in got
-    assert all(r.sent_idx == 0 for r in rows)
-
-
 # --- one token scan per page (detect_doc_terms) ------------------------------
 
 from hypothesis import given, settings

@@ -1,31 +1,5 @@
 from __future__ import annotations
 
-from pmcanalysis_spark.fixtures import build_lexicon, build_web_pages
-from pmcanalysis_spark.schemas import WEB_PAGES
-from pmcanalysis_spark.streaming.ingest import run_streaming_ingest
-
-
-def test_streaming_ingest_drains_backlog(spark, tmp_path):
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    pages = build_web_pages(60)
-    spark.createDataFrame(pages, WEB_PAGES).write.parquet(src)
-
-    lex = [(e.name, e.term_id) for e in build_lexicon()]
-    q = run_streaming_ingest(spark, src, out, ckpt, lex, available_now=True)
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out)
-    assert got.columns == ["term_id", "doc_id"]
-    n1 = got.count()
-    assert n1 > 0
-
-    # restart with no new files: exactly-once checkpoint -> no duplicates
-    q2 = run_streaming_ingest(spark, src, out, ckpt, lex, available_now=True)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == n1
-
 
 def test_keep_filter_runs_on_stream(spark, tmp_path):
     """keep_filter is a single narrow select, so it is stream-safe by

@@ -96,24 +96,6 @@ def test_vocab_build_and_encode(spark):
     assert enc[3] == "0,1"        # zzz OOV, order preserved
 
 
-def test_compression_ratio(spark):
-    import zlib
-
-    from pmcanalysis_spark.operators.textstats import compression_ratio
-
-    rows = [
-        (1, "aaaa " * 200),                       # degenerate: compresses hard
-        (2, "the quick brown fox jumps over it"), # short prose
-        (3, ""),                                  # empty: ratio guarded
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in compression_ratio(docs).collect()}
-    assert got[1].ratio < 0.05                    # repetition flagged
-    assert got[2].n_compressed == len(zlib.compress(rows[1][1].encode(), 6))
-    assert got[3].n_bytes == 0 and got[3].n_compressed >= 0
-    assert abs(got[1].ratio - round(got[1].n_compressed / got[1].n_bytes, 6)) < 1e-12
-
-
 def test_pack_sequences_manifest(spark):
     """Known layout: docs of 3/4/2 tokens at seq_len=5 concat to 9 tokens ->
     chunk 0 holds d1 fully + d2 partially (5 tokens), chunk 1 the rest."""
