@@ -429,7 +429,6 @@ def connected_components(
     vertices: DataFrame | None = None,
     max_iter: int = 50,
     driver_threshold: int = 100_000,
-    n_edges: int | None = None,
 ) -> DataFrame:
     """edges(src, dst) -> (id, component) by iterative min-label propagation
     with pointer-doubling compression.
@@ -455,35 +454,28 @@ def connected_components(
     collect or the iterative joins), so the edge projection is persisted
     internally — the upstream that produced the edges executes ONCE, however
     expensive (a caller handing the confirmed-pair output of a whole
-    candidates->confirm chain must not pay that chain per action). Callers
-    that already know the edge count can pass ``n_edges`` to skip the probe
-    entirely; the persisted projection is narrow (two id columns) and is
-    released by LRU eviction.
+    candidates->confirm chain must not pay that chain per action). The
+    persisted projection is narrow (two id columns) and is released by LRU
+    eviction.
     """
-    e = edges.select("src", "dst")
-    probe_rows = None
-    if n_edges is None:
-        from pyspark.storagelevel import StorageLevel
+    from pyspark.storagelevel import StorageLevel
 
-        e = e.persist(StorageLevel.MEMORY_AND_DISK)
-        # ONE bounded job decides the path AND feeds the driver fast path:
-        # collect at most driver_threshold+1 rows — when the graph fits,
-        # these ARE the edges (the old .count() probe + .distinct().collect()
-        # ran the upstream twice-ish; union-find is duplicate-tolerant, so
-        # the distinct was only trimming driver traffic the limit already
-        # bounds). When it does not fit, the iterative path continues and
-        # the persist materializes on its first full pass (r6, guide §5).
-        probe_rows = e.limit(driver_threshold + 1).collect()
-        n_edges = len(probe_rows)
+    e = edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
+    # ONE bounded job decides the path AND feeds the driver fast path:
+    # collect at most driver_threshold+1 rows — when the graph fits, these
+    # ARE the edges (union-find is duplicate-tolerant, so no distinct is
+    # needed; the limit bounds driver traffic). When it does not fit, the
+    # iterative path continues and the persist materializes on its first
+    # full pass.
+    probe_rows = e.limit(driver_threshold + 1).collect()
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     if vertices is None:
         vertices = sym.select(F.col("src").alias("id")).distinct()
 
-    if n_edges <= driver_threshold:
-        rows = probe_rows if probe_rows is not None else e.distinct().collect()
-        return _label_with_union_find(rows, vertices)
+    if len(probe_rows) <= driver_threshold:
+        return _label_with_union_find(probe_rows, vertices)
     # ---- star-contraction pre-pass (r6) ----------------------------------
     # One round of f(v) = min(v ∪ N(v)) contraction before the generic loop:
     # every vertex is connected to f(v) (itself or a neighbor), so replacing
@@ -496,8 +488,6 @@ def connected_components(
     # magnitude smaller — or not at all. Cost: one bounded-key aggregation
     # and one distinct over the remapped edges, both a single shuffle of
     # well-distributed vertex keys.
-    from pyspark.storagelevel import StorageLevel
-
     fmap = (
         sym.groupBy("src")
         .agg(F.min("dst").alias("_m"))
@@ -601,12 +591,10 @@ def connected_components(
     return _unwind(labels)
 
 
-def canonicalize_terms(
-    lexicon: DataFrame, min_shared_names: int = 1, xref_kind: str = "xref"
-) -> DataFrame:
-    """Ontology-term entity canonicalization: terms that share an xref (or
-    >= min_shared_names exact names) are the same real-world entity; merge
-    via connected components and elect the min term_id as canonical.
+def canonicalize_terms(lexicon: DataFrame) -> DataFrame:
+    """Ontology-term entity canonicalization: terms that share an xref or an
+    exact name are the same real-world entity; merge via connected
+    components and elect the min term_id as canonical.
 
     Input: lexicon(name, term_id, kind). Output: (term_id, canonical_id) for
     EVERY term (singletons map to themselves). The triples table is then
@@ -614,18 +602,16 @@ def canonicalize_terms(
     materializing" stage of the north_star. Edge construction is a self-join
     on the shared key (name/xref), the same salted-groupBy shape as J4.
     """
-    keys = lexicon.filter(
-        (F.col("kind") == xref_kind) | (F.col("kind") == "name")
-    ).select("name", "term_id").distinct()
+    keys = lexicon.filter(F.col("kind").isin("xref", "name")).select(
+        "name", "term_id"
+    ).distinct()
     a = keys.select(F.col("name"), F.col("term_id").alias("src"))
     b = keys.select(F.col("name"), F.col("term_id").alias("dst"))
     shared = (
         a.join(b, "name")
         .filter(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared_names)
         .select("src", "dst")
+        .distinct()
     )
     verts = lexicon.select(F.col("term_id").alias("id")).distinct()
     comp = connected_components(shared, vertices=verts)

@@ -118,6 +118,21 @@ def try_resume(
     )
 
 
+def _part_footers(data_path: str):
+    """(write partition id, Parquet footer) of each ``part-*.parquet`` file
+    under ``data_path``, read on the driver."""
+    for name in os.listdir(data_path):
+        m = _PART_FILE.fullmatch(name)
+        if m:
+            yield int(m.group(1)), pq.read_metadata(os.path.join(data_path, name))
+
+
+def footer_row_count(data_path: str) -> int:
+    """Rows written under ``data_path``, summed from the part files' Parquet
+    footers: no Spark job and no schema inference."""
+    return sum(md.num_rows for _pid, md in _part_footers(data_path))
+
+
 def _footer_lineage(data_path: str, key_col: str) -> list[tuple[int, int, str | None, str | None]]:
     """(partition_id, row_count, min_key, max_key) per write partition, read
     from the footers of the ``part-*.parquet`` files under ``data_path``.
@@ -126,15 +141,11 @@ def _footer_lineage(data_path: str, key_col: str) -> list[tuple[int, int, str | 
     bounds; one with values but no footer min/max (a key over the 4 KB
     statistics limit) makes its partition's bounds NULL."""
     parts: dict[int, list] = {}  # partition id -> [rows, min, max, bounds known]
-    for name in os.listdir(data_path):
-        m = _PART_FILE.fullmatch(name)
-        if not m:
-            continue
-        md = pq.read_metadata(os.path.join(data_path, name))
+    for pid, md in _part_footers(data_path):
         if not md.num_rows:
             continue
         col = next(i for i in range(md.num_columns) if md.schema.column(i).path == key_col)
-        acc = parts.setdefault(int(m.group(1)), [0, None, None, True])
+        acc = parts.setdefault(pid, [0, None, None, True])
         acc[0] += md.num_rows
         for g in range(md.num_row_groups):
             rg = md.row_group(g)

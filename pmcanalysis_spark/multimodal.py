@@ -10,9 +10,9 @@ IEEE-float-32 (duration/RMS/peak/zero-crossing features); video —
 Motion-JPEG AVI frame sampling (RIFF chunk walk, each frame through the
 JPEG decoder). The ONE remaining stub is frame sampling for compressed
 video codecs (MP4/H.264 — genuinely ffmpeg-blocked; clearly marked, raises
-NotImplementedError unless the deterministic fake is enabled). Everything
-Spark-side is real and tested: schemas, partitioning, the mapInPandas batch
-shape, and the metadata fast-path that never touches the payload bytes.
+NotImplementedError). Everything Spark-side is real and tested: schemas,
+partitioning, the mapInPandas batch shape, and the metadata fast-path that
+never touches the payload bytes.
 
 Design for 100 TB of media: the payload column lives in its own parquet/
 Iceberg files (column pruning means metadata queries read ZERO payload
@@ -56,13 +56,6 @@ MEDIA_FEATURES = StructType(
         StructField("features", ArrayType(FloatType()), True),
     ]
 )
-
-# Whether UNRECOGNIZED payloads get deterministic byte-derived fake features
-# instead of raising. Default False: a production pipeline fed a format this
-# module can't decode (e.g. WebP) must fail loudly, not emit garbage
-# features. Tests that exercise the Spark plumbing with synthetic payloads
-# opt in per call via ``extract_media_features(..., use_fake_decode=True)``.
-USE_FAKE_DECODE = False
 
 _JPEG_SOF_MARKERS = frozenset(
     range(0xC0, 0xCF + 1)
@@ -544,9 +537,7 @@ def _decode_audio(payload: bytes) -> tuple[int, int, list[float]] | None:
     return n, ch, feats
 
 
-def _decode_image(
-    payload: bytes, use_fake_decode: bool | None = None
-) -> tuple[int, int, list[float]]:
+def _decode_image(payload: bytes) -> tuple[int, int, list[float]]:
     """Decode tiering, most-real first:
 
     1. BMP / PGM / PPM / PNG (8-bit non-interlaced) / baseline JPEG / GIF:
@@ -555,8 +546,9 @@ def _decode_image(
     2. Progressive JPEG / exotic PNGs: REAL width/height (header parse);
        pixel features there are a deterministic byte-derived fake
        (clearly not semantic).
-    3. Unrecognized payloads: full fake iff ``use_fake_decode`` (defaults to
-       the module's USE_FAKE_DECODE, i.e. False), else raises.
+    3. Unrecognized payloads (e.g. WebP) raise: a pipeline fed a format
+       this module can't decode must fail loudly, not emit garbage
+       features.
     """
     px = decode_pixels(payload)
     if px is not None:
@@ -579,13 +571,9 @@ def _decode_image(
         return w, h, feats
     dims = parse_image_dims(payload)
     feats = [float((b % 17)) / 16.0 for b in payload[:8]]
-    if dims is not None:
-        return dims[0], dims[1], feats
-    if not (USE_FAKE_DECODE if use_fake_decode is None else use_fake_decode):
+    if dims is None:
         raise NotImplementedError("pixel decode requires a codec library")
-    hsh = sum(payload[:16]) if payload else 0
-    width, height = 16 + hsh % 64, 16 + (hsh // 64) % 64
-    return width, height, feats
+    return dims[0], dims[1], feats
 
 
 def _avi_mjpeg_frames(payload: bytes) -> list[bytes] | None:
@@ -617,21 +605,16 @@ def _avi_mjpeg_frames(payload: bytes) -> list[bytes] | None:
     return frames or None
 
 
-def _sample_frames(
-    payload: bytes, every: int, use_fake_decode: bool | None = None
-) -> list[bytes]:
+def _sample_frames(payload: bytes, every: int) -> list[bytes]:
     """Frame sampler: REAL for Motion-JPEG AVI (every ``every``-th frame of
     the RIFF walk above); other containers (MP4/H.264...) genuinely need
     ffmpeg and remain the one STUB in this module."""
     real = _avi_mjpeg_frames(payload)
-    if real is not None:
-        return real[:: max(every, 1)]
-    if not (USE_FAKE_DECODE if use_fake_decode is None else use_fake_decode):
+    if real is None:
         raise NotImplementedError(
             "non-MJPEG-AVI video frame sampling requires ffmpeg"
         )
-    n = max(1, (len(payload) // 1024) // max(every, 1))
-    return [payload[i * 16 : i * 16 + 16] for i in range(min(n, 4))]
+    return real[:: max(every, 1)]
 
 
 def media_metadata(media: DataFrame) -> DataFrame:
@@ -648,7 +631,6 @@ def extract_media_features(
     media: DataFrame,
     frame_every: int = 10,
     decoder=None,
-    use_fake_decode: bool | None = None,
 ) -> DataFrame:
     """Decode / feature-extract / frame-sample as one Arrow-batched pass.
 
@@ -665,11 +647,8 @@ def extract_media_features(
     ``None`` to fall through to the built-in pure-Python tier — so a
     deployment can route e.g. only JPEG/MP4 through the fast codec while
     everything else keeps the codec-free default. Schema and batch shape are
-    identical on both paths (tested).
-
-    ``use_fake_decode``: per-call override of the module's USE_FAKE_DECODE
-    (default False — unrecognized payloads raise rather than silently
-    yielding byte-derived fake features).
+    identical on both paths (tested). Without a decoder, tests feed
+    synthetic media through ``codecs.fake_fast_decoder``.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -700,11 +679,11 @@ def extract_media_features(
                         out["features"].append(feats)
                         continue
                 if kind == "video":
-                    frames = _sample_frames(payload, frame_every, use_fake_decode)
+                    frames = _sample_frames(payload, frame_every)
                 else:
                     frames = [payload]
                 for fi, frame in enumerate(frames):
-                    w, h, feats = _decode_image(frame, use_fake_decode)
+                    w, h, feats = _decode_image(frame)
                     out["media_id"].append(mid)
                     out["frame_idx"].append(fi)
                     out["width"].append(w)

@@ -19,7 +19,7 @@ driver-side), not corpus tokens. Each merge iteration is:
      semantics — not expressible as column algebra because each
      replacement consumes its symbols: "aaa" + (a,a) -> ["aa","a"]).
 
-Lineage is truncated with localCheckpoint every ``checkpoint_every``
+Lineage is truncated with localCheckpoint every ``CHECKPOINT_EVERY``
 iterations (the pagerank recipe — n_merges chained mapInPandas otherwise
 grow an unbounded plan). Production BPE implementations update pair counts
 incrementally (only words containing the merged pair change); the full
@@ -38,21 +38,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 END_OF_WORD = "</w>"
+CHECKPOINT_EVERY = 8
 
 
-def word_freqs(
-    docs: DataFrame, text_col: str = "text", lowercase: bool = False
-) -> DataFrame:
+def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over whitespace tokens — the one corpus scan BPE needs.
     At 100 TB this is the map-side-combined groupBy that shrinks the
     problem from corpus tokens to distinct words."""
     tok = F.explode(
         F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
     ).alias("word")
-    d = docs.select(tok)
-    if lowercase:
-        d = d.select(F.lower(F.col("word")).alias("word"))
-    return d.groupBy("word").agg(F.count("*").alias("freq"))
+    return docs.select(tok).groupBy("word").agg(F.count("*").alias("freq"))
 
 
 def _init_symbols(words: DataFrame) -> DataFrame:
@@ -119,8 +115,6 @@ def top_pairs(
     docs: DataFrame,
     k: int = 20,
     text_col: str = "text",
-    lowercase: bool = False,
-    words: DataFrame | None = None,
 ) -> DataFrame:
     """The first BPE iteration's candidate table: top-k adjacent symbol
     pairs over the initial character alphabet, (a, b, count, rank) in the
@@ -134,8 +128,7 @@ def top_pairs(
     over just k rows."""
     from pyspark.sql import Window
 
-    w = words if words is not None else word_freqs(docs, text_col, lowercase)
-    pc = _pair_counts(_init_symbols(w))
+    pc = _pair_counts(_init_symbols(word_freqs(docs, text_col)))
     order = [F.desc("count"), F.asc("a"), F.asc("b")]
     topk = pc.orderBy(*order).limit(k)
     wnd = Window.orderBy(*order)
@@ -148,21 +141,15 @@ def train_bpe(
     docs: DataFrame,
     n_merges: int = 10,
     text_col: str = "text",
-    lowercase: bool = False,
     min_pair_count: int = 2,
-    checkpoint_every: int = 8,
-    words: DataFrame | None = None,
 ) -> list[tuple[int, str, str, int]]:
     """Learn ``n_merges`` BPE merges from the corpus. Returns the merge
     table [(rank, left, right, count)] in learned order — rank r merged
     (left, right) into left+right when it was the most frequent adjacent
     pair (ties broken lexicographically on (left, right), deterministic
     across partitionings). Stops early when no pair reaches
-    ``min_pair_count`` (merging hapax pairs only memorizes words).
-    ``words`` overrides the corpus scan with a precomputed (word, freq)
-    table — at production scale that table is a materialized artifact."""
-    w = words if words is not None else word_freqs(docs, text_col, lowercase)
-    state = _init_symbols(w)
+    ``min_pair_count`` (merging hapax pairs only memorizes words)."""
+    state = _init_symbols(word_freqs(docs, text_col))
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(n_merges):
         top = (
@@ -176,7 +163,7 @@ def train_bpe(
         a, b, c = top[0]["a"], top[0]["b"], int(top[0]["count"])
         merges.append((rank, a, b, c))
         state = _apply_merge(state, a, b)
-        if (rank + 1) % checkpoint_every == 0:
+        if (rank + 1) % CHECKPOINT_EVERY == 0:
             state = state.localCheckpoint(eager=False)
     return merges
 
@@ -186,7 +173,6 @@ def encode_bpe(
     merges: list[tuple[int, str, str, int]],
     id_col: str = "doc_id",
     text_col: str = "text",
-    lowercase: bool = False,
 ) -> DataFrame:
     """Encode documents with a learned merge table: (doc_id, pieces,
     n_pieces) where pieces are the word subword units in text order
@@ -226,9 +212,8 @@ def encode_bpe(
         for pdf in batches:
             ids, pieces = [], []
             for did, text in zip(pdf["doc_id"], pdf["text"]):
-                t = text.lower() if lowercase else text
                 out: list[str] = []
-                for wd in t.split(" "):
+                for wd in text.split(" "):
                     if wd:
                         out.extend(enc_word(wd, cache))
                 ids.append(did)

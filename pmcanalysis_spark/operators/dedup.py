@@ -114,7 +114,6 @@ def _drop_hot_shingles(
     docs: DataFrame,
     id_col: str,
     max_shingle_df,
-    strip_shingles: DataFrame | None = None,
 ):
     """Drop boilerplate shingles before any shingle self-join.
 
@@ -123,13 +122,7 @@ def _drop_hot_shingles(
     docs carries no dedup signal and is exactly what makes the self-join
     quadratic at scale; an int sets the absolute df bound; None disables.
     The "auto" bound stays inside the DAG (count aggregate cross-joined, no
-    driver action). ``strip_shingles``: optional explicit strip-list — e.g.
-    ``textstats.top_ngrams`` output renamed to a ``shingle`` column — removed
-    with one left_anti join."""
-    if strip_shingles is not None:
-        sh = sh.join(
-            F.broadcast(strip_shingles.select("shingle")), "shingle", "left_anti"
-        )
+    driver action)."""
     if max_shingle_df == "auto":
         total = docs.select(F.countDistinct(F.col(id_col)).alias("_n_docs"))
         hot = (
@@ -152,7 +145,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_shingle_df: int | str | None = "auto",
-    strip_shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by word-n-gram Jaccard >= threshold.
 
@@ -163,8 +155,7 @@ def ngram_jaccard_pairs(
     changes semantics only for boilerplate-dominated pairs — by design.
     """
     sh = _drop_hot_shingles(
-        shingles(docs, id_col, text_col, n), docs, id_col, max_shingle_df,
-        strip_shingles,
+        shingles(docs, id_col, text_col, n), docs, id_col, max_shingle_df
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("a_id"), "shingle")
@@ -199,7 +190,6 @@ def minhash_signatures(
     text_col: str = "text",
     n: int = 3,
     num_hashes: int = 16,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, sig: array<bigint>) — sig[i] = min over shingles of the i-th
     permutation hash. One shuffle (groupBy doc).
@@ -210,20 +200,11 @@ def minhash_signatures(
     and under 2^63 needs i*h2 < 2^63 - 2^60: safe for num_hashes <= 4 only…
     so h2 is reduced mod 2^57 first, keeping i*h2 < 2^61 for i < 16. All
     integer ops exist verbatim in DuckDB for the oracle.
-
-    ``shingles_df``: optional pre-computed (doc_id, shingle) table — pass a
-    persisted/materialized shingle stage to share one corpus scan across the
-    signature and confirm branches (see ``neardup_text_scalable``).
     """
     assert num_hashes <= 16, "affine-family derivation sized for <= 16 hashes"
-    # duplicate shingles cannot change a min, so the default path skips the
-    # per-doc distinct exchange entirely (r6); an explicitly passed
-    # shingles_df (shared/materialized stage) is used as-is
-    sh = (
-        shingles_df
-        if shingles_df is not None
-        else shingles_raw(docs, id_col, text_col, n)
-    )
+    # duplicate shingles cannot change a min, so the raw gram stream skips
+    # the per-doc distinct exchange entirely
+    sh = shingles_raw(docs, id_col, text_col, n)
     md5 = F.md5(F.col("shingle"))
     h1 = F.conv(F.substring(md5, 1, 15), 16, 10).cast("long")
     h2 = F.pmod(F.conv(F.substring(md5, 16, 15), 16, 10).cast("long"),
@@ -247,16 +228,13 @@ def minhash_lsh_pairs(
     n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """LSH candidates: split the signature into ``bands`` bands of
     num_hashes/bands rows; docs colliding on any full band are candidates.
     Returns distinct (a_id, b_id). Scale path for near-dedup: work is
-    proportional to bucket collisions, not doc pairs. ``shingles_df``:
-    optional pre-computed (doc_id, shingle) table (see
-    ``minhash_signatures``)."""
+    proportional to bucket collisions, not doc pairs."""
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(docs, id_col, text_col, n, num_hashes, shingles_df)
+    sig = minhash_signatures(docs, id_col, text_col, n, num_hashes)
     banded = sig.select(
         "doc_id",
         "sig",
@@ -323,8 +301,6 @@ def neardup_text_scalable(
     num_hashes: int = 16,
     bands: int = 4,
     max_shingle_df: int | str | None = "auto",
-    materialize_shingles: bool = False,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """Text near-dup pairs, MinHash-LSH candidates -> exact-Jaccard confirm.
 
@@ -351,42 +327,19 @@ def neardup_text_scalable(
     default) applies to the confirm's Jaccard space exactly as in
     ``ngram_jaccard_pairs`` so the two operators agree pairwise.
 
-    The shingle subtree is referenced by SIX branches (minhash signatures,
-    the hot-shingle df count + anti-join base, sizes, a-side, b-side) and
-    Catalyst does not CSE across branches — unmaterialized, each branch
-    re-runs the tokenize+explode over the corpus. ``materialize_shingles``
-    persists the raw + hot-filtered shingle stages so the operator tokenizes
-    the corpus once. Default False: the r5 A/B at sf0.1 steady state
-    (interleaved, best-of-3 after warmup, quiet box) measured the persist
-    LOSING ~15% (3.80 s vs 4.46 s, ordering consistent in all reps) — on
-    OS-cached parquet the re-scans are cheaper than materializing the
-    exploded shingle table into the block store (PLANS.md "Shingle persist
-    A/B"). Flip it (or pass ``shingles_df``, e.g. a
-    ``lineage.materialize_stage`` checkpoint) on a real cluster where the
-    corpus scan is cold remote storage and 6 scans of 100 TB dwarf one
-    shingle materialization. Values are identical either way (persist
-    changes execution, not semantics) — oracle hashes prove it.
+    The shingle subtree is read by several branches (the hot-shingle df
+    count and anti-join base, the hash sets) and Catalyst does not CSE
+    across branches, so each branch re-runs the tokenize+explode. It is
+    not persisted: at sf0.1 steady state a persist of the shingle stages
+    measured ~15% slower (3.80 s vs 4.46 s), because on OS-cached parquet
+    the re-scans are cheaper than materializing the exploded shingle table
+    into the block store (PLANS.md "Shingle persist A/B").
     """
-    from pyspark.storagelevel import StorageLevel
-
-    sh_raw = (
-        shingles_df
-        if shingles_df is not None
-        else shingles(docs, id_col, text_col, n)
-    )
-    if materialize_shingles and shingles_df is None:
-        sh_raw = sh_raw.persist(StorageLevel.MEMORY_AND_DISK)
     # the signature branch is duplicate-invariant (min over permuted
-    # hashes), so when nothing is shared/materialized it skips the distinct
-    # exchange by letting minhash build its own raw gram stream (r6)
-    cand = minhash_lsh_pairs(
-        docs, id_col, text_col, n, num_hashes, bands,
-        shingles_df=sh_raw if (shingles_df is not None or materialize_shingles)
-        else None,
-    )
-    sh = _drop_hot_shingles(sh_raw, docs, id_col, max_shingle_df)
-    if materialize_shingles:
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    # hashes), so minhash builds its own raw gram stream and skips the
+    # distinct exchange
+    cand = minhash_lsh_pairs(docs, id_col, text_col, n, num_hashes, bands)
+    sh = _drop_hot_shingles(shingles(docs, id_col, text_col, n), docs, id_col, max_shingle_df)
     # confirm via per-doc HASH SETS (r6): pack each doc's hot-filtered
     # shingles into one sorted 60-bit-hash array (the same h1 identity the
     # MinHash permutations and the incremental signature store already
@@ -429,8 +382,6 @@ def neardup_text_clusters(
     num_hashes: int = 16,
     bands: int = 4,
     max_shingle_df: int | str | None = "auto",
-    materialize_shingles: bool = False,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """The full text-dedup endgame: LSH candidates -> exact-Jaccard confirm
     (``neardup_text_scalable``) -> connected components -> one
@@ -443,7 +394,6 @@ def neardup_text_clusters(
 
     pairs = neardup_text_scalable(
         docs, id_col, text_col, n, threshold, num_hashes, bands, max_shingle_df,
-        materialize_shingles=materialize_shingles, shingles_df=shingles_df,
     )
     # connected_components drives several actions over the edges (size probe
     # + collect/iterate) and persists its edge projection internally (r4), so
@@ -464,7 +414,6 @@ def neardup_signature_store(
     n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """Per-doc near-dup signature store row:
     ``(doc_id, buckets array<string>[bands], sh array<bigint> sorted)`` —
@@ -485,12 +434,8 @@ def neardup_signature_store(
     assert num_hashes <= 16, "affine-family derivation sized for <= 16 hashes"
     rows_per_band = num_hashes // bands
     # duplicate-invariant consumers only (min + collect_set): raw grams,
-    # no distinct exchange (r6)
-    sh = (
-        shingles_df
-        if shingles_df is not None
-        else shingles_raw(docs, id_col, text_col, n)
-    )
+    # no distinct exchange
+    sh = shingles_raw(docs, id_col, text_col, n)
     md5 = F.md5(F.col("shingle"))
     h1 = F.conv(F.substring(md5, 1, 15), 16, 10).cast("long")
     h2 = F.pmod(
@@ -601,7 +546,6 @@ def embedding_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    dim: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (a_id, b_id, cosine) where
     cosine >= threshold, a_id < b_id. Brute-force baseline (correctness
@@ -612,7 +556,7 @@ def embedding_neardup_pairs(
     v = embeddings.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
-    ).withColumn("norm", _norm(F.col("vec"), dim))
+    ).withColumn("norm", _norm(F.col("vec")))
     a = v.select(F.col("id").alias("a_id"), F.col("vec").alias("va"), F.col("norm").alias("na_"))
     b = v.select(F.col("id").alias("b_id"), F.col("vec").alias("vb"), F.col("norm").alias("nb_"))
     return (
@@ -621,7 +565,7 @@ def embedding_neardup_pairs(
         .select(
             "a_id",
             "b_id",
-            (_dot(F.col("va"), F.col("vb"), dim) / (F.col("na_") * F.col("nb_"))).alias("cosine"),
+            (_dot(F.col("va"), F.col("vb")) / (F.col("na_") * F.col("nb_"))).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -1036,7 +980,6 @@ def simhash_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     bands: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """SimHash near-duplicate pairs: (a_id, b_id, hamming) for every doc
     pair whose 60-bit simhashes differ in <= ``max_hamming`` bits —
@@ -1050,13 +993,11 @@ def simhash_pairs(
     ``bands`` bands), so the output equals the brute-force all-pairs scan —
     which is what the DuckDB oracle runs. Work ∝ band-bucket collisions
     (shuffle key = 15-bit band value, well-distributed by the hash), never
-    the n² scan. ``materialize`` persists the signature table, which both
-    join sides reference (Catalyst won't CSE the 61-aggregate groupBy)."""
-    sig = simhash64(docs, id_col, text_col)
-    if materialize:
-        from pyspark.storagelevel import StorageLevel
+    the n² scan. The signature table is persisted because both join sides
+    reference it (Catalyst won't CSE the 61-aggregate groupBy)."""
+    from pyspark.storagelevel import StorageLevel
 
-        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+    sig = simhash64(docs, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
     # expand_partitions=0: the persisted signature table is known-small and
     # simhash signatures are mostly unique, so the banded expansion is
     # ~linear — the widening repartition measured as pure latency here
@@ -1170,7 +1111,6 @@ def minhash_jaccard_estimate(
     n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """(a_id, b_id, est_jaccard) for LSH candidate pairs: the MinHash
     sketch's similarity SIGNAL — fraction of agreeing signature slots. The
@@ -1193,7 +1133,7 @@ def minhash_jaccard_estimate(
     from pyspark.storagelevel import StorageLevel
 
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(docs, id_col, text_col, n, num_hashes, shingles_df)
+    sig = minhash_signatures(docs, id_col, text_col, n, num_hashes)
     sig = sig.persist(StorageLevel.MEMORY_AND_DISK)  # both join sides
     banded = sig.select(
         "doc_id",

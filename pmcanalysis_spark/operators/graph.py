@@ -9,9 +9,8 @@ and broadcast nothing but counters.
 
 Scale notes: degree is one groupBy. Triangle counting uses the standard
 oriented-edge trick (count each triangle once by ordering vertices, join
-work ∝ Σ_v deg_out(v)² with out-edges oriented low->high id, the classic
-degeneracy-style bound rather than deg(v)² on hubs when ids correlate with
-degree; for adversarial hubs, re-orient by (degree, id) before calling).
+work ∝ Σ_v deg_out(v)² with out-edges oriented low->high id; a hub whose
+id is low pays deg(v)² wedges).
 """
 
 from __future__ import annotations
@@ -38,29 +37,17 @@ def triangle_count(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    orient_by_degree: bool = False,
-    materialize: bool = True,
 ) -> DataFrame:
     """One row (n_triangles): triangles in the undirected simple graph.
 
-    Orient every edge along a total vertex order (each triangle a<b<c then
-    exists exactly once as the wedge a->b, b->c closed by a->c): two
-    self-joins, no post-hoc division by 6, no duplicate wedge explosion.
-
-    ``orient_by_degree=False`` orders by vertex id — fine when ids don't
-    correlate with degree. ``orient_by_degree=True`` orders by (degree, id):
-    the standard degeneracy orientation, which bounds every vertex's
-    out-degree by O(sqrt(m)) and therefore the wedge join by O(m^1.5)
-    regardless of hubs — at web scale a celebrity vertex with out-degree d
-    under id-order contributes d^2 wedges; under degree-order its edges
-    point INTO it and contribute ~0. Cost: one extra degree aggregation and
-    two joins to rank endpoints. Counts are identical (any total order
-    counts each triangle exactly once — tested).
+    Orient every edge from the smaller vertex id to the larger (each
+    triangle a<b<c then exists exactly once as the wedge a->b, b->c closed
+    by a->c): two self-joins, no post-hoc division by 6, no duplicate wedge
+    explosion.
 
     The oriented edge table is referenced by all three join sides (ab, bc,
-    ac — plus the degree aggregation in orient mode) and Catalyst does not
-    CSE across them, so ``materialize`` (default True) persists it: whatever
-    produced the edges executes once, not three-to-five times."""
+    ac) and Catalyst does not CSE across them, so it is persisted: whatever
+    produced the edges executes once, not three times."""
     from pyspark.storagelevel import StorageLevel
 
     e = (
@@ -70,22 +57,8 @@ def triangle_count(
             F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
         )
         .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if materialize:
-        e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    if orient_by_degree:
-        deg = degree_centrality(e, "a", "b")
-        da = deg.select(F.col("id").alias("a"), F.col("degree").alias("_da"))
-        db = deg.select(F.col("id").alias("b"), F.col("degree").alias("_db"))
-        ranked = e.join(da, "a").join(db, "b")
-        # orient from the (degree, id)-smaller endpoint to the larger
-        a_first = (F.col("_da") < F.col("_db")) | (
-            (F.col("_da") == F.col("_db")) & (F.col("a") < F.col("b"))
-        )
-        e = ranked.select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("a"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("b"),
-        )
     ab = e
     bc = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
     ac = e.select(F.col("a").alias("a2"), F.col("b").alias("c2"))
@@ -184,7 +157,6 @@ def pagerank(
     tol: float = 1e-6,
     src: str = "src",
     dst: str = "dst",
-    vertices: DataFrame | None = None,
     exact_sums: bool = False,
     driver_threshold: int = 10_000,
 ) -> DataFrame:
@@ -225,7 +197,7 @@ def pagerank(
     # exact_sums mode (DECIMAL(28,12) is order-independent) — proven by the
     # unrolled DuckDB oracles — and within float-sum reordering noise
     # otherwise (the distributed sum is partition-order-dependent anyway).
-    if driver_threshold and vertices is None:
+    if driver_threshold:
         probe = e.limit(driver_threshold + 1).collect()
         if len(probe) <= driver_threshold:
             spark = edges.sparkSession
@@ -243,15 +215,12 @@ def pagerank(
                 ]
             )
             return spark.createDataFrame(rows, schema)
-    if vertices is None:
-        verts = (
-            e.select(F.col("src").alias("id"))
-            .unionByName(e.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-    else:
-        verts = vertices.select("id").distinct()
-    verts = verts.persist(StorageLevel.MEMORY_AND_DISK)
+    verts = (
+        e.select(F.col("src").alias("id"))
+        .unionByName(e.select(F.col("dst").alias("id")))
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     n = verts.count()
     if n == 0:
         return verts.withColumn("rank", F.lit(0.0))

@@ -19,17 +19,16 @@ def topk_per_key(
     key: str,
     order_col: str,
     k: int,
-    descending: bool = True,
     tiebreak: str | None = None,
 ) -> DataFrame:
-    """W1/W3: rank within each key by ``order_col``, keep top-k.
+    """W1/W3: rank within each key by descending ``order_col``, keep top-k.
 
     Ties broken deterministically by ``tiebreak`` (the reference's
     PriorityQueue breaks ties by id compare, FilterMatrix.groovy:5-9).
     Window-based top-k does a single shuffle on ``key``; AQE handles any
     skewed key by splitting its partition.
     """
-    order = [F.desc(order_col) if descending else F.asc(order_col)]
+    order = [F.desc(order_col)]
     if tiebreak:
         order.append(F.asc(tiebreak))
     w = Window.partitionBy(key).orderBy(*order)
@@ -44,13 +43,12 @@ def normalized_rank(
     key: str,
     order_col: str,
     cutoff: float,
-    descending: bool = True,
     tiebreak: str | None = None,
 ) -> DataFrame:
     """W2 (FilterDOPhenoOld.groovy:26-45): score = (rank-1)/group_size,
-    keep rows with score < cutoff. Pass ``tiebreak`` for a deterministic
+    rank by descending ``order_col``; keep rows with score < cutoff. Pass ``tiebreak`` for a deterministic
     total order (required for oracle comparisons)."""
-    order = [F.desc(order_col) if descending else F.asc(order_col)]
+    order = [F.desc(order_col)]
     if tiebreak:
         order.append(F.asc(tiebreak))
     w = Window.partitionBy(key).orderBy(*order)

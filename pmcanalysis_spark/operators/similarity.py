@@ -22,18 +22,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _dot(a, b, dim: int | None = None):
-    """Dot product. Both forms add left-to-right, so the produced doubles
-    are bit-identical (and match DuckDB's list_dot_product fold)."""
-    if dim is not None:
-        # NOTE: the unrolled form measured SLOWER than the HOF fold on this
-        # Spark build for dim=64 — the 64-term expression tree trips the
-        # codegen size limit and falls back to interpreted eval. Kept for
-        # small dims (<16).
-        s = a[0] * b[0]
-        for i in range(1, dim):
-            s = s + a[i] * b[i]
-        return s
+def _dot(a, b):
+    """Dot product, added left to right like DuckDB's list_dot_product
+    fold, so the doubles match it."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
@@ -41,18 +32,12 @@ def _dot(a, b, dim: int | None = None):
     )
 
 
-def _norm(a, dim: int | None = None):
+def _norm(a):
     """L2 norm with the zero-vector guard (norm 0 -> 1): a degenerate
     all-zero vector then scores cosine 0 against everything instead of
     0/0 = NaN (which Spark's desc ordering ranks FIRST — the numpy kernels
     apply the same ``n[n == 0] = 1`` guard)."""
-    if dim is not None:
-        s = a[0] * a[0]
-        for i in range(1, dim):
-            s = s + a[i] * a[i]
-        n = F.sqrt(s)
-    else:
-        n = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
+    n = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
     return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
 
 

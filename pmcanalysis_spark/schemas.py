@@ -10,7 +10,6 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -29,20 +28,6 @@ WEB_PAGES = StructType(
     ]
 )
 
-EXTRACTED = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("text", StringType(), True),
-    ]
-)
-
-SENTENCES = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("sent_idx", IntegerType(), False),
-        StructField("sentence", StringType(), True),
-    ]
-)
 
 MENTIONS = StructType(
     [
@@ -77,29 +62,6 @@ DOC_TERM_SETS = StructType(
     ]
 )
 
-PAIR_COUNTS = StructType(
-    [
-        StructField("a_id", StringType(), False),
-        StructField("b_id", StringType(), False),
-        StructField("nab", LongType(), False),
-    ]
-)
-
-TRIPLES = StructType(
-    [
-        StructField("subj", StringType(), False),
-        StructField("pred", StringType(), False),
-        StructField("obj", StringType(), False),
-        StructField("tscore", DoubleType(), True),
-        StructField("zscore", DoubleType(), True),
-        StructField("lmi", DoubleType(), True),
-        StructField("npmi", DoubleType(), True),
-        StructField("lgl", DoubleType(), True),
-        StructField("nab", LongType(), False),
-        StructField("na", LongType(), False),
-        StructField("nb", LongType(), False),
-    ]
-)
 
 AUTHOR_RECORDS = StructType(
     [

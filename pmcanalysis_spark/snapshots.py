@@ -49,6 +49,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .lineage import footer_row_count
+
 
 class CommitConflict(RuntimeError):
     """Another writer committed the same version first — re-read and retry."""
@@ -120,7 +122,7 @@ class SnapshotTable:
         commit_dir = uuid.uuid4().hex[:16]
         data_path = os.path.join(self.root, "data", commit_dir)
         df.write.mode("error").parquet(data_path)
-        n = self.spark.read.parquet(data_path).count()
+        n = footer_row_count(data_path)
         files = [commit_dir]
         rows = n
         if mode == "append" and parent is not None:
@@ -199,8 +201,9 @@ class SnapshotTable:
         untouched: pre-compaction snapshots still reference the old small
         files for time travel until ``expire_snapshots`` reclaims them.
 
-        Row-count is verified on the rewritten copy before the commit is
-        attempted — a lost-row rewrite aborts instead of committing.
+        Row-count is verified on the rewritten copy (its Parquet footers)
+        before the commit is attempted — a lost-row rewrite aborts instead
+        of committing.
         Returns the new version, or None when the current snapshot already
         references fewer than ``min_input_files`` data files (no-op).
         """
@@ -221,7 +224,7 @@ class SnapshotTable:
         commit_dir = uuid.uuid4().hex[:16]
         data_path = os.path.join(self.root, "data", commit_dir)
         self.read(parent).repartition(n_out).write.mode("error").parquet(data_path)
-        n = self.spark.read.parquet(data_path).count()
+        n = footer_row_count(data_path)
         if n != psnap["row_count"]:
             shutil.rmtree(data_path, ignore_errors=True)
             raise RuntimeError(

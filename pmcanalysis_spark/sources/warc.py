@@ -132,11 +132,10 @@ def write_warc_shards(
     uri_col: str = "uri",
     date_col: str = "date",
     text_col: str = "text",
-    gzip_members: bool = True,
 ) -> DataFrame:
     """WARC sink half: (shard_id, n_records, payload) — one ISO 28500
-    archive per shard, records in (uri) order within the shard,
-    record-per-gzip-member by default so the output is byte-splittable
+    archive per shard, records in (uri) order within the shard, one gzip
+    member per record so the output is byte-splittable
     downstream (the same property the parser exploits). Returns the
     archive table rather than writing files: the caller hands payloads to
     whatever byte store it owns (object-store put, `foreachPartition`
@@ -152,7 +151,7 @@ def write_warc_shards(
         pdf = pdf.sort_values(uri_col)
         blob = b"".join(
             build_warc_record(
-                str(u), str(d), str(t).encode(), gzip_member=gzip_members
+                str(u), str(d), str(t).encode(), gzip_member=True
             )
             for u, d, t in zip(pdf[uri_col], pdf[date_col], pdf[text_col])
         )

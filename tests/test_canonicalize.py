@@ -226,29 +226,6 @@ def test_connected_components_single_upstream_execution(spark):
     comp = {r.id: r.component for r in connected_components(edges).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
     assert acc.value == 3, f"upstream ran {acc.value/3:.0f}x, expected once"
-
-
-def test_connected_components_n_edges_hint_skips_probe(spark):
-    """Passing n_edges skips the count probe entirely: the upstream executes
-    only for the collect (fast path), and results are identical."""
-    acc = spark.sparkContext.accumulator(0)
-
-    def tap(batches):
-        for pdf in batches:
-            acc.add(len(pdf))
-            yield pdf
-
-    base = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
-    edges = base.repartition(2).mapInPandas(tap, "src long, dst long")
-    comp = {r.id: r.component
-            for r in connected_components(edges, n_edges=2).collect()}
-    assert comp == {1: 1, 2: 1, 3: 1}
-    # no probe, no internal persist (hint-callers manage persistence, like
-    # neardup_text_clusters): collect reads upstream once (2 rows) and the
-    # result's vertices-distinct reads the symmetrized union (2x2 rows)
-    assert acc.value == 6
-
-
 def _mega_rows(n, key="j smith", n_coauthor_groups=4, prefix="M"):
     """n records on one author_key, coauthor sets cycling over
     n_coauthor_groups distinct singletons — true sub-entities the blocking

@@ -86,31 +86,6 @@ def test_auto_hot_shingle_bound_drops_boilerplate(spark):
     assert (3, 5) not in pairs and (5, 6) not in pairs
 
 
-def test_ngram_jaccard_strip_shingles(spark):
-    """top_ngrams output wires in as an explicit strip-list."""
-    boiler = "subscribe to our newsletter for updates"
-    rows = [
-        (1, f"{boiler} alpha beta gamma delta epsilon zeta"),
-        (2, f"{boiler} alpha beta gamma delta epsilon eta"),
-        (3, f"{boiler} one two three four five six"),
-        (4, f"{boiler} seven eight nine ten eleven twelve"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    from pyspark.sql import functions as F
-
-    from pmcanalysis_spark.operators.textstats import top_ngrams
-
-    strip = top_ngrams(docs, n=3, k=4).select(F.col("ngram").alias("shingle"))
-    pairs = {
-        (r.a_id, r.b_id)
-        for r in ngram_jaccard_pairs(
-            docs, threshold=0.3, max_shingle_df=None, strip_shingles=strip
-        ).collect()
-    }
-    assert (1, 2) in pairs
-    assert (3, 4) not in pairs  # only stripped boilerplate in common
-
-
 def test_minhash_identical_sigs_for_identical_text(spark):
     sigs = {r.doc_id: tuple(r.sig) for r in minhash_signatures(_docs(spark)).collect()}
     assert sigs[1] == sigs[2]
@@ -279,32 +254,6 @@ def test_text_neardup_clusters_collapse(spark):
     assert len(out) == 4                    # one row per doc
     assert out[1] == 1 and out[2] == 1      # identical docs collapse to min
     assert out[4] == 4                      # unrelated doc is a singleton
-
-
-def test_text_neardup_materialize_identical(spark):
-    """materialize_shingles (default False since the r5 A/B — see PLANS.md
-    "Shingle persist A/B") changes execution only: pairs and jaccards are
-    identical whether the shingle stage is persisted, recomputed per branch,
-    or supplied pre-computed via shingles_df."""
-    from pmcanalysis_spark.operators.dedup import (
-        neardup_text_scalable,
-        shingles,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-
-    def rows(**kw):
-        out = neardup_text_scalable(docs, threshold=0.5, num_hashes=8, bands=4, **kw)
-        return sorted((r.a_id, r.b_id, round(r.jaccard, 12)) for r in out.collect())
-
-    default = rows()
-    assert default == rows(materialize_shingles=True)
-    pre = shingles(docs, "doc_id", "text", 3).persist()
-    try:
-        assert default == rows(shingles_df=pre, materialize_shingles=False)
-    finally:
-        pre.unpersist()
-    assert len(default) > 0
 
 
 def test_canonical_url_goldens(spark):
@@ -861,22 +810,30 @@ def test_semantic_decontaminate_empty_eval_set(spark):
 
 
 def test_minhash_signatures_duplicate_invariant_raw_path(spark):
-    """r6: the default raw-gram path (no per-doc distinct) must produce the
-    same signatures as an explicitly distinct shingle table — a min over
-    permuted hashes cannot see duplicates."""
-    from pmcanalysis_spark.operators.dedup import minhash_signatures, shingles
+    """The raw-gram path (no per-doc distinct) must produce the signature of
+    the DISTINCT shingle set — a min over permuted hashes cannot see
+    duplicates. Doc 1 repeats each of its three shingles, doc 4 holds the
+    same three once each; both equal a Python replay over the distinct set."""
+    import hashlib
+
+    from pmcanalysis_spark.operators.dedup import MERSENNE61, minhash_signatures
 
     docs = spark.createDataFrame(
-        [(1, "a b c a b c a b c"), (2, "x y z w v u t s"), (3, "a b c d")],
+        [(1, "a b c a b c a b c"), (2, "x y z w v u t s"), (3, "a b c d"),
+         (4, "a b c a b")],
         "doc_id long, text string",
     )
-    raw = {r["doc_id"]: r["sig"]
+    got = {r["doc_id"]: list(r["sig"])
            for r in minhash_signatures(docs, num_hashes=8).collect()}
-    dis = {r["doc_id"]: r["sig"]
-           for r in minhash_signatures(
-               docs, num_hashes=8,
-               shingles_df=shingles(docs, "doc_id", "text", 3)).collect()}
-    assert raw == dis
+
+    def sig(shingles):
+        hexes = [hashlib.md5(s.encode()).hexdigest() for s in shingles]
+        hs = [(int(h[0:15], 16), int(h[15:30], 16) % (1 << 57)) for h in hexes]
+        return [min((h1 + i * h2) % MERSENNE61 for h1, h2 in hs) for i in range(8)]
+
+    expect = sig({"a b c", "b c a", "c a b"})
+    assert got[1] == got[4] == expect
+    assert got[3] == sig({"a b c", "b c d"}) != expect
 
 
 def test_hamming_pairs_first_band_dedup_on_duplicate_heavy_input(spark):

@@ -3,6 +3,8 @@ result, and a drain that adds nothing resumes the triples stage."""
 
 from __future__ import annotations
 
+import warnings
+
 from pmcanalysis_spark.fixtures import (
     build_hierarchy_terms,
     build_lexicon,
@@ -35,10 +37,14 @@ def test_incremental_matches_batch_and_resumes(spark, tmp_path):
     spark.createDataFrame(pages[120:], WEB_PAGES).coalesce(2).write.parquet(
         src + "/d=1"
     )
-    out2, res2 = run_incremental_kg(
-        spark, src + "/d=*", work, lex, hierarchy=hier
-    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out2, res2 = run_incremental_kg(
+            spark, src + "/d=*", work, lex, hierarchy=hier
+        )
     assert not res2.resumed
+    # a grown accumulator is the normal case: no snapshot-replaced warning
+    assert not [w for w in caught if "committed snapshot" in str(w.message)]
 
     batch = build_triples(
         spark.createDataFrame(pages, WEB_PAGES), lex, hierarchy=hier

@@ -229,6 +229,22 @@ def test_materialize_runs_no_job_beyond_the_write(spark, tmp_path):
     assert stage <= write
 
 
+def test_snapshot_commit_starts_only_the_write_jobs(spark, tmp_path):
+    """SnapshotTable counts a commit's rows from the Parquet footers: the
+    commit starts no Spark job beyond writing the same DataFrame."""
+    from pmcanalysis_spark.snapshots import SnapshotTable
+
+    df = spark.range(2000).selectExpr("id % 50 AS k", "id").groupBy("k").count()
+    write = _jobs_started(
+        spark, "snapshot-write", lambda: df.write.parquet(str(tmp_path / "plain"))
+    )
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    commit = _jobs_started(spark, "snapshot-commit", lambda: t.commit(df))
+    assert write >= 1
+    assert commit == write
+    assert t.snapshot(t.current_version())["row_count"] == 50
+
+
 def test_resume_starts_no_job(spark, tmp_path):
     """A resumed stage reads its snapshot with the schema stored in the
     manifest, so resuming starts no Spark job at all."""
@@ -244,6 +260,16 @@ def test_resume_starts_no_job(spark, tmp_path):
     assert resumed["res"].resumed
     assert resumed["out"].schema == spark.read.parquet(f"{base}/s/data").schema
     assert resumed["out"].count() == 50
+
+
+def test_replacing_a_committed_snapshot_warns(spark, tmp_path):
+    """A batch stage whose input fingerprint changed replaces its committed
+    snapshot, and says so."""
+    base = str(tmp_path / "stages")
+    materialize_stage(spark.range(5), "s", base, key_col="id", fingerprint="a")
+    with pytest.warns(UserWarning, match=r"stage 's': committed snapshot .* replacing it"):
+        out, res = materialize_stage(spark.range(7), "s", base, key_col="id", fingerprint="b")
+    assert not res.resumed and res.row_count == 7 and out.count() == 7
 
 
 def test_manifest_without_schema_is_recomputed(spark, tmp_path):

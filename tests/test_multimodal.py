@@ -28,30 +28,49 @@ def test_metadata_never_touches_payload(spark, tmp_path):
     assert rows == {"image": 2, "video": 1}
 
 
+def _synthetic_media(spark):
+    from pmcanalysis_spark.fixtures import build_media_rows
+
+    return spark.createDataFrame(build_media_rows(12), MEDIA)
+
+
 def test_feature_extraction_batch_shape(spark):
-    # synthetic unrecognized payloads exercise the batch plumbing — fakes
-    # are an explicit per-call opt-in since r4 (module default raises)
-    out = extract_media_features(_media(spark), use_fake_decode=True).collect()
-    by_id = {}
+    """Synthetic media through the decoder hook: FAKE-codec images and
+    videos go to ``fake_fast_decoder``, the PGM images to the built-in real
+    tier. Images yield one frame_idx-0 row, videos one row per sampled
+    frame."""
+    from pmcanalysis_spark.codecs import fake_fast_decoder
+
+    out = extract_media_features(
+        _synthetic_media(spark), frame_every=2, decoder=fake_fast_decoder
+    ).collect()
+    frames = {}
     for r in out:
-        by_id.setdefault(r.media_id, []).append(r)
-    assert len(by_id["m1"]) == 1 and by_id["m1"][0].frame_idx == 0
-    assert len(by_id["m3"]) >= 1  # video: >=1 sampled frame rows
-    for r in out:
-        assert r.width >= 16 and r.height >= 16
+        frames.setdefault(r.media_id, []).append((r.frame_idx, r.width, r.height))
         assert len(r.features) <= 8
+    # FAKE videos f1/f4/f7/f10 hold 2/1/4/3 frames; every 2nd is sampled
+    assert {m: [f[0] for f in sorted(fs)] for m, fs in frames.items()} == {
+        "p0": [0], "f1": [0], "f2": [0], "p3": [0], "f4": [0], "f5": [0],
+        "p6": [0], "f7": [0, 2], "f8": [0], "p9": [0], "f10": [0, 2], "f11": [0],
+    }
+    assert frames["p0"] == [(0, 2, 2)]  # real PGM header dims
+    assert frames["f5"] == [(0, 7, 2)]  # the FAKE header's dims
 
 
 def test_fake_decode_is_deterministic(spark):
-    a = sorted(map(str, extract_media_features(_media(spark), use_fake_decode=True).collect()))
-    b = sorted(map(str, extract_media_features(_media(spark), use_fake_decode=True).collect()))
-    assert a == b
+    from pmcanalysis_spark.codecs import fake_fast_decoder
+
+    def run():
+        out = extract_media_features(_synthetic_media(spark), decoder=fake_fast_decoder)
+        return sorted(map(str, out.collect()))
+
+    assert run() == run()
 
 
 def test_unrecognized_payload_raises_by_default(spark):
-    """Module default (USE_FAKE_DECODE=False): a payload no decoder
-    recognizes must fail the job loudly, not emit byte-derived garbage
-    features — a production pipeline fed WebP should find out."""
+    """A payload no decoder recognizes must fail the job loudly, not emit
+    byte-derived garbage features — a production pipeline fed WebP should
+    find out."""
     import pytest
     from pyspark.errors.exceptions.captured import PythonException
 

@@ -182,3 +182,21 @@ def test_diff_between_snapshots(spark, tmp_path):
     t.commit(dup, mode="append")                                # v4: 2,3,2
     d34 = [(r.id, r._change) for r in t.diff(3, 4).collect()]
     assert d34 == [(2, "added")]
+
+
+def test_compact_aborts_on_lost_rows(spark, tmp_path):
+    """The rewritten copy's footer total must equal the parent's row_count;
+    a mismatch aborts the compaction and removes the rewritten files."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.commit(_df(spark, 0, 5).coalesce(1))
+    v = t.commit(_df(spark, 5, 10).coalesce(1), mode="append")
+    path = os.path.join(t.root, "snapshots", f"v{v:06d}.json")
+    snap = t.snapshot(v)
+    snap["row_count"] = 11
+    with open(path, "w") as f:
+        json.dump(snap, f)
+    before = set(os.listdir(os.path.join(t.root, "data")))
+    with pytest.raises(RuntimeError, match=r"lost rows \(10 != 11\)"):
+        t.compact(target_file_size_bytes=1 << 30)
+    assert set(os.listdir(os.path.join(t.root, "data"))) == before
+    assert t.current_version() == v
