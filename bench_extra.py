@@ -35,13 +35,13 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     import bench as benchmod
     import __spark_entry__ as entrymod
     from pmcanalysis_spark.session import get_spark
 
-    spark = get_spark(app_name="bench-extra", cores=cores)
+    # cores from $SPARK_GRAFT_CPUS, else the machine's CPU count
+    spark = get_spark(app_name="bench-extra")
     qs = entrymod.queries()
     # identical warmup to bench.py
     qs["kg_mentions_docfreq"](spark, sf_dir).count()

@@ -579,7 +579,7 @@ def embedding_neardup_scalable(
     dim: int = 64,
     num_planes: int = 8,
     num_tables: int = 4,
-    max_group_size: int | None = 4096,
+    max_group_size: int = 4096,
 ) -> DataFrame:
     """Embedding near-dup pairs, LSH-candidates -> exact-cosine confirm.
 
@@ -597,64 +597,27 @@ def embedding_neardup_scalable(
     agree after ROUND(x, 6) — BLAS blocked summation vs the sequential
     fold). Plan: ONE narrow mapInPandas pass computes all
     num_tables×num_planes sign bits with a single V @ P.T matmul per Arrow
-    batch (a Column-expression bucket tree at 4×8×64 nodes measurably
-    chokes plan optimization), posexplode to (table, bucket) rows carrying
-    the vector, then ONE pairwise matmul per bucket confirms >= threshold
-    INSIDE the group (applyInPandas) — confirmed pairs are rare, so the
-    cross-table dedup groupBy that follows is tiny. Confirming inside the
-    bucket beats confirm-after-distinct by ~candidates/vectors in Arrow
-    transfer (measured 81.6s -> ~3s at 100k vectors, 20M candidates): each
+    batch (similarity._hyperplane_buckets), posexplode to (table, bucket)
+    rows carrying the vector, then ONE pairwise matmul per bucket confirms
+    >= threshold INSIDE the group (applyInPandas) — confirmed pairs are
+    rare, so the cross-table dedup groupBy that follows is tiny. Confirming
+    inside the bucket beats confirm-after-distinct by ~candidates/vectors in
+    Arrow transfer (measured 81.6s -> ~3s at 100k vectors, 20M candidates): each
     vector crosses Python once per table, never once per candidate pair.
     At 100 TB every shuffle key here is well-distributed (bucket ids from
     random hyperplanes, then pair ids); a residual mega bucket (many
     near-identical vectors hash together BY DESIGN) is bounded by
     ``max_group_size``: oversized buckets split into chunk-pair groups of
     <= 2*max_group_size rows (similarity._chunk_pairs) — each vector pair
-    still meets exactly once, so the confirm output is unchanged.
+    still meets exactly once, in one chunk-pair cosine block.
     """
     import numpy as np
     import pandas as pd
 
-    from .similarity import plane_component_py
-
-    P = [
-        [plane_component_py(t * num_planes + p, d) for d in range(dim)]
-        for t in range(num_tables)
-        for p in range(num_planes)
-    ]
-
-    def bucketize(batches):
-        Pm = np.asarray(P, dtype="float64")  # (T*planes, dim)
-        w = 1 << np.arange(num_planes, dtype="int64")
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.vstack(pdf["vec"].to_numpy())
-            S = (V @ Pm.T) >= 0.0  # (n, T*planes)
-            B = S.reshape(len(pdf), num_tables, num_planes) @ w  # (n, T)
-            vn = np.sqrt((V * V).sum(axis=1))
-            vn[vn == 0.0] = 1.0  # zero-vector guard (cosine 0, not NaN)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(dtype="int64"),
-                    "vec": pdf["vec"],
-                    "norm": vn,
-                    "buckets": list(B),
-                }
-            )
-
-    empty = pd.DataFrame(
-        {
-            "a_id": pd.Series([], dtype="int64"),
-            "b_id": pd.Series([], dtype="int64"),
-            "cosine": pd.Series([], dtype="float64"),
-        }
-    )
+    from .similarity import _hyperplane_buckets, _per_chunk_pair
 
     def _emit(x, y, cos):
         keep = cos >= threshold
-        if not keep.any():
-            return empty
         x, y = x[keep], y[keep]
         return pd.DataFrame(
             {
@@ -664,59 +627,22 @@ def embedding_neardup_scalable(
             }
         )
 
-    def confirm_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        n = len(pdf)
-        if n <= 1:
-            return empty
-        ids = pdf["id"].to_numpy(dtype="int64")
-        V = np.vstack(pdf["vec"].to_numpy())
-        norms = pdf["norm"].to_numpy(dtype="float64")
-        G = (V @ V.T) / np.outer(norms, norms)
-        iu = np.triu_indices(n, 1)
-        return _emit(ids[iu[0]], ids[iu[1]], G[iu])
-
-    def confirm_chunk_pair(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        """One (tbl, bucket, ci, cj) chunk-pair: ci == cj confirms within
-        the chunk (triu), ci < cj confirms the cross block — every pair in
-        the bucket is checked in exactly one chunk-pair group."""
-        n = len(pdf)
-        if n <= 1:
-            return empty
-        ci, cj = int(pdf["ci"].iat[0]), int(pdf["cj"].iat[0])
-        ids = pdf["id"].to_numpy(dtype="int64")
-        V = np.vstack(pdf["vec"].to_numpy())
-        norms = pdf["norm"].to_numpy(dtype="float64")
-        if ci == cj:
-            G = (V @ V.T) / np.outer(norms, norms)
-            iu = np.triu_indices(n, 1)
-            return _emit(ids[iu[0]], ids[iu[1]], G[iu])
-        ma = pdf["_c"].to_numpy() == ci
-        if not ma.any() or ma.all():
-            return empty
-        G = (V[ma] @ V[~ma].T) / np.outer(norms[ma], norms[~ma])
+    def confirm(rows, cols, G, diagonal):
+        """Every pair of a chunk-pair block checked once: the upper
+        triangle of a diagonal block, all of a cross block."""
+        if diagonal:
+            iu = np.triu_indices(len(rows), 1)
+            return _emit(rows[iu[0]], cols[iu[1]], G[iu])
         xi, yi = np.nonzero(G >= threshold)
-        if not len(xi):
-            return empty
-        return _emit(ids[ma][xi], ids[~ma][yi], G[xi, yi])
+        return _emit(rows[xi], cols[yi], G[xi, yi])
 
-    v = embeddings.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    )
-    banded = v.mapInPandas(
-        bucketize, "id long, vec array<double>, norm double, buckets array<long>"
+    banded = _hyperplane_buckets(
+        embeddings, id_col, vec_col, dim, num_planes, num_tables
     ).select("id", "vec", "norm", F.posexplode("buckets").alias("tbl", "bucket"))
-    if max_group_size is None:
-        confirmed = banded.groupBy("tbl", "bucket").applyInPandas(
-            confirm_group, "a_id long, b_id long, cosine double"
-        )
-    else:
-        from .similarity import _chunk_pairs
-
-        chunked = _chunk_pairs(banded, ["tbl", "bucket"], max_group_size)
-        confirmed = chunked.groupBy("tbl", "bucket", "ci", "cj").applyInPandas(
-            confirm_chunk_pair, "a_id long, b_id long, cosine double"
-        )
+    confirmed = _per_chunk_pair(
+        banded, ["tbl", "bucket"], max_group_size, confirm,
+        "a_id long, b_id long, cosine double",
+    )
     # a pair colliding in several tables is confirmed in each: dedup. max()
     # collapses the ulp-level spread between per-group BLAS evaluations of
     # the same dot product deterministically.
@@ -1245,7 +1171,7 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    max_group_size: int | None = 4096,
+    max_group_size: int = 4096,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication by k-means clustering + within-cluster cosine pruning —
@@ -1271,13 +1197,11 @@ def semantic_dedup(
     import numpy as np
     import pandas as pd
 
-    from .similarity import _chunk_pairs, ivf_assign
+    from .similarity import _per_chunk_pair, ivf_assign
 
     assigned = ivf_assign(
         embeddings, centroids, id_col=id_col, vec_col=vec_col
     )
-
-    empty = pd.DataFrame({"id": pd.Series([], dtype="int64")})
 
     def _dropped(ids_a, ids_b, G):
         """ids of b-side vectors with an a-side neighbor of smaller id and
@@ -1285,49 +1209,15 @@ def semantic_dedup(
         hit = (np.round(G, 6) >= threshold) & (
             ids_a[:, None] < ids_b[None, :]
         )
-        out = np.unique(ids_b[hit.any(axis=0)])
-        return pd.DataFrame({"id": out}) if len(out) else empty
+        return ids_b[hit.any(axis=0)]
 
-    def drop_in_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        n = len(pdf)
-        if n <= 1:
-            return empty
-        ids = pdf["id"].to_numpy(dtype="int64")
-        V = np.vstack(pdf["vec"].to_numpy())
-        norms = pdf["norm"].to_numpy(dtype="float64")
-        G = (V @ V.T) / np.outer(norms, norms)
-        return _dropped(ids, ids, G)
+    def drop(rows, cols, G, diagonal):
+        out = _dropped(rows, cols, G)
+        if not diagonal:  # cross block: smaller-id may sit on either side
+            out = np.concatenate([out, _dropped(cols, rows, G.T)])
+        return pd.DataFrame({"id": np.unique(out)})
 
-    def drop_in_chunk_pair(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        n = len(pdf)
-        if n <= 1:
-            return empty
-        ci, cj = int(pdf["ci"].iat[0]), int(pdf["cj"].iat[0])
-        ids = pdf["id"].to_numpy(dtype="int64")
-        V = np.vstack(pdf["vec"].to_numpy())
-        norms = pdf["norm"].to_numpy(dtype="float64")
-        if ci == cj:
-            G = (V @ V.T) / np.outer(norms, norms)
-            return _dropped(ids, ids, G)
-        ma = pdf["_c"].to_numpy() == ci
-        if not ma.any() or ma.all():
-            return empty
-        G = (V[ma] @ V[~ma].T) / np.outer(norms[ma], norms[~ma])
-        # cross block: smaller-id may sit on either side
-        d1 = _dropped(ids[ma], ids[~ma], G)
-        d2 = _dropped(ids[~ma], ids[ma], G.T)
-        return pd.concat([d1, d2], ignore_index=True)
-
-    if max_group_size is None:
-        dropped = assigned.groupBy("cell").applyInPandas(
-            drop_in_cell, "id long"
-        )
-    else:
-        chunked = _chunk_pairs(assigned, ["cell"], max_group_size)
-        dropped = chunked.groupBy("cell", "ci", "cj").applyInPandas(
-            drop_in_chunk_pair, "id long"
-        )
-    dropped = dropped.distinct()
+    dropped = _per_chunk_pair(assigned, ["cell"], max_group_size, drop, "id long").distinct()
     return (
         assigned.join(dropped.withColumn("_drop", F.lit(True)), "id", "left")
         .select(
@@ -1500,29 +1390,17 @@ def semantic_decontaminate(
     import numpy as np
     import pandas as pd
 
-    erows = (
-        eval_vecs.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
-        )
-        .orderBy("id")
-        .collect()
-    )
-    E = [list(r["vec"]) for r in erows]
+    from .similarity import _cosines, _id_vec, _norms, _vec_batches
+
+    E = [list(r["vec"]) for r in _id_vec(eval_vecs, id_col, vec_col).orderBy("id").collect()]
 
     def part(batches):
         Em = np.asarray(E, dtype="float64")
         if len(Em):
-            en = np.sqrt((Em * Em).sum(axis=1))
-            en[en == 0.0] = 1.0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.vstack(pdf["vec"].to_numpy())
-            vn = np.sqrt((V * V).sum(axis=1))
-            vn[vn == 0.0] = 1.0
+            en = _norms(Em)
+        for pdf, V in _vec_batches(batches):
             if len(Em):
-                S = np.round((V @ Em.T) / np.outer(vn, en), 6)
+                S = np.round(_cosines(V, _norms(V), Em, en), 6)
                 mx = S.max(axis=1)
             else:
                 mx = np.full(len(V), float("-inf"))
@@ -1534,7 +1412,6 @@ def semantic_decontaminate(
                 }
             )
 
-    return corpus.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    ).mapInPandas(part, "vec_id long, max_sim double, contaminated boolean")
+    return _id_vec(corpus, id_col, vec_col).mapInPandas(
+        part, "vec_id long, max_sim double, contaminated boolean"
+    )

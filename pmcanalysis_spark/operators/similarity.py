@@ -18,6 +18,8 @@ Spark and any oracle can regenerate them bit-for-bit without a stored model.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -36,9 +38,104 @@ def _norm(a):
     """L2 norm with the zero-vector guard (norm 0 -> 1): a degenerate
     all-zero vector then scores cosine 0 against everything instead of
     0/0 = NaN (which Spark's desc ordering ranks FIRST — the numpy kernels
-    apply the same ``n[n == 0] = 1`` guard)."""
+    apply the same guard in ``_norms``)."""
     n = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
     return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
+
+
+# -- shared kernel helpers: every ANN/dedup operator below and in dedup.py
+# -- runs its numpy arithmetic through these, none keeps its own copy.
+
+
+def _id_vec(df: DataFrame, id_col: str, vec_col: str, *carry: str) -> DataFrame:
+    """(id long, vec array<double>, *carry): the rows every kernel reads."""
+    return df.select(
+        F.col(id_col).cast("long").alias("id"),
+        F.col(vec_col).cast("array<double>").alias("vec"),
+        *[F.col(c) for c in carry],
+    )
+
+
+def _vec_batches(batches):
+    """(batch, V) for each non-empty Arrow batch of ``_id_vec`` rows; V is
+    the batch's (rows × dim) float64 matrix."""
+    for pdf in batches:
+        if len(pdf):
+            yield pdf, np.vstack(pdf["vec"].to_numpy())
+
+
+def _norms(V):
+    """Row L2 norms with ``_norm``'s zero-vector guard (norm 0 -> 1)."""
+    n = np.sqrt((V * V).sum(axis=1))
+    n[n == 0.0] = 1.0
+    return n
+
+
+def _cosines(A, a_norms, B, b_norms):
+    """The cosine block A @ B.T / outer(a_norms, b_norms): one BLAS matmul."""
+    return (A @ B.T) / np.outer(a_norms, b_norms)
+
+
+def _row_topk(q_ids, i_ids, S, k: int) -> pd.DataFrame:
+    """(query_id, item_id, cosine): the top-k of each row of S, ranked by
+    (-cosine, item_id) like the oracles' window; -inf entries (masked
+    self-pairs) are dropped."""
+    kk = min(k, S.shape[1])
+    out_q, out_i, out_c = [], [], []
+    for qi in range(S.shape[0]):
+        row = S[qi]
+        order = np.lexsort((i_ids, -row))[:kk]
+        keep = row[order] > -np.inf
+        out_q.extend([q_ids[qi]] * int(keep.sum()))
+        out_i.extend(i_ids[order][keep])
+        out_c.extend(row[order][keep])
+    return pd.DataFrame(
+        {
+            "query_id": pd.Series(out_q, dtype="int64"),
+            "item_id": pd.Series(out_i, dtype="int64"),
+            "cosine": pd.Series(out_c, dtype="float64"),
+        }
+    )
+
+
+def _top_rank(df: DataFrame, k: int, value: str, order) -> DataFrame:
+    """(query_id, item_id, value, rank): each query's first k rows by
+    (order, item_id). Merging partial top-ks this way IS the global top-k:
+    the partials were cut on the same key."""
+    w = Window.partitionBy("query_id").orderBy(order, "item_id")
+    return (
+        df.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "item_id", value, "rank")
+    )
+
+
+def _sorted_vectors(pairs) -> list[tuple[int, list[float]]]:
+    """[(int id, [float, ...])] sorted by id: the normal form of a centroid
+    list and of one PQ codebook."""
+    return sorted((int(c), [float(x) for x in v]) for c, v in pairs)
+
+
+def _component_means(comps: DataFrame, keys: list[str]) -> dict:
+    """{(*keys): [mean per pos, in pos order]} of (*keys, pos, val) rows,
+    collected to the driver. Each mean is an order-independent
+    DECIMAL(28,12) sum divided in DOUBLE, the repo's cross-engine float
+    recipe, so it is bit-reproducible under any partitioning/retry and
+    replayable by the SQL oracles."""
+    rows = (
+        comps.groupBy(*keys, "pos")
+        .agg(
+            (
+                F.sum(F.col("val").cast("decimal(28,12)")).cast("double")
+                / F.count("*")
+            ).alias("m")
+        )
+        .collect()
+    )
+    by_key: dict[tuple, dict[int, float]] = {}
+    for r in rows:
+        by_key.setdefault(tuple(int(r[c]) for c in keys), {})[int(r["pos"])] = float(r["m"])
+    return {key: [m[p] for p in sorted(m)] for key, m in by_key.items()}
 
 
 def cosine_topk(
@@ -57,117 +154,24 @@ def cosine_topk(
     q×k×n_batches rows, not q×n. (Top-k of a union of per-batch top-ks IS
     the global top-k; tie order preserved by the shared (-cosine, item_id)
     sort key.)"""
-    import numpy as np
-    import pandas as pd
-
-    qrows = (
-        queries.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
-        )
-        .orderBy("id")
-        .collect()
-    )
+    qrows = _id_vec(queries, id_col, vec_col).orderBy("id").collect()
     qids = [int(r["id"]) for r in qrows]
     Q = [list(r["vec"]) for r in qrows]
     if not qids:
-        spark = embeddings.sparkSession
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
 
     def part(batches):
         Qm = np.asarray(Q, dtype="float64")
-        qn = np.sqrt((Qm * Qm).sum(axis=1))
-        qn[qn == 0.0] = 1.0
+        qn = _norms(Qm)
         qida = np.asarray(qids, dtype="int64")
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.vstack(pdf["vec"].to_numpy())
-            vn = np.sqrt((V * V).sum(axis=1))
-            vn[vn == 0.0] = 1.0  # zero-vector guard, mirrors _norm
+        for pdf, V in _vec_batches(batches):
             ids = pdf["id"].to_numpy(dtype="int64")
-            S = (Qm @ V.T) / np.outer(qn, vn)  # (q, batch)
+            S = _cosines(Qm, qn, V, _norms(V))  # (q, batch)
             S[qida[:, None] == ids[None, :]] = -np.inf  # self-match
-            kk = min(k, S.shape[1])
-            out_q, out_i, out_c = [], [], []
-            for qi in range(len(qida)):
-                row = S[qi]
-                order = np.lexsort((ids, -row))[:kk]
-                keep = row[order] > -np.inf
-                out_q.extend([qida[qi]] * int(keep.sum()))
-                out_i.extend(ids[order][keep])
-                out_c.extend(row[order][keep])
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(out_q, dtype="int64"),
-                    "item_id": pd.Series(out_i, dtype="int64"),
-                    "cosine": pd.Series(out_c, dtype="float64"),
-                }
-            )
+            yield _row_topk(qida, ids, S, k)
 
-    partials = embeddings.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    ).mapInPandas(part, _PARTIAL_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("item_id"))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "item_id", "cosine", "rank")
-    )
-
-
-def _group_topk_fn(k: int):
-    """applyInPandas kernel: within one candidate group (IVF cell / LSH
-    bucket), compute the full pairwise cosine matrix with ONE BLAS matmul
-    and emit per-query top-k. Each vector crosses the Arrow boundary once
-    per group (O(n) transfer), not once per pair (O(n²)) — the reason this
-    beats both the interpreted HOF fold and a per-pair pandas UDF.
-
-    Ordering matches the oracles' window exactly: rank by (-cosine,
-    item_id) via lexsort; ulp-level differences between BLAS blocked
-    summation and the oracles' sequential fold are absorbed by ROUND(cosine,
-    6)."""
-    import numpy as np
-    import pandas as pd
-
-    empty = pd.DataFrame(
-        {
-            "query_id": pd.Series([], dtype="int64"),
-            "item_id": pd.Series([], dtype="int64"),
-            "cosine": pd.Series([], dtype="float64"),
-            "rank": pd.Series([], dtype="int32"),
-        }
-    )
-
-    def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        n = len(pdf)
-        if n <= 1:
-            return empty
-        ids = pdf["id"].to_numpy(dtype="int64")
-        V = np.vstack(pdf["vec"].to_numpy())
-        norms = pdf["norm"].to_numpy(dtype="float64")
-        G = (V @ V.T) / np.outer(norms, norms)
-        np.fill_diagonal(G, -np.inf)  # exclude self-pairs
-        kk = min(k, n - 1)
-        qs = np.repeat(ids, kk)
-        its = np.empty(n * kk, dtype="int64")
-        cs = np.empty(n * kk, dtype="float64")
-        for i in range(n):
-            row = G[i]
-            order = np.lexsort((ids, -row))[:kk]
-            its[i * kk : (i + 1) * kk] = ids[order]
-            cs[i * kk : (i + 1) * kk] = row[order]
-        return pd.DataFrame(
-            {
-                "query_id": qs,
-                "item_id": its,
-                "cosine": cs,
-                "rank": np.tile(np.arange(1, kk + 1, dtype="int32"), n),
-            }
-        )
-
-    return fn
+    partials = _id_vec(embeddings, id_col, vec_col).mapInPandas(part, _PARTIAL_SCHEMA)
+    return _top_rank(partials, k, "cosine", F.desc("cosine"))
 
 
 _TOPK_SCHEMA = "query_id long, item_id long, cosine double, rank int"
@@ -193,7 +197,7 @@ def _chunk_pairs(df: DataFrame, group_cols: list[str], max_group_size: int) -> D
     (no second scan, no join; the group-key shuffle it introduces replaces
     the shuffle the downstream per-group kernel needed anyway).
     For n <= max_group_size: m = 1, a single (0,0) chunk-pair per group —
-    byte-identical grouping to the uncapped path.
+    one matmul over the whole group.
     Requires an ``id`` column (used for the deterministic chunk hash).
     """
     wsize = Window.partitionBy(*group_cols)
@@ -213,93 +217,68 @@ def _chunk_pairs(df: DataFrame, group_cols: list[str], max_group_size: int) -> D
     )
 
 
-def _chunk_pair_topk_fn(k: int):
-    """applyInPandas kernel for one (group, ci, cj) chunk-pair: PARTIAL
-    per-query top-k (no rank — a window merges partials across a query's
-    chunk-pairs). ci == cj: pairwise within the chunk (diagonal masked);
-    ci < cj: one cross matmul, both sides act as queries."""
-    import numpy as np
-    import pandas as pd
+def _chunk_pair_block(pdf: pd.DataFrame):
+    """The cosine block of one (group..., ci, cj) chunk-pair group as
+    (row ids, column ids, G, diagonal), or None when it holds no pair.
+    ci == cj: the chunk against itself (diagonal; G is symmetric with the
+    self-pairs on its diagonal). ci < cj: the ci rows against the cj rows,
+    so each cross pair appears once."""
+    if len(pdf) <= 1:
+        return None
+    ids = pdf["id"].to_numpy(dtype="int64")
+    V = np.vstack(pdf["vec"].to_numpy())
+    norms = pdf["norm"].to_numpy(dtype="float64")
+    ci = int(pdf["ci"].iat[0])
+    if ci == int(pdf["cj"].iat[0]):
+        return ids, ids, _cosines(V, norms, V, norms), True
+    ma = pdf["_c"].to_numpy() == ci
+    if not ma.any() or ma.all():
+        return None
+    return ids[ma], ids[~ma], _cosines(V[ma], norms[ma], V[~ma], norms[~ma]), False
 
-    empty = pd.DataFrame(
-        {
-            "query_id": pd.Series([], dtype="int64"),
-            "item_id": pd.Series([], dtype="int64"),
-            "cosine": pd.Series([], dtype="float64"),
-        }
+
+def _per_chunk_pair(
+    df: DataFrame, group_cols: list[str], max_group_size: int, reduce, schema: str
+) -> DataFrame:
+    """All pairs within each group of (id, vec, norm, *group_cols) rows, as
+    ONE BLAS matmul per bounded chunk-pair (``_chunk_pairs``): applyInPandas
+    runs ``reduce(row_ids, col_ids, G, diagonal)`` on each chunk-pair's
+    cosine block (``_chunk_pair_block``) and returns its ``schema`` rows.
+    Each vector crosses the Arrow boundary once per chunk-pair, never once
+    per pair; a chunk-pair with no pair yields no rows."""
+    chunked = _chunk_pairs(
+        df.select("id", "vec", "norm", *group_cols), group_cols, max_group_size
     )
 
-    def topk_rows(q_ids, i_ids, S):
-        kk = min(k, S.shape[1])
-        out_q, out_i, out_c = [], [], []
-        for qi in range(S.shape[0]):
-            row = S[qi]
-            order = np.lexsort((i_ids, -row))[:kk]
-            keep = row[order] > -np.inf
-            out_q.extend([q_ids[qi]] * int(keep.sum()))
-            out_i.extend(i_ids[order][keep])
-            out_c.extend(row[order][keep])
-        return out_q, out_i, out_c
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        block = _chunk_pair_block(pdf)
+        return pd.DataFrame() if block is None else reduce(*block)
 
-    def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        n = len(pdf)
-        if n <= 1:
-            return empty
-        ci, cj = int(pdf["ci"].iat[0]), int(pdf["cj"].iat[0])
-        ids = pdf["id"].to_numpy(dtype="int64")
-        V = np.vstack(pdf["vec"].to_numpy())
-        norms = pdf["norm"].to_numpy(dtype="float64")
-        if ci == cj:
-            G = (V @ V.T) / np.outer(norms, norms)
-            np.fill_diagonal(G, -np.inf)
-            q, i, c = topk_rows(ids, ids, G)
-        else:
-            ma = pdf["_c"].to_numpy() == ci
-            if not ma.any() or ma.all():
-                return empty
-            G = (V[ma] @ V[~ma].T) / np.outer(norms[ma], norms[~ma])
-            qa, ia, ca = topk_rows(ids[ma], ids[~ma], G)
-            qb, ib, cb = topk_rows(ids[~ma], ids[ma], G.T)
-            q, i, c = qa + qb, ia + ib, ca + cb
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(q, dtype="int64"),
-                "item_id": pd.Series(i, dtype="int64"),
-                "cosine": pd.Series(c, dtype="float64"),
-            }
-        )
-
-    return fn
+    return chunked.groupBy(*group_cols, "ci", "cj").applyInPandas(fn, schema)
 
 
 def _grouped_topk(
-    assigned: DataFrame,
-    group_cols: list[str],
-    k: int,
-    max_group_size: int | None,
+    assigned: DataFrame, group_cols: list[str], k: int, max_group_size: int
 ) -> DataFrame:
     """Per-group exact top-k over (id, vec, norm, *group_cols), mega-group
-    safe: with ``max_group_size`` set, oversized groups run as bounded
-    chunk-pair matmuls and a window merges the per-chunk-pair partial top-ks
-    (top-k of a union of partial top-ks IS the global top-k; tie order
-    preserved by the shared (-cosine, item_id) key). With None, one
-    applyInPandas per whole group (the r2 uncapped behavior)."""
-    if max_group_size is None:
-        return assigned.groupBy(*group_cols).applyInPandas(
-            _group_topk_fn(k), _TOPK_SCHEMA
+    safe: each chunk-pair emits a PARTIAL per-query top-k and a window
+    merges them (top-k of a union of partial top-ks IS the global top-k;
+    tie order preserved by the shared (-cosine, item_id) key). Ulp-level
+    differences between BLAS blocked summation and the oracles' sequential
+    fold are absorbed by ROUND(cosine, 6)."""
+
+    def topk(rows, cols, G, diagonal):
+        if diagonal:
+            np.fill_diagonal(G, -np.inf)  # exclude self-pairs
+            return _row_topk(rows, cols, G, k)
+        # cross block: both sides act as queries
+        return pd.concat(
+            [_row_topk(rows, cols, G, k), _row_topk(cols, rows, G.T, k)],
+            ignore_index=True,
         )
-    chunked = _chunk_pairs(
-        assigned.select("id", "vec", "norm", *group_cols), group_cols, max_group_size
-    )
-    partials = chunked.groupBy(*group_cols, "ci", "cj").applyInPandas(
-        _chunk_pair_topk_fn(k), _PARTIAL_SCHEMA
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("item_id"))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "item_id", "cosine", "rank")
-    )
+
+    partials = _per_chunk_pair(assigned, group_cols, max_group_size, topk, _PARTIAL_SCHEMA)
+    return _top_rank(partials, k, "cosine", F.desc("cosine"))
 
 
 def plane_component_py(plane: int, dim: int) -> float:
@@ -313,6 +292,44 @@ def plane_component_py(plane: int, dim: int) -> float:
 
     h = int(hashlib.md5(f"{plane}:{dim}".encode()).hexdigest()[:8], 16)
     return h / float(1 << 32) - 0.5
+
+
+def _hyperplane_buckets(
+    embeddings: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    num_planes: int,
+    num_tables: int,
+) -> DataFrame:
+    """(id, vec, norm, buckets array<long>): bit p of table t's bucket is
+    the sign of v · plane ``t * num_planes + p`` (``plane_component_py``),
+    so table 0 uses planes 0..num_planes-1. All tables' bits and the norms
+    come from ONE V @ P.T matmul per Arrow batch (a Column-expression bucket
+    tree at 4×8×64 nodes measurably chokes plan optimization)."""
+    P = [
+        [plane_component_py(t * num_planes + p, d) for d in range(dim)]
+        for t in range(num_tables)
+        for p in range(num_planes)
+    ]
+
+    def bucketize(batches):
+        Pm = np.asarray(P, dtype="float64")  # (T*planes, dim)
+        w = 1 << np.arange(num_planes, dtype="int64")
+        for pdf, V in _vec_batches(batches):
+            S = (V @ Pm.T) >= 0.0  # (n, T*planes)
+            yield pd.DataFrame(
+                {
+                    "id": pdf["id"].to_numpy(dtype="int64"),
+                    "vec": pdf["vec"],
+                    "norm": _norms(V),
+                    "buckets": list(S.reshape(len(pdf), num_tables, num_planes) @ w),
+                }
+            )
+
+    return _id_vec(embeddings, id_col, vec_col).mapInPandas(
+        bucketize, "id long, vec array<double>, norm double, buckets array<long>"
+    )
 
 
 def ivf_assign(
@@ -330,24 +347,16 @@ def ivf_assign(
     Returns (id, vec, norm, cell). Ties (two equal cosines) break to the
     FIRST centroid in the given list (argmax first-occurrence).
     """
-    import numpy as np
-    import pandas as pd
-
     cell_ids = [int(c) for c, _ in centroids]
     C = [[float(x) for x in cvec] for _, cvec in centroids]
 
     def assign(batches):
         Cm = np.asarray(C, dtype="float64")
-        cn = np.sqrt((Cm * Cm).sum(axis=1))
-        cn[cn == 0.0] = 1.0
+        cn = _norms(Cm)
         cells = np.asarray(cell_ids, dtype="int64")
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.vstack(pdf["vec"].to_numpy())
-            vn = np.sqrt((V * V).sum(axis=1))
-            vn[vn == 0.0] = 1.0  # zero-vector guard, mirrors _norm
-            scores = (V @ Cm.T) / np.outer(vn, cn)
+        for pdf, V in _vec_batches(batches):
+            vn = _norms(V)
+            scores = _cosines(V, vn, Cm, cn)
             best = cells[np.argmax(scores, axis=1)]  # first max = lowest id
             yield pd.DataFrame(
                 {
@@ -358,11 +367,9 @@ def ivf_assign(
                 }
             )
 
-    v = embeddings.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
+    return _id_vec(embeddings, id_col, vec_col).mapInPandas(
+        assign, "id long, vec array<double>, norm double, cell long"
     )
-    return v.mapInPandas(assign, "id long, vec array<double>, norm double, cell long")
 
 
 def ivf_topk(
@@ -371,7 +378,7 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    max_group_size: int | None = 4096,
+    max_group_size: int = 4096,
 ) -> DataFrame:
     """IVF ANN (the scale path alongside LSH): candidates share a coarse
     cell; exact cosine + top-k within the cell. Work ∝ Σ cell_size², not
@@ -381,8 +388,8 @@ def ivf_topk(
     each vector crosses Arrow once per cell. applyInPandas groups can't be
     AQE-skew-split, so a mega-cell is guarded by ``max_group_size`` (default
     4096): oversized cells run as bounded chunk-pair matmuls + a
-    partial-top-k merge (see _chunk_pairs); cells under the cap take the
-    single-matmul path."""
+    partial-top-k merge (see _chunk_pairs); a cell under the cap is one
+    chunk-pair, one matmul."""
     assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
     return _grouped_topk(assigned, ["cell"], k, max_group_size)
 
@@ -394,7 +401,7 @@ def lsh_bucketed_topk(
     dim: int = 64,
     num_planes: int = 8,
     k: int = 10,
-    max_group_size: int | None = 4096,
+    max_group_size: int = 4096,
 ) -> DataFrame:
     """ANN: candidates share a hyperplane-sign bucket; exact cosine + top-k
     within candidates. Recall < 1 by design; union multiple plane sets for
@@ -402,36 +409,16 @@ def lsh_bucketed_topk(
 
     Bucket bits (bit p = sign of v · plane_p, planes from
     ``plane_component_py``) and norms come from ONE V @ P.T mapInPandas
-    pass, then one BLAS matmul per bucket, mega-buckets chunk-pair-bounded
-    by ``max_group_size`` (see ivf_topk)."""
-    import numpy as np
-    import pandas as pd
-
-    P = [[plane_component_py(p, d) for d in range(dim)] for p in range(num_planes)]
-
-    def bucketize(batches):
-        Pm = np.asarray(P, dtype="float64")
-        w = 1 << np.arange(num_planes, dtype="int64")
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.vstack(pdf["vec"].to_numpy())
-            vn = np.sqrt((V * V).sum(axis=1))
-            vn[vn == 0.0] = 1.0  # zero-vector guard, mirrors _norm
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(dtype="int64"),
-                    "vec": pdf["vec"],
-                    "norm": vn,
-                    "bucket": ((V @ Pm.T) >= 0.0) @ w,
-                }
-            )
-
-    bucketed = embeddings.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    ).mapInPandas(bucketize, "id long, vec array<double>, norm double, bucket long")
-    return _grouped_topk(bucketed, ["bucket"], k, max_group_size)
+    pass (``_hyperplane_buckets`` with one table), then one BLAS matmul per
+    bucket, mega-buckets chunk-pair-bounded by ``max_group_size`` (see
+    ivf_topk)."""
+    bucketed = _hyperplane_buckets(embeddings, id_col, vec_col, dim, num_planes, 1)
+    return _grouped_topk(
+        bucketed.select("id", "vec", "norm", F.col("buckets")[0].alias("bucket")),
+        ["bucket"],
+        k,
+        max_group_size,
+    )
 
 
 def train_centroids(
@@ -464,29 +451,15 @@ def train_centroids(
     (FAISS-style empty-cell reseeding is a production knob, not index
     semantics); ties assign to the lowest cell id.
     """
-    cents = sorted(((int(c), [float(x) for x in v]) for c, v in init))
+    cents = _sorted_vectors(init)
     for _ in range(n_iter):
         if not cents:
             break
         assigned = ivf_assign(embeddings, cents, id_col, vec_col)
-        rows = (
-            assigned.select("cell", F.posexplode("vec").alias("pos", "val"))
-            .groupBy("cell", "pos")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("decimal(28,12)")).cast("double")
-                    / F.count("*")
-                ).alias("m")
-            )
-            .collect()
+        means = _component_means(
+            assigned.select("cell", F.posexplode("vec").alias("pos", "val")), ["cell"]
         )
-        by_cell: dict[int, dict[int, float]] = {}
-        for r in rows:
-            by_cell.setdefault(int(r["cell"]), {})[int(r["pos"])] = float(r["m"])
-        cents = [
-            (cell, [comps[p] for p in sorted(comps)])
-            for cell, comps in sorted(by_cell.items())
-        ]
+        cents = [(cell, comps) for (cell,), comps in sorted(means.items())]
     return cents
 
 
@@ -549,11 +522,8 @@ def train_pq_codebooks(
     """
     if not init:
         return []
-    m = len(init)
     d_sub = len(init[0][0][1])
-    books = [
-        sorted(((int(c), [float(x) for x in v]) for c, v in cb)) for cb in init
-    ]
+    books = [_sorted_vectors(cb) for cb in init]
     vec_d = f"__tpq_{vec_col}"
     prepped = embeddings.select(
         F.col(id_col),
@@ -571,31 +541,9 @@ def train_pq_codebooks(
                 F.expr(f"slice(vec, s * {d_sub} + 1, {d_sub})")
             ).alias("pos", "val"),
         )
-        rows = (
-            comp.groupBy("s", "code", "pos")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("decimal(28,12)")).cast("double")
-                    / F.count("*")
-                ).alias("m")
-            )
-            .collect()
-        )
-        means: dict[tuple[int, int], dict[int, float]] = {}
-        for r in rows:
-            means.setdefault((int(r["s"]), int(r["code"])), {})[int(r["pos"])] = (
-                float(r["m"])
-            )
+        means = _component_means(comp, ["s", "code"])
         books = [
-            [
-                (
-                    code,
-                    [comps[p] for p in sorted(comps)]
-                    if (comps := means.get((s, code)))
-                    else old,
-                )
-                for code, old in cb
-            ]
+            [(code, means.get((s, code), old)) for code, old in cb]
             for s, cb in enumerate(books)
         ]
     return books
@@ -624,24 +572,19 @@ def pq_encode(
     ``ivf_assign``. ``carry_cols`` pass through the UDF batch unchanged
     (e.g. the IVF cell id in ``ivfpq_topk``), so composing with a routing
     stage costs no extra join."""
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     m = len(codebooks)
     if not m:
         raise ValueError("empty codebooks")
     d_sub = len(codebooks[0][0][1])
-    books = [sorted(((int(c), [float(x) for x in v]) for c, v in cb)) for cb in codebooks]
+    books = [_sorted_vectors(cb) for cb in codebooks]
     carry = list(carry_cols)
 
     def encode(batches):
         Cs = [np.asarray([v for _, v in cb], dtype="float64") for cb in books]
         ids_per_s = [np.asarray([c for c, _ in cb], dtype="int64") for cb in books]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.vstack(pdf["vec"].to_numpy())
+        for pdf, V in _vec_batches(batches):
             codes = np.empty((len(pdf), m), dtype="int64")
             for s in range(m):
                 Vs = V[:, s * d_sub : (s + 1) * d_sub]
@@ -659,11 +602,7 @@ def pq_encode(
                 out[c] = pdf[c]
             yield pd.DataFrame(out)
 
-    v = embeddings.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-        *[F.col(c) for c in carry],
-    )
+    v = _id_vec(embeddings, id_col, vec_col, *carry)
     schema = StructType(
         [
             StructField("id", LongType()),
@@ -672,6 +611,52 @@ def pq_encode(
         + [v.schema[c] for c in carry]
     )
     return v.mapInPandas(encode, schema)
+
+
+def _adc_topk(codes: DataFrame, lut_rows: list[tuple], keys: list[str], k: int) -> DataFrame:
+    """The ADC scoring tail of ``pq_adc_topk`` and ``ivfpq_topk``.
+    ``lut_rows`` are (query_id, *keys, q_s, codeword), ``keys`` ending in
+    ("s", "code") with an optional leading "cell" that also matches the
+    item's IVF cell. Each LUT term = ROUND(Σ (q_s − c)², 9) folded left to
+    right IN-ENGINE (the fold DuckDB's list_dot_product replays); an item's
+    adist = ROUND(DECIMAL(28,9) sum of its m gathered terms, 6), an
+    order-independent agg; each query keeps its k lowest by (adist,
+    item_id). Plan: explode codes to (item, [cell,] s, code) →
+    broadcast-join the LUT → groupBy item (map-side partials on the unique
+    item key) → per-query top-k window."""
+    types = {"cell": "long", "s": "int", "code": "long"}
+    lut = codes.sparkSession.createDataFrame(
+        lut_rows,
+        ", ".join(
+            ["query_id long"]
+            + [f"{c} {types[c]}" for c in keys]
+            + ["qsvec array<double>", "cvec array<double>"]
+        ),
+    ).select(
+        "query_id",
+        *keys,
+        F.round(
+            F.aggregate(
+                F.zip_with(F.col("qsvec"), F.col("cvec"), lambda a, b: (a - b) * (a - b)),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ),
+            9,
+        ).alias("term"),
+    )
+    exploded = codes.select(
+        F.col("id").alias("item_id"), *keys[:-2], F.posexplode("codes").alias("s", "code")
+    )
+    scored = (
+        exploded.join(F.broadcast(lut), keys)
+        .groupBy("query_id", "item_id")
+        .agg(
+            F.round(
+                F.sum(F.col("term").cast("decimal(28,9)")).cast("double"), 6
+            ).alias("adist")
+        )
+    )
+    return _top_rank(scored, k, "adist", "adist")
 
 
 def pq_adc_topk(
@@ -698,51 +683,16 @@ def pq_adc_topk(
     (item, s, code) → broadcast-join the q·m·k-row LUT → groupBy item
     (map-side partials on the unique item key) → per-query top-k window.
     """
-    spark = embeddings.sparkSession
-    m = len(codebooks)
     d_sub = len(codebooks[0][0][1])
-    books = [sorted(((int(c), [float(x) for x in v]) for c, v in cb)) for cb in codebooks]
-    lut_base = spark.createDataFrame(
-        [
-            (int(qid), s, c, [float(x) for x in qvec[s * d_sub : (s + 1) * d_sub]], cv)
-            for qid, qvec in queries
-            for s, cb in enumerate(books)
-            for c, cv in cb
-        ],
-        "query_id long, s int, code long, qsvec array<double>, cvec array<double>",
-    )
-    lut = lut_base.select(
-        "query_id",
-        "s",
-        "code",
-        F.round(
-            F.aggregate(
-                F.zip_with(F.col("qsvec"), F.col("cvec"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            9,
-        ).alias("term"),
-    )
+    books = [_sorted_vectors(cb) for cb in codebooks]
+    lut_rows = [
+        (int(qid), s, c, [float(x) for x in qvec[s * d_sub : (s + 1) * d_sub]], cv)
+        for qid, qvec in queries
+        for s, cb in enumerate(books)
+        for c, cv in cb
+    ]
     codes = pq_encode(embeddings, codebooks, id_col, vec_col)
-    exploded = codes.select(
-        F.col("id").alias("item_id"), F.posexplode("codes").alias("s", "code")
-    )
-    scored = (
-        exploded.join(F.broadcast(lut), ["s", "code"])
-        .groupBy("query_id", "item_id")
-        .agg(
-            F.round(
-                F.sum(F.col("term").cast("decimal(28,9)")).cast("double"), 6
-            ).alias("adist")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("adist", "item_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "item_id", "adist", "rank")
-    )
+    return _adc_topk(codes, lut_rows, ["s", "code"], k)
 
 
 def ivfpq_topk(
@@ -778,9 +728,8 @@ def ivfpq_topk(
     driver-side with the same left-to-right fold the SQL replays.
     """
     spark = embeddings.sparkSession
-    m = len(codebooks)
     d_sub = len(codebooks[0][0][1])
-    cents = sorted(((int(c), [float(x) for x in v]) for c, v in centroids))
+    cents = _sorted_vectors(centroids)
 
     assigned = ivf_assign(embeddings, cents, id_col, vec_col)
     cent_df = spark.createDataFrame(cents, "cell long, centv array<double>")
@@ -805,7 +754,8 @@ def ivfpq_topk(
             num += a * b
         return num / ((_fold_dot(q) ** 0.5) * (_fold_dot(c) ** 0.5))
 
-    books = [sorted(((int(c), [float(x) for x in v]) for c, v in cb)) for cb in codebooks]
+    books = [_sorted_vectors(cb) for cb in codebooks]
+    cent_of = dict(cents)
     lut_rows = []
     for qid, qvec in queries:
         qv = [float(x) for x in qvec]
@@ -813,47 +763,11 @@ def ivfpq_topk(
             ((-_cos(qv, cv), cell) for cell, cv in cents)
         )[:nprobe]
         for _, cell in ranked:
-            centv = dict(cents)[cell]
-            qres = [a - b for a, b in zip(qv, centv)]
+            qres = [a - b for a, b in zip(qv, cent_of[cell])]
             for s, cb in enumerate(books):
                 for code, cv in cb:
                     lut_rows.append(
                         (int(qid), int(cell), s, code,
                          qres[s * d_sub : (s + 1) * d_sub], cv)
                     )
-    lut = spark.createDataFrame(
-        lut_rows,
-        "query_id long, cell long, s int, code long, "
-        "qsvec array<double>, cvec array<double>",
-    ).select(
-        "query_id",
-        "cell",
-        "s",
-        "code",
-        F.round(
-            F.aggregate(
-                F.zip_with(F.col("qsvec"), F.col("cvec"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            9,
-        ).alias("term"),
-    )
-    exploded = codes.select(
-        F.col("id").alias("item_id"), "cell", F.posexplode("codes").alias("s", "code")
-    )
-    scored = (
-        exploded.join(F.broadcast(lut), ["cell", "s", "code"])
-        .groupBy("query_id", "item_id")
-        .agg(
-            F.round(
-                F.sum(F.col("term").cast("decimal(28,9)")).cast("double"), 6
-            ).alias("adist")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("adist", "item_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "item_id", "adist", "rank")
-    )
+    return _adc_topk(codes, lut_rows, ["cell", "s", "code"], k)

@@ -8,7 +8,8 @@ Layout (all paths relative to the table root):
 
     data/<commit-uuid>/part-*.parquet   -- immutable data files per commit
     snapshots/v<NNNNNN>.json            -- snapshot metadata (file list,
-                                           operation, parent, row count)
+                                           operation, parent, row count,
+                                           schema)
     _current.json                       -- commit pointer (rename-last)
 
 Semantics, matching the Iceberg model point for point:
@@ -48,6 +49,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .lineage import footer_row_count
 
@@ -135,6 +137,7 @@ class SnapshotTable:
             "operation": mode,
             "files": files,
             "row_count": rows,
+            "schema": df.schema.jsonValue(),
         }
         try:
             return self._commit_snapshot(snap)
@@ -152,17 +155,24 @@ class SnapshotTable:
             "operation": f"rollback_to_{version}",
             "files": old["files"],
             "row_count": old["row_count"],
+            "schema": old.get("schema"),
         }
         return self._commit_snapshot(snap)
 
     # -- reads -------------------------------------------------------------
     def read(self, snapshot_id: int | None = None) -> DataFrame:
+        """The rows of ``snapshot_id`` (default: the current snapshot), read
+        with the schema stored in its snapshot json, so building the read
+        starts no schema-inference Spark job."""
         version = snapshot_id if snapshot_id is not None else self.current_version()
         if version is None:
             raise FileNotFoundError(f"no committed snapshot in {self.root}")
         snap = self.snapshot(version)
         paths = [os.path.join(self.root, "data", d) for d in snap["files"]]
-        return self.spark.read.parquet(*paths)
+        reader = self.spark.read
+        if snap.get("schema"):  # None in snapshots written before it was stored
+            reader = reader.schema(StructType.fromJson(snap["schema"]))
+        return reader.parquet(*paths)
 
     def diff(self, from_version: int, to_version: int) -> DataFrame:
         """Row-level diff between two snapshots: what a consumer pinned to
@@ -236,6 +246,7 @@ class SnapshotTable:
             "operation": "compact",
             "files": [commit_dir],
             "row_count": n,
+            "schema": psnap.get("schema"),
         }
         try:
             return self._commit_snapshot(snap)

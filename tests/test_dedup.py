@@ -202,11 +202,15 @@ def test_embedding_neardup_scalable_recall(spark):
 def test_embedding_neardup_mega_bucket_chunked_identical(spark):
     """Planted mega-bucket: near-identical vectors land in the SAME LSH
     bucket by design; with a small max_group_size the confirm runs as
-    bounded chunk-pair blocks and must emit the same pairs (cosines equal
-    after ROUND 6) as the uncapped whole-bucket matmul."""
+    bounded chunk-pair blocks (cross blocks included) and must emit exactly
+    the pairs a numpy brute force finds: same bucket in some table (planes
+    from ``plane_component_py``), cosine >= threshold, cosines equal after
+    ROUND 6."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from pmcanalysis_spark.operators.dedup import embedding_neardup_scalable
+    from pmcanalysis_spark.operators.similarity import plane_component_py
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
         F.col("vec_id").cast("long").alias("vec_id"),
@@ -229,16 +233,28 @@ def test_embedding_neardup_mega_bucket_chunked_identical(spark):
     )
     corpus = emb.unionByName(clones)
 
-    def rows(mgs):
-        out = embedding_neardup_scalable(
-            corpus, id_col="vec_id", vec_col="vec",
-            threshold=0.99, dim=64, num_planes=8, num_tables=4,
-            max_group_size=mgs,
-        ).select("a_id", "b_id", F.round("cosine", 6).alias("cosine"))
-        return sorted(tuple(r) for r in out.collect())
+    out = embedding_neardup_scalable(
+        corpus, id_col="vec_id", vec_col="vec",
+        threshold=0.99, dim=64, num_planes=8, num_tables=4,
+        max_group_size=32,
+    ).select("a_id", "b_id", F.round("cosine", 6).alias("cosine"))
+    capped = sorted(tuple(r) for r in out.collect())
 
-    capped = rows(32)
-    assert capped == rows(None)
+    rows = sorted((int(r.vec_id), list(r.vec)) for r in corpus.collect())
+    ids = np.asarray([i for i, _ in rows])
+    X = np.asarray([v for _, v in rows])
+    P = np.asarray(
+        [[plane_component_py(p, d) for d in range(64)] for p in range(4 * 8)]
+    )
+    B = ((X @ P.T) >= 0.0).reshape(len(X), 4, 8) @ (1 << np.arange(8))
+    share = (B[:, None, :] == B[None, :, :]).any(axis=2)
+    n = np.sqrt((X * X).sum(axis=1))
+    S = (X @ X.T) / np.outer(n, n)
+    a, b = np.nonzero(np.triu(share & (S >= 0.99), 1))
+    want = sorted(
+        (int(ids[x]), int(ids[y]), round(float(S[x, y]), 6)) for x, y in zip(a, b)
+    )
+    assert capped == want
     assert len(capped) >= 200 * 199 // 2  # the planted clique is confirmed
 
 
@@ -543,28 +559,44 @@ def test_semantic_dedup_within_cell_lowest_id_wins(spark):
 
 def test_semantic_dedup_chunked_identical(spark):
     """The mega-cell chunk-pair guard must not change a single verdict:
-    max_group_size=3 (forces multi-chunk cells) == uncapped, on a corpus
-    where one cell holds many near-identical vectors."""
+    max_group_size=3 (forces multi-chunk cells, cross blocks included)
+    equals a Python replay of lowest-id-wins per cell, on a corpus where
+    one cell holds many near-identical vectors."""
+    import math
+
     from pmcanalysis_spark.operators.dedup import semantic_dedup
 
     cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
     rows = [(i, [1.0, 0.001 * i]) for i in range(20)] + [
         (100 + i, [0.001 * i, 1.0]) for i in range(5)
     ]
+    # a near-dup pair in cell 1 (7 rows -> 3 chunks) whose lower id sits in
+    # the higher chunk (203 % 3 == 2, 210 % 3 == 0): only the cross block's
+    # transposed side can drop 210
+    rows += [(203, [0.6, 1.0]), (210, [0.6, 1.0005])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    base = sorted(
-        (r.vec_id, r.cell, r.keep)
-        for r in semantic_dedup(emb, cents, threshold=0.999,
-                                max_group_size=None).collect()
-    )
     chunked = sorted(
         (r.vec_id, r.cell, r.keep)
         for r in semantic_dedup(emb, cents, threshold=0.999,
                                 max_group_size=3).collect()
     )
-    assert base == chunked
+
+    def cos(u, v):
+        return sum(a * b for a, b in zip(u, v)) / (math.hypot(*u) * math.hypot(*v))
+
+    # nearest centroid, ties to the first; dropped iff a lower-id cellmate
+    # has ROUND(cosine, 6) >= threshold
+    cell = {i: max(cents, key=lambda c: cos(v, c[1]))[0] for i, v in rows}
+    replay = sorted(
+        (i, cell[i], not any(
+            j < i and cell[j] == cell[i] and round(cos(u, v), 6) >= 0.999
+            for j, u in rows
+        ))
+        for i, v in rows
+    )
+    assert chunked == replay
     # sanity: the dense cell really did drop someone, and id 0 survived
-    kept0 = [v for v, c, k in base if c == 0 and k]
+    kept0 = [v for v, c, k in chunked if c == 0 and k]
     assert 0 in kept0 and len(kept0) < 20
 
 

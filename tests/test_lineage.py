@@ -245,6 +245,38 @@ def test_snapshot_commit_starts_only_the_write_jobs(spark, tmp_path):
     assert t.snapshot(t.current_version())["row_count"] == 50
 
 
+def test_snapshot_read_and_diff_start_no_job(spark, tmp_path):
+    """SnapshotTable reads with the schema stored in each snapshot json, so
+    building a read or a diff starts no Spark job; rollback and compact
+    keep the schema, and a snapshot json without one is still read, by
+    inference."""
+    import json
+
+    from pmcanalysis_spark.snapshots import SnapshotTable
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.commit(spark.range(0, 3).selectExpr("id", "id * 10 AS v"))
+    t.commit(spark.range(3, 5).selectExpr("id", "id * 10 AS v"), mode="append")
+    assert _jobs_started(spark, "snapshot-read", t.read) == 0
+    assert _jobs_started(spark, "snapshot-diff", lambda: t.diff(1, 2)) == 0
+    inferred = spark.read.parquet(*[f"{t.root}/data/{d}" for d in t.snapshot(2)["files"]])
+    assert t.read().schema == inferred.schema
+    assert sorted(r.id for r in t.diff(1, 2).collect()) == [3, 4]
+
+    schema = t.snapshot(2)["schema"]
+    assert t.snapshot(t.rollback(1))["schema"] == schema
+    t.commit(spark.range(5, 6).selectExpr("id", "id * 10 AS v"), mode="append")
+    assert t.snapshot(t.compact(target_file_size_bytes=1 << 30))["schema"] == schema
+
+    path = f"{t.root}/snapshots/v000002.json"
+    legacy = t.snapshot(2)
+    del legacy["schema"]
+    with open(path, "w") as f:
+        json.dump(legacy, f)
+    assert _jobs_started(spark, "snapshot-read-legacy", lambda: t.read(2)) == 1
+    assert sorted((r.id, r.v) for r in t.read(2).collect()) == [(i, i * 10) for i in range(5)]
+
+
 def test_resume_starts_no_job(spark, tmp_path):
     """A resumed stage reads its snapshot with the schema stored in the
     manifest, so resuming starts no Spark job at all."""

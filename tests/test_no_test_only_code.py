@@ -13,13 +13,16 @@ A switch is a parameter of a package function or method whose default is
 ``None``, ``True`` or ``False``. Some non-test call site must pass it, by
 keyword or by position; a call matches a def by name, and a class call
 matches its ``__init__``. Passing along a parameter of an enclosing def
-counts only when that parameter is itself passed.
+counts only when that parameter is itself passed, a conditional expression
+passes what its branches pass, and a literal equal to the switch's own
+default passes nothing.
 """
 
 from __future__ import annotations
 
 import ast
 import re
+import textwrap
 from functools import cache
 from itertools import takewhile
 from pathlib import Path
@@ -152,20 +155,21 @@ def _unreached() -> tuple[list[tuple[str, str]], list[tuple[str, str]]]:
     return unreached_defs, sorted(c for c in constants if c[1] not in reached)
 
 
-def _switches(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> list[str]:
-    """The parameters of ``fn`` whose default is None, True or False."""
+def _switches(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> dict[str, bool | None]:
+    """The parameters of ``fn`` whose default is None, True or False, with
+    that default."""
     a = fn.args
     pos = a.posonlyargs + a.args
     pairs = [*zip(pos[len(pos) - len(a.defaults):], a.defaults), *zip(a.kwonlyargs, a.kw_defaults)]
-    return [
-        arg.arg for arg, d in pairs
+    return {
+        arg.arg: d.value for arg, d in pairs
         if isinstance(d, ast.Constant) and (d.value is None or isinstance(d.value, bool))
-    ]
+    }
 
 
-def _package_functions():
+def _package_functions(sources):
     """(module, qualname, call name, positional params a call fills, node)."""
-    for module, tree in _sources():
+    for module, tree in sources:
         if module is None:
             continue
         for stmt in tree.body:
@@ -182,17 +186,21 @@ def _package_functions():
 
 
 @cache
-def _unset_switches() -> list[tuple[str, str, str]]:
+def _unset_switches(sources: tuple[tuple[str | None, ast.Module], ...]) -> list[tuple[str, str, str]]:
+    """The switches of ``sources`` ((package module or None, tree) pairs,
+    as ``_sources`` gives) that no call passes."""
     by_call: dict[str, list[tuple[str, str, list[str]]]] = {}
     key_of: dict[ast.AST, tuple[str, str]] = {}
-    switches: set[tuple[str, str, str]] = set()
-    for module, qual, call, params, fn in _package_functions():
+    defaults: dict[tuple[str, str, str], bool | None] = {}
+    for module, qual, call, params, fn in _package_functions(sources):
         by_call.setdefault(call, []).append((module, qual, params))
         key_of[fn] = (module, qual)
-        switches |= {(module, qual, p) for p in _switches(fn)}
+        defaults |= {(module, qual, p): d for p, d in _switches(fn).items()}
+    switches = set(defaults)
 
-    # switch -> the switches whose being set makes it set (None: set outright)
-    setters: dict[tuple[str, str, str], set] = {}
+    # switch -> the ways a call sets it, each the set of switches that must
+    # all be set for that call to pass a value (empty: set outright)
+    setters: dict[tuple[str, str, str], set[frozenset]] = {}
 
     def visit(node: ast.AST, enclosing: tuple) -> None:
         for child in ast.iter_child_nodes(node):
@@ -206,28 +214,52 @@ def _unset_switches() -> list[tuple[str, str, str]]:
                     given = [(k.arg, k.value) for k in child.keywords if k.arg]
                     given += zip(params, takewhile(lambda a: not isinstance(a, ast.Starred), child.args))
                     for param, value in given:
-                        setters.setdefault((module, qual, param), set()).add(_passed_from(value, enclosing))
+                        key = (module, qual, param)
+                        setters.setdefault(key, set()).update(_passed_from(value, enclosing, key))
             visit(child, inner)
 
-    def _passed_from(value: ast.expr, enclosing: tuple):
-        """The switch of an enclosing def that ``value`` passes along, or
-        None when the value is set outright."""
-        if isinstance(value, ast.Name):
-            for fn in reversed(enclosing):
-                a = fn.args
-                if value.id in {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}:
-                    key = (*key_of.get(fn, ("", "")), value.id)
-                    return key if key in switches else None
+    def _enclosing_switch(name: str, enclosing: tuple):
+        """The switch that ``name`` reads when it is a parameter of the
+        nearest enclosing def having it, else None."""
+        for fn in reversed(enclosing):
+            a = fn.args
+            if name in {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}:
+                key = (*key_of.get(fn, ("", "")), name)
+                return key if key in switches else None
         return None
 
-    for _module, tree in _sources():
+    def _passed_from(value: ast.expr, enclosing: tuple, key: tuple) -> set[frozenset]:
+        """The ways passing ``value`` sets ``key``. A literal equal to
+        ``key``'s own default sets nothing, an enclosing switch passed along
+        sets it when that switch is set, and a conditional sets it through
+        its branches; a branch that runs only when the test's switch is set
+        also needs that switch."""
+        if isinstance(value, ast.IfExp):
+            body = _passed_from(value.body, enclosing, key)
+            orelse = _passed_from(value.orelse, enclosing, key)
+            test, negated = value.test, False
+            if isinstance(test, ast.UnaryOp) and isinstance(test.op, ast.Not):
+                test, negated = test.operand, True
+            flag = _enclosing_switch(test.id, enclosing) if isinstance(test, ast.Name) else None
+            if flag:
+                if bool(defaults[flag]) == negated:  # unset, the test is false
+                    body = {ways | {flag} for ways in body}
+                else:
+                    orelse = {ways | {flag} for ways in orelse}
+            return body | orelse
+        if isinstance(value, ast.Constant) and key in defaults and value.value is defaults[key]:
+            return set()
+        passed = _enclosing_switch(value.id, enclosing) if isinstance(value, ast.Name) else None
+        return {frozenset({passed} if passed else ())}
+
+    for _module, tree in sources:
         visit(tree, ())
     is_set: set = set()
     grew = True
     while grew:
         grew = False
-        for key, sources in setters.items():
-            if key not in is_set and (None in sources or sources & is_set):
+        for key, ways in setters.items():
+            if key not in is_set and any(w <= is_set for w in ways):
                 is_set.add(key)
                 grew = True
     return sorted(
@@ -250,15 +282,39 @@ def test_allowlist_names_only_unreached_defs():
 
 
 def test_every_switch_is_set_by_a_non_test_caller():
-    unset = [s for s in _unset_switches() if s not in ALLOWED_SWITCHES]
+    unset = [s for s in _unset_switches(_sources()) if s not in ALLOWED_SWITCHES]
     assert not unset, (
         "None/True/False-default parameters that no non-test caller passes "
         f"(keep the branch callers run and delete the parameter): {unset}"
     )
 
 
+def test_switch_passed_as_its_default_or_through_an_unset_switch_stays_unset():
+    """A conditional passes only what its branches pass, and a literal equal
+    to the parameter's own default passes nothing."""
+
+    module = textwrap.dedent("""
+        def f(x=None, y=False):
+            return x, y
+
+        def g(a, flag=False):
+            return f(x=a if flag else None)
+    """)
+
+    def unset(*calls: str) -> list[tuple[str, str, str]]:
+        return _unset_switches((("m", ast.parse("\n".join([module, *calls]))),))
+
+    assert ("m", "f", "x") in unset()
+    assert ("m", "f", "x") in unset("f(x=None, y=False)")
+    assert ("m", "f", "y") in unset("f(1, False)")
+    # the same shapes set the switch once the branch or the value does
+    assert ("m", "f", "x") not in unset("g(1, flag=True)")
+    assert ("m", "f", "x") not in unset("f(x=0)")
+    assert ("m", "f", "y") not in unset("f(y=True)")
+
+
 def test_switch_allowlist_names_only_unset_switches():
-    stale = ALLOWED_SWITCHES - set(_unset_switches())
+    stale = ALLOWED_SWITCHES - set(_unset_switches(_sources()))
     assert not stale, f"allowlisted switches that now have a caller or are gone: {sorted(stale)}"
 
 

@@ -2,7 +2,11 @@ from __future__ import annotations
 
 import math
 
-from pmcanalysis_spark.operators.similarity import cosine_topk, lsh_bucketed_topk
+from pmcanalysis_spark.operators.similarity import (
+    cosine_topk,
+    lsh_bucketed_topk,
+    plane_component_py,
+)
 
 VECS = [
     (1, [1.0, 0.0, 0.0, 0.0]),
@@ -87,49 +91,53 @@ def test_chunk_pairs_bounded_and_exact(spark):
     assert set(seen.values()) == {1}  # each pair exactly once
 
 
-def test_ivf_topk_mega_cell_chunked_identical(spark):
-    """Planted mega-cell: ONE centroid puts all 1500 sf0.001 vectors in one
-    cell; with max_group_size=64 the confirm runs as ~24x24 bounded
-    chunk-pair tasks and must produce rows identical (after ROUND 6) to the
-    uncapped single-matmul path."""
+def _sf_vectors(emb):
+    return [(int(r.vec_id), [float(x) for x in r.embedding]) for r in emb.collect()]
+
+
+def _rounded_topk(df):
     from pyspark.sql import functions as F
 
+    out = df.select("query_id", "item_id", F.round("cosine", 6).alias("cosine"), "rank")
+    return sorted(tuple(r) for r in out.collect())
+
+
+def test_ivf_topk_mega_cell_chunked_identical(spark):
+    """Planted mega-cell: ONE centroid puts all 1500 sf0.001 vectors in one
+    cell; with max_group_size=64 the search runs as ~24x24 bounded
+    chunk-pair tasks (cross blocks included) and its rows equal (after
+    ROUND 6) a numpy brute force over all pairs."""
     from pmcanalysis_spark.operators.similarity import ivf_topk
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = [(0, [1.0] * 64)]
-
-    def rows(mgs):
-        out = ivf_topk(emb, cents, k=3, max_group_size=mgs).select(
-            "query_id", "item_id", F.round("cosine", 6).alias("cosine"), "rank"
-        )
-        return sorted(tuple(r) for r in out.collect())
-
-    capped = rows(64)
-    assert capped == rows(None) and len(capped) == 3 * emb.count()
+    capped = _rounded_topk(ivf_topk(emb, cents, k=3, max_group_size=64))
+    assert capped == _brute_topk(_sf_vectors(emb), 3)
+    assert len(capped) == 3 * emb.count()
 
 
 def test_lsh_topk_chunked_matches_sql(spark):
-    """The chunked LSH path equals the uncapped one-matmul-per-bucket path
-    row for row (the bucket assignment itself is pinned by the
-    ``sim_lsh_topk`` DuckDB oracle)."""
-    from pyspark.sql import functions as F
+    """The chunked LSH path equals a numpy brute force within buckets
+    computed from ``plane_component_py`` (the bucket assignment itself is
+    pinned by the ``sim_lsh_topk`` DuckDB oracle)."""
+    from collections import Counter
+
+    import numpy as np
 
     from pmcanalysis_spark.operators.similarity import lsh_bucketed_topk
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-
-    def rows(mgs):
-        out = lsh_bucketed_topk(
-            emb, dim=64, num_planes=4, k=3, max_group_size=mgs
-        ).select(
-            "query_id", "item_id", F.round("cosine", 6).alias("cosine"), "rank"
-        )
-        return sorted(tuple(r) for r in out.collect())
-
+    vecs = _sf_vectors(emb)
+    P = np.asarray([[plane_component_py(p, d) for d in range(64)] for p in range(4)])
+    X = np.asarray([v for _, v in vecs])
+    bits = ((X @ P.T) >= 0.0) @ (1 << np.arange(4))
+    bucket = {i: int(b) for (i, _), b in zip(vecs, bits)}
     # 4 planes over 1500 vectors -> buckets of ~90; cap 32 forces chunking
-    capped = rows(32)
-    assert capped == rows(None) and len(capped) == 3 * emb.count()
+    capped = _rounded_topk(
+        lsh_bucketed_topk(emb, dim=64, num_planes=4, k=3, max_group_size=32)
+    )
+    assert capped == _brute_topk(vecs, 3, bucket) and len(capped) == 3 * len(vecs)
+    assert max(Counter(bucket.values()).values()) > 32
 
 
 def _brute_topk(vecs, k, group=None):
