@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
+
 END_OF_WORD = "</w>"
 CHECKPOINT_EVERY = 8
 
@@ -45,9 +47,7 @@ def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over whitespace tokens — the one corpus scan BPE needs.
     At 100 TB this is the map-side-combined groupBy that shrinks the
     problem from corpus tokens to distinct words."""
-    tok = F.explode(
-        F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    ).alias("word")
+    tok = F.explode(tokens(F.col(text_col))).alias("word")
     return docs.select(tok).groupBy("word").agg(F.count("*").alias("freq"))
 
 

@@ -29,9 +29,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
+
 
 def _tokens(df: DataFrame, id_col: str, text_col: str, outer: bool) -> DataFrame:
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks = tokens(F.col(text_col))
     ex = F.explode_outer(toks) if outer else F.explode(toks)
     keep = [F.col(c) for c in df.columns if c not in (id_col, text_col)]
     return df.select(F.col(id_col).alias("doc_id"), *keep, ex.alias("token"))

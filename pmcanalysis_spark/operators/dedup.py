@@ -1,7 +1,11 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-All portable-hash based (md5 prefix -> bigint) so DuckDB oracles can verify
-bit-for-bit, and all expressed as native Column algebra (zero Python UDFs):
+The text and hash operators are portable-hash based (md5 prefix -> bigint)
+so DuckDB oracles can verify them bit-for-bit, and are native Column
+algebra with no Python crossing. The embedding operators
+(``embedding_neardup_scalable``, ``semantic_dedup``,
+``semantic_decontaminate``) run numpy kernels through mapInPandas /
+applyInPandas, sharing the helpers in ``similarity.py``.
 
 - exact_dedup: hash-groupBy, keep min doc_id per identical text.
 - ngram_jaccard_pairs: shingle -> explode -> self-join on shingle ->
@@ -26,30 +30,10 @@ and are exactly the quadratic-join fuel).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def gram_index(toks, n: int):
-    """Window start indices 0..size-n when the document has at least ``n``
-    tokens, else an EMPTY array — every index then yields a full n-token
-    window, so the old per-gram ``size(split(gram)) == n`` re-tokenization
-    filter (guide §1.2 "per-task work": it re-split every generated gram)
-    is unnecessary. Emitted grams are identical: the filter only ever
-    dropped the single short window of a doc with < n tokens, which this
-    never generates."""
-    return F.when(
-        F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
-    ).otherwise(F.array().cast("array<int>"))
-
-
-def portable_hash64(col, seed: int = 0):
-    """Deterministic cross-engine 60-bit hash: first 15 hex chars of
-    md5(seed || value) as bigint. DuckDB equivalent:
-    CAST(concat('0x', substr(md5(concat(CAST(seed AS VARCHAR), '|', v)),1,15)) AS BIGINT)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(str(seed)), F.lit("|"), col)), 1, 15), 16, 10
-    ).cast("long")
+from ..functions.text import ngrams, portable_hash64
 
 
 def exact_dedup(
@@ -94,12 +78,8 @@ def shingles_raw(docs: DataFrame, id_col: str, text_col: str, n: int = 3) -> Dat
     consumers that are duplicate-invariant (MinHash takes a min over the
     permuted hashes, so repeated shingles cannot change any signature) and
     would otherwise pay the distinct's full exchange for nothing (r6)."""
-    toks = F.split(F.col(text_col), " ")
-    grams = F.transform(
-        gram_index(toks, n), lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))
-    )
     return docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(grams).alias("shingle")
+        F.col(id_col).alias("doc_id"), F.explode(ngrams(F.col(text_col), n)).alias("shingle")
     )
 
 
@@ -184,6 +164,83 @@ def ngram_jaccard_pairs(
 MERSENNE61 = (1 << 61) - 1
 
 
+def _shingle_h1(shingle: Column) -> Column:
+    """A shingle's 60-bit identity h1: the first 15 hex chars of
+    md5(shingle). The MinHash permutations, the signature store's hash
+    sets and the batch confirm all use this one hash."""
+    return F.conv(F.substring(F.md5(shingle), 1, 15), 16, 10).cast("long")
+
+
+def _minhash_slots(sh: DataFrame, num_hashes: int, *extra: Column) -> DataFrame:
+    """(doc_id, h0..h{num_hashes-1}, *extra): ONE groupBy(doc) over
+    (doc_id, shingle) rows computing every MinHash slot plus any extra
+    aggregates a caller adds (over the per-row ``h1`` / ``h2`` columns).
+
+    Slot i is min over shingles of the affine permutation g_i = (h1 +
+    i*h2) mod (2^61-1), derived from ONE md5 per shingle (h1 = hex[1:15],
+    h2 = hex[16:30]). h1 is 60 bits, so h2 is reduced mod 2^57 first,
+    keeping i*h2 < 2^61 for i < 16: the family is sized for at most 16
+    hashes. All integer ops exist verbatim in DuckDB for the oracle."""
+    if not 1 <= num_hashes <= 16:
+        raise ValueError(
+            f"num_hashes must be in 1..16 (the affine family's size), got {num_hashes}"
+        )
+    h2 = F.pmod(
+        F.conv(F.substring(F.md5(F.col("shingle")), 16, 15), 16, 10).cast("long"),
+        F.lit(1 << 57).cast("long"),
+    )
+    hashed = sh.select("doc_id", _shingle_h1(F.col("shingle")).alias("h1"), h2.alias("h2"))
+    mins = [
+        F.min(
+            F.pmod(
+                F.col("h1") + F.lit(i) * F.col("h2"),
+                F.lit(MERSENNE61).cast("long"),
+            )
+        ).alias(f"h{i}")
+        for i in range(num_hashes)
+    ]
+    return hashed.groupBy("doc_id").agg(*mins, *extra)
+
+
+def _band_keys(slots: list[Column], bands: int) -> Column:
+    """array<string>[bands]: the LSH band keys of one signature — band b is
+    its len(slots)/bands consecutive slots joined by ','. Docs sharing a
+    band key in any band are LSH candidates."""
+    if bands < 1 or len(slots) % bands:
+        raise ValueError(
+            f"bands must divide num_hashes, got bands={bands}, num_hashes={len(slots)}"
+        )
+    rows = len(slots) // bands
+    return F.array(
+        *[
+            F.concat_ws(",", *[slots[b * rows + r].cast("string") for r in range(rows)])
+            for b in range(bands)
+        ]
+    )
+
+
+def _hashset_jaccard(cand: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """(a_id, b_id, jaccard >= threshold): the exact confirm of candidate
+    pairs over per-doc sorted hash sets ``sets(doc_id, sh)``. Each pair
+    picks up its two arrays by two id-joins and intersects them JVM-side
+    (``array_intersect``, O(|A|+|B|) per pair, per-row memory bounded by
+    the largest single doc); jaccard = |A∩B| / (|A| + |B| - |A∩B|)."""
+    a_side = sets.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("sh_a"))
+    b_side = sets.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
+    return (
+        cand.join(a_side, "a_id")
+        .join(b_side, "b_id")
+        .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
+        .withColumn(
+            "jaccard",
+            F.col("n_inter").cast("double")
+            / (F.size("sh_a") + F.size("sh_b") - F.col("n_inter")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("a_id", "b_id", "jaccard")
+    )
+
+
 def minhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -192,30 +249,12 @@ def minhash_signatures(
     num_hashes: int = 16,
 ) -> DataFrame:
     """(doc_id, sig: array<bigint>) — sig[i] = min over shingles of the i-th
-    permutation hash. One shuffle (groupBy doc).
-
-    Permutations use the standard affine family g_i = (h1 + i*h2) mod
-    (2^61-1) derived from ONE md5 per shingle (h1 = hex[1:15], h2 =
-    hex[16:30]) — 60-bit values, so h1 + i*h2 stays under 2^63 for i <= 7
-    and under 2^63 needs i*h2 < 2^63 - 2^60: safe for num_hashes <= 4 only…
-    so h2 is reduced mod 2^57 first, keeping i*h2 < 2^61 for i < 16. All
-    integer ops exist verbatim in DuckDB for the oracle.
+    affine permutation hash (``_minhash_slots``; ``num_hashes`` <= 16).
+    One shuffle (groupBy doc).
     """
-    assert num_hashes <= 16, "affine-family derivation sized for <= 16 hashes"
     # duplicate shingles cannot change a min, so the raw gram stream skips
     # the per-doc distinct exchange entirely
-    sh = shingles_raw(docs, id_col, text_col, n)
-    md5 = F.md5(F.col("shingle"))
-    h1 = F.conv(F.substring(md5, 1, 15), 16, 10).cast("long")
-    h2 = F.pmod(F.conv(F.substring(md5, 16, 15), 16, 10).cast("long"),
-                F.lit(1 << 57).cast("long"))
-    hashed = sh.select("doc_id", h1.alias("h1"), h2.alias("h2"))
-    mins = [
-        F.min(F.pmod(F.col("h1") + F.lit(i) * F.col("h2"),
-                     F.lit(MERSENNE61).cast("long"))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    agg = hashed.groupBy("doc_id").agg(*mins)
+    agg = _minhash_slots(shingles_raw(docs, id_col, text_col, n), num_hashes)
     return agg.select(
         "doc_id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
     )
@@ -233,26 +272,10 @@ def minhash_lsh_pairs(
     num_hashes/bands rows; docs colliding on any full band are candidates.
     Returns distinct (a_id, b_id). Scale path for near-dedup: work is
     proportional to bucket collisions, not doc pairs."""
-    rows_per_band = num_hashes // bands
     sig = minhash_signatures(docs, id_col, text_col, n, num_hashes)
-    banded = sig.select(
-        "doc_id",
-        "sig",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col("sig")[b * rows_per_band + r].cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
+    keys = _band_keys([F.col("sig")[i] for i in range(num_hashes)], bands)
+    banded = sig.select("doc_id", "sig", F.posexplode(keys).alias("band", "bucket"))
+    rows_per_band = num_hashes // bands
     # explicit width: the banded table is tiny in bytes while bucket
     # collisions expand quadratically — keep AQE from coalescing the
     # expansion narrow (see hamming_pairs)
@@ -341,36 +364,18 @@ def neardup_text_scalable(
     cand = minhash_lsh_pairs(docs, id_col, text_col, n, num_hashes, bands)
     sh = _drop_hot_shingles(shingles(docs, id_col, text_col, n), docs, id_col, max_shingle_df)
     # confirm via per-doc HASH SETS (r6): pack each doc's hot-filtered
-    # shingles into one sorted 60-bit-hash array (the same h1 identity the
-    # MinHash permutations and the incremental signature store already
-    # use), then attach the two arrays to each LSH candidate and intersect
-    # JVM-side. This replaces two exploded-shingle joins + an intersection
-    # groupBy + a sizes aggregate with ONE groupBy(doc) and two narrow
-    # id-joins — per-pair work is O(|A|+|B|) on candidates only, per-row
-    # memory bounded by the largest single doc, and h1 collisions perturb
-    # a Jaccard by ~|A|·|B|/2^60 (vanishing; the DuckDB oracle replays the
-    # identical hash so the value check stays exact).
+    # shingles into one sorted array of their h1 identities (the hash the
+    # MinHash permutations and the incremental signature store use), then
+    # run the shared hash-set confirm. ONE groupBy(doc) and two narrow
+    # id-joins replace two exploded-shingle joins + an intersection
+    # groupBy + a sizes aggregate; per-pair work is O(|A|+|B|) on
+    # candidates only. The DuckDB oracle compares exact shingle strings,
+    # so the two agree unless two of a pair's shingles collide in h1 (a
+    # ~|A|·|B|/2^60 event).
     hs = sh.groupBy("doc_id").agg(
-        F.sort_array(F.collect_set(portable_hash64(F.col("shingle")))).alias("_hs")
+        F.sort_array(F.collect_set(_shingle_h1(F.col("shingle")))).alias("sh")
     )
-    return (
-        cand.join(
-            hs.select(F.col("doc_id").alias("a_id"), F.col("_hs").alias("_ha")),
-            "a_id",
-        )
-        .join(
-            hs.select(F.col("doc_id").alias("b_id"), F.col("_hs").alias("_hb")),
-            "b_id",
-        )
-        .withColumn("n_inter", F.size(F.array_intersect("_ha", "_hb")))
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.size("_ha") + F.size("_hb") - F.col("n_inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
-    )
+    return _hashset_jaccard(cand, hs, threshold)
 
 
 def neardup_text_clusters(
@@ -431,42 +436,14 @@ def neardup_signature_store(
     scan, ONE groupBy(doc): minhash mins, the bucket keys, and the sorted
     hash set all come out of the same aggregate.
     """
-    assert num_hashes <= 16, "affine-family derivation sized for <= 16 hashes"
-    rows_per_band = num_hashes // bands
     # duplicate-invariant consumers only (min + collect_set): raw grams,
     # no distinct exchange
-    sh = shingles_raw(docs, id_col, text_col, n)
-    md5 = F.md5(F.col("shingle"))
-    h1 = F.conv(F.substring(md5, 1, 15), 16, 10).cast("long")
-    h2 = F.pmod(
-        F.conv(F.substring(md5, 16, 15), 16, 10).cast("long"),
-        F.lit(1 << 57).cast("long"),
+    agg = _minhash_slots(
+        shingles_raw(docs, id_col, text_col, n),
+        num_hashes,
+        F.sort_array(F.collect_set("h1")).alias("sh"),
     )
-    hashed = sh.select("doc_id", h1.alias("h1"), h2.alias("h2"))
-    mins = [
-        F.min(
-            F.pmod(
-                F.col("h1") + F.lit(i) * F.col("h2"),
-                F.lit(MERSENNE61).cast("long"),
-            )
-        ).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    agg = hashed.groupBy("doc_id").agg(
-        *mins, F.sort_array(F.collect_set("h1")).alias("sh")
-    )
-    buckets = F.array(
-        *[
-            F.concat_ws(
-                ",",
-                *[
-                    F.col(f"h{b * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(bands)
-        ]
-    )
+    buckets = _band_keys([F.col(f"h{i}") for i in range(num_hashes)], bands)
     return agg.select("doc_id", buckets.alias("buckets"), "sh")
 
 
@@ -524,21 +501,7 @@ def neardup_incremental(
         )
         .distinct()
     )
-    a_side = all_store.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("sh_a"))
-    b_side = all_store.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
-    pairs = (
-        cand.join(a_side, "a_id")
-        .join(b_side, "b_id")
-        .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.size("sh_a") + F.size("sh_b") - F.col("n_inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
-    )
-    return pairs, new_store
+    return _hashset_jaccard(cand, all_store, threshold), new_store
 
 
 def embedding_neardup_pairs(
@@ -726,14 +689,23 @@ def span_occurrences(
     Makes Language Models Better") cares about total duplicated text, and a
     span repeated within one document is still duplication. Native column
     algebra (split + posexplode), no Python."""
-    toks = F.split(F.col(text_col), " ")
-    grams = F.transform(
-        gram_index(toks, span_len),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, span_len)),
-    )
     return docs.select(
-        F.col(id_col).alias("doc_id"), F.posexplode(grams).alias("pos", "span")
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(ngrams(F.col(text_col), span_len)).alias("pos", "span"),
     )
+
+
+def _repeated_occurrences(occ: DataFrame, min_count: int) -> DataFrame:
+    """The ``span_occurrences`` rows whose span occurs >= ``min_count``
+    times corpus-wide: a counter aggregate on span (a hot span is one
+    combiner cell, never a group list) semi-joined back."""
+    rep = (
+        occ.groupBy("span")
+        .agg(F.count("*").alias("_n"))
+        .filter(F.col("_n") >= min_count)
+        .select("span")
+    )
+    return occ.join(rep, "span", "left_semi")
 
 
 def repeated_spans(
@@ -785,13 +757,7 @@ def span_dup_stats(
     shingle joins; the hot-span aggregate is a counter, so boilerplate
     inflates one cell, not a group list)."""
     occ = span_occurrences(docs, id_col, text_col, span_len)
-    rep = (
-        occ.groupBy("span")
-        .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") >= min_count)
-        .select("span")
-    )
-    flagged = occ.join(rep, "span", "left_semi")
+    flagged = _repeated_occurrences(occ, min_count)
     per_doc = occ.groupBy("doc_id").agg(F.count("*").alias("n_spans"))
     per_rep = flagged.groupBy("doc_id").agg(F.count("*").alias("n_repeated"))
     return (
@@ -830,13 +796,7 @@ def repeated_runs(
     SinglePartition — and the repeated-span semi-join shuffles on span text,
     the same well-distributed key as every shingle stage."""
     occ = span_occurrences(docs, id_col, text_col, span_len)
-    rep = (
-        occ.groupBy("span")
-        .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") >= min_count)
-        .select("span")
-    )
-    flagged = occ.join(rep, "span", "left_semi").select("doc_id", "pos")
+    flagged = _repeated_occurrences(occ, min_count).select("doc_id", "pos")
     w = Window.partitionBy("doc_id").orderBy("pos")
     new_run = F.when(
         F.col("pos") - F.lag("pos").over(w) > span_len, F.lit(1)
@@ -952,8 +912,13 @@ def hamming_pairs(
     max_hamming < bands the pigeonhole principle makes recall EXACTLY 1,
     so the output equals the brute-force all-pairs scan (which is what the
     DuckDB oracles run). Work ∝ band-bucket collisions, never n²."""
-    assert max_hamming < bands, "pigeonhole recall guarantee needs d < bands"
-    assert n_bits % bands == 0, "bands must divide n_bits"
+    if max_hamming >= bands:
+        raise ValueError(
+            f"the pigeonhole recall guarantee needs max_hamming < bands, "
+            f"got max_hamming={max_hamming}, bands={bands}"
+        )
+    if n_bits % bands:
+        raise ValueError(f"bands must divide n_bits, got n_bits={n_bits}, bands={bands}")
     bits = n_bits // bands
     mask = (1 << bits) - 1
     banded = sigs.select(
@@ -1058,27 +1023,10 @@ def minhash_jaccard_estimate(
     md5s per shingle; for exact values run the confirm stage."""
     from pyspark.storagelevel import StorageLevel
 
-    rows_per_band = num_hashes // bands
     sig = minhash_signatures(docs, id_col, text_col, n, num_hashes)
+    keys = _band_keys([F.col("sig")[i] for i in range(num_hashes)], bands)
     sig = sig.persist(StorageLevel.MEMORY_AND_DISK)  # both join sides
-    banded = sig.select(
-        "doc_id",
-        "sig",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col("sig")[b * rows_per_band + r].cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
+    banded = sig.select("doc_id", "sig", F.posexplode(keys).alias("band", "bucket"))
     a = banded.select(
         F.col("doc_id").alias("a_id"), F.col("sig").alias("_sa"), "band", "bucket"
     )
@@ -1121,9 +1069,9 @@ def decontaminate(
     doc: (doc_id, n_grams, n_contaminated, contam_frac, contaminated)
     where n_contaminated counts this doc's window POSITIONS whose n-gram
     occurs anywhere in the eval corpus and contaminated = n_contaminated
-    >= min_hits. Docs shorter than ``n`` tokens have no windows and report
-    n_grams = 0, contaminated only if min_hits == 0 is never the case
-    (min_hits >= 1), i.e. false.
+    >= min_hits. Docs shorter than ``n`` tokens have no windows: they
+    report n_grams = 0 and n_contaminated = 0, so they are flagged only
+    when min_hits <= 0.
 
     Scale plan: the eval corpus is tiny next to the training corpus
     (benchmarks are MBs against 100 TB), so its DISTINCT n-gram set is
@@ -1134,12 +1082,9 @@ def decontaminate(
     grams and hits together. Exactly one exchange in the whole plan (the
     per-doc agg on a unique key, map-side partials); no SortMergeJoin
     anywhere; nothing depends on eval x train pairing."""
-    toks = F.split(F.col(text_col), " ")
-    grams = F.transform(
-        gram_index(toks, n), lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))
-    )
     occ = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode_outer(grams).alias("span")
+        F.col(id_col).alias("doc_id"),
+        F.explode_outer(ngrams(F.col(text_col), n)).alias("span"),
     )
     ev = (
         span_occurrences(eval_docs, eval_id_col, eval_text_col, n)

@@ -13,10 +13,10 @@ All native Column algebra (oracle-checkable in DuckDB, zero Python):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import gram_index
+from ..functions.text import draw, ngrams, portable_hash64, tokens
 
 # tiny deterministic stopword profiles (heuristic language ID)
 LANG_PROFILES: dict[str, tuple[str, ...]] = {
@@ -31,8 +31,7 @@ def token_count(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     """(doc_id, n_tokens, n_subtokens): whitespace tokens plus a BPE-ish
     estimate = ceil(chars/4) per token summed (the usual ~4 chars/token
     rule of thumb), both as pure column math."""
-    toks = F.split(F.col(text_col), " ")
-    nonempty = F.filter(toks, lambda t: t != "")
+    nonempty = tokens(F.col(text_col))
     return docs.select(
         F.col(id_col).alias("doc_id"),
         F.size(nonempty).alias("n_tokens"),
@@ -44,25 +43,63 @@ def token_count(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc_id, n_chars, n_tokens, mean_token_len, punct_ratio,
-    stopword_ratio, quality): heuristic in [0,1] — longer docs with
-    plausible token lengths and some stopwords score higher. Deterministic
-    column math; thresholds are engineering choices, not learned."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+def _stop_hits(toks: Column, lang: str) -> Column:
+    """How many of the tokens are in ``lang``'s stopword profile."""
+    prof = F.array(*[F.lit(w) for w in LANG_PROFILES[lang]])
+    return F.size(F.filter(toks, lambda t: F.array_contains(prof, t)))
+
+
+def _quality(text: Column, toks: Column) -> tuple[Column, ...]:
+    """(n_chars, n_tokens, mean_len, punct_ratio, stop_ratio, quality), all
+    unrounded: the signals behind ``quality_score`` and ``keep_filter``."""
     n_tok = F.size(toks)
-    n_chars = F.length(F.col(text_col))
+    n_chars = F.length(text)
     mean_len = F.when(n_tok > 0, n_chars.cast("double") / n_tok).otherwise(F.lit(0.0))
-    punct = F.length(F.regexp_replace(F.col(text_col), r"[^.,;:!?]", ""))
+    punct = F.length(F.regexp_replace(text, r"[^.,;:!?]", ""))
     punct_ratio = F.when(n_chars > 0, punct.cast("double") / n_chars).otherwise(F.lit(0.0))
-    en_stop = F.array(*[F.lit(w) for w in LANG_PROFILES["en"]])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(en_stop, t)))
+    n_stop = _stop_hits(toks, "en")
     stop_ratio = F.when(n_tok > 0, n_stop.cast("double") / n_tok).otherwise(F.lit(0.0))
     quality = (
         F.least(n_tok.cast("double") / 100.0, F.lit(1.0)) * 0.4
         + F.when((mean_len >= 3.0) & (mean_len <= 10.0), 0.3).otherwise(0.0)
         + F.least(stop_ratio * 5.0, F.lit(1.0)) * 0.2
         + F.when(punct_ratio <= 0.1, 0.1).otherwise(0.0)
+    )
+    return n_chars, n_tok, mean_len, punct_ratio, stop_ratio, quality
+
+
+def _pred_lang(toks: Column) -> tuple[Column, Column]:
+    """(pred_lang, best hit count): argmax of the per-language stopword
+    hits, 'und' when none hits, ties to the alphabetically first language
+    — the same CASE order as the oracle."""
+    langs = sorted(LANG_PROFILES)
+    hit_cols = {lang: _stop_hits(toks, lang) for lang in langs}
+    best = F.greatest(*hit_cols.values())
+    pred = F.when(best <= 0, F.lit("und"))
+    for lang in langs:
+        pred = pred.when(hit_cols[lang] == best, F.lit(lang))
+    return pred, best
+
+
+def _dup_frac(text: Column, n: int) -> tuple[Column, Column, Column]:
+    """(n_ngrams, n_distinct, ROUND(dup_frac, 6)) over the doc's word
+    n-grams: dup_frac = 1 - distinct/total, 0 for a doc with no n-gram."""
+    grams = ngrams(text, n)
+    total = F.size(grams)
+    distinct = F.size(F.array_distinct(grams))
+    dup_frac = F.round(
+        F.when(total > 0, 1.0 - distinct.cast("double") / total).otherwise(0.0), 6
+    )
+    return total, distinct, dup_frac
+
+
+def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """(doc_id, n_chars, n_tokens, mean_token_len, punct_ratio,
+    stopword_ratio, quality): heuristic in [0,1] — longer docs with
+    plausible token lengths and some stopwords score higher. Deterministic
+    column math; thresholds are engineering choices, not learned."""
+    n_chars, n_tok, mean_len, punct_ratio, stop_ratio, quality = _quality(
+        F.col(text_col), tokens(F.col(text_col))
     )
     return docs.select(
         F.col(id_col).alias("doc_id"),
@@ -79,16 +116,7 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     """(doc_id, pred_lang, lang_score): argmax over per-language stopword
     hit counts; 'und' (undetermined) when no profile hits. Deterministic
     tie-break by language code order."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    langs = sorted(LANG_PROFILES)
-    hit_cols = {}
-    for lang in langs:
-        prof = F.array(*[F.lit(w) for w in LANG_PROFILES[lang]])
-        hit_cols[lang] = F.size(F.filter(toks, lambda t: F.array_contains(prof, t)))
-    best = F.greatest(*hit_cols.values())
-    pred = F.when(best <= 0, F.lit("und"))
-    for lang in langs:  # alphabetical priority on ties — same CASE order as oracle
-        pred = pred.when(hit_cols[lang] == best, F.lit(lang))
+    pred, best = _pred_lang(tokens(F.col(text_col)))
     return docs.select(
         F.col(id_col).alias("doc_id"),
         pred.alias("pred_lang"),
@@ -103,7 +131,7 @@ def doc_fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
     of tokens changes the fingerprint (unlike bag-of-words hashes). Pure
     fold via ``aggregate``; bit-identical in DuckDB via list_reduce.
     """
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks = tokens(F.col(text_col))
     indexed = F.zip_with(
         toks,
         F.sequence(F.lit(1), F.greatest(F.size(toks), F.lit(1))),
@@ -131,19 +159,12 @@ def repetition_stats(
     the n-gram array is built once via sequence+transform and the distinct
     count via array_distinct — nothing explodes to rows.
     """
-    toks = F.split(F.col(text_col), " ")
-    grams = F.transform(
-        gram_index(toks, n), lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))
-    )
-    total = F.size(grams)
-    distinct = F.size(F.array_distinct(grams))
+    total, distinct, dup_frac = _dup_frac(F.col(text_col), n)
     return docs.select(
         F.col(id_col).alias("doc_id"),
         total.alias("n_ngrams"),
         distinct.alias("n_distinct"),
-        F.round(
-            F.when(total > 0, 1.0 - distinct.cast("double") / total).otherwise(0.0), 6
-        ).alias("dup_frac"),
+        dup_frac.alias("dup_frac"),
     )
 
 
@@ -167,15 +188,9 @@ def top_ngrams(
     single-task global window over the full ngram cardinality); the rank
     window then runs over just k rows.
     """
-    toks = F.split(F.col(text_col), " ")
     sh = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.transform(
-                gram_index(toks, n),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-            )
-        ).alias("ngram"),
+        F.explode(ngrams(F.col(text_col), n)).alias("ngram"),
     )
     per_doc = sh.groupBy("doc_id", "ngram").agg(F.count("*").alias("occ"))
     agg = per_doc.groupBy("ngram").agg(
@@ -355,9 +370,7 @@ def pack_sequences(
     independent of the partition count — only the doc-id order defines
     the packing.
     """
-    n_tok = F.size(
-        F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    )
+    n_tok = F.size(tokens(F.col(text_col)))
     d = (
         docs.select(F.col(id_col).alias("doc_id"), n_tok.alias("n_tok"))
         .filter(F.col("n_tok") > 0)
@@ -400,11 +413,7 @@ def stratified_sample(
     DuckDB oracle recomputes it verbatim), no RNG state, no sampleBy
     (whose Bernoulli draw is partitioning-dependent). Narrow: a broadcast
     rate lookup + a filter; no shuffle at any scale."""
-    from .dedup import portable_hash64
-
-    bucket = F.pmod(
-        portable_hash64(F.col(id_col).cast("string"), seed), F.lit(1_000_000)
-    )
+    bucket = draw(F.col(id_col), seed)
     entries = [(k, int(round(v * 1_000_000))) for k, v in sorted(rates.items())]
     spark = docs.sparkSession
     rate_df = spark.createDataFrame(
@@ -440,56 +449,21 @@ def keep_filter(
     comma-joined list of failed rules (deterministic order: short,
     repetitive, low_quality, lang) and keep = 1 iff none failed.
 
-    All four signals are recomputed INLINE from the same expressions as
-    ``quality_score`` / ``repetition_stats`` / ``lang_id`` (a consistency
-    test pins them equal), so at 100 TB the keep decision costs one scan
-    with zero shuffles and zero joins — not three derived tables joined on
-    doc_id. Rule comparisons use the ROUND(6) values, matching the oracle's
-    arithmetic exactly (a last-ulp quality difference must not flip keep).
+    The signals are the column builders behind ``quality_score`` /
+    ``repetition_stats`` (n=2) / ``lang_id``, selected side by side, so at
+    100 TB the keep decision costs one scan with zero shuffles and zero
+    joins — not three derived tables joined on doc_id. Rule comparisons
+    use the ROUND(6) values, matching the oracle's arithmetic exactly (a
+    last-ulp quality difference must not flip keep).
     """
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    n_tok = F.size(toks)
-    n_chars = F.length(F.col(text_col))
-    mean_len = F.when(n_tok > 0, n_chars.cast("double") / n_tok).otherwise(F.lit(0.0))
-    punct = F.length(F.regexp_replace(F.col(text_col), r"[^.,;:!?]", ""))
-    punct_ratio = F.when(n_chars > 0, punct.cast("double") / n_chars).otherwise(F.lit(0.0))
-    en_stop = F.array(*[F.lit(w) for w in LANG_PROFILES["en"]])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(en_stop, t)))
-    stop_ratio = F.when(n_tok > 0, n_stop.cast("double") / n_tok).otherwise(F.lit(0.0))
-    quality = F.round(
-        F.least(n_tok.cast("double") / 100.0, F.lit(1.0)) * 0.4
-        + F.when((mean_len >= 3.0) & (mean_len <= 10.0), 0.3).otherwise(0.0)
-        + F.least(stop_ratio * 5.0, F.lit(1.0)) * 0.2
-        + F.when(punct_ratio <= 0.1, 0.1).otherwise(0.0),
-        6,
-    )
-    # repetition (bigram dup fraction) — repetition_stats n=2 expressions
-    rtoks = F.split(F.col(text_col), " ")
-    grams = F.transform(
-        gram_index(rtoks, 2), lambda i: F.concat_ws(" ", F.slice(rtoks, i + 1, 2))
-    )
-    total = F.size(grams)
-    distinct = F.size(F.array_distinct(grams))
-    dup_frac = F.round(
-        F.when(total > 0, 1.0 - distinct.cast("double") / total).otherwise(0.0), 6
-    )
-    # language id — lang_id expressions
-    langs = sorted(LANG_PROFILES)
-    hit_cols = {}
-    for lang in langs:
-        prof = F.array(*[F.lit(w) for w in LANG_PROFILES[lang]])
-        hit_cols[lang] = F.size(F.filter(toks, lambda t: F.array_contains(prof, t)))
-    best = F.greatest(*hit_cols.values())
-    pred = F.when(best <= 0, F.lit("und"))
-    for lang in langs:
-        pred = pred.when(hit_cols[lang] == best, F.lit(lang))
-
+    toks = tokens(F.col(text_col))
+    _, n_tok, _, _, _, quality = _quality(F.col(text_col), toks)
     base = docs.select(
         F.col(id_col).alias("doc_id"),
         n_tok.alias("n_tokens"),
-        quality.alias("quality"),
-        dup_frac.alias("dup_frac"),
-        pred.alias("pred_lang"),
+        F.round(quality, 6).alias("quality"),
+        _dup_frac(F.col(text_col), 2)[2].alias("dup_frac"),
+        _pred_lang(toks)[0].alias("pred_lang"),
     )
     conds = [
         ("short", F.col("n_tokens") < min_tokens),
@@ -529,6 +503,20 @@ def source_stats(
         F.round(
             F.sum(F.col("quality").cast("decimal(28,6)")).cast("double"), 6
         ).alias("sum_quality"),
+    )
+
+
+def _mean_nll(nll: DataFrame) -> DataFrame:
+    """(doc_id, n_tokens, logppl) from per-token (doc_id, nll) rows, nll
+    already ROUND(9): decimal-sum (order-independent) -> double -> divide
+    -> ROUND(6), the same operation order as the oracles, so the hash
+    cannot drift on decimal-division scale rules."""
+    return nll.groupBy("doc_id").agg(
+        F.count("*").alias("n_tokens"),
+        F.round(
+            F.sum(F.col("nll").cast("decimal(28,9)")).cast("double") / F.count("*"),
+            6,
+        ).alias("logppl"),
     )
 
 
@@ -572,21 +560,7 @@ def unigram_logppl(
             9,
         ).alias("nll"),
     )
-    return (
-        toks.join(logp, "token")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_tokens"),
-            # decimal-sum (order-independent) -> double -> divide -> round:
-            # the same operation order as the oracle, so the hash can't
-            # drift on decimal-division scale rules
-            F.round(
-                F.sum(F.col("nll").cast("decimal(28,9)")).cast("double")
-                / F.count("*"),
-                6,
-            ).alias("logppl"),
-        )
-    )
+    return _mean_nll(toks.join(logp, "token"))
 
 
 def bigram_logppl(
@@ -616,8 +590,9 @@ def bigram_logppl(
     in practice Heaps-law sublinear); it joins on its own key and never
     sits in driver memory.
     """
-    arr = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    base = docs.select(F.col(id_col).alias("doc_id"), arr.alias("arr")).filter(
+    base = docs.select(
+        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("arr")
+    ).filter(
         F.size("arr") > 0
     )
     toks = base.select("doc_id", F.posexplode("arr").alias("pos", "token"))
@@ -673,18 +648,7 @@ def bigram_logppl(
             ).alias("nll"),
         )
     )
-    return (
-        first_nll.unionByName(rest_nll)
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_tokens"),
-            F.round(
-                F.sum(F.col("nll").cast("decimal(28,9)")).cast("double")
-                / F.count("*"),
-                6,
-            ).alias("logppl"),
-        )
-    )
+    return _mean_nll(first_nll.unionByName(rest_nll))
 
 
 def token_budget_sample(
@@ -711,9 +675,7 @@ def token_budget_sample(
     cap, not a target)."""
     from pyspark.sql import Window
 
-    from .dedup import portable_hash64
-
-    n_tok = F.size(F.filter(F.split(F.col(text_col), " "), lambda t: t != ""))
+    n_tok = F.size(tokens(F.col(text_col)))
     base = docs.select(
         F.col(id_col).alias("doc_id"),
         F.col(group_col).alias("source"),
@@ -766,16 +728,12 @@ def temperature_mix(
     table broadcast back, one narrow filter. No wide shuffle anywhere —
     the only exchange carries |sources| rows.
     """
-    from .dedup import portable_hash64
-
-    n_tok = F.size(F.filter(F.split(F.col(text_col), " "), lambda t: t != ""))
+    n_tok = F.size(tokens(F.col(text_col)))
     base = docs.select(
         F.col(id_col).alias("doc_id"),
         F.col(source_col).alias("source"),
         n_tok.alias("n_tokens"),
-        F.pmod(
-            portable_hash64(F.col(id_col).cast("string"), seed), F.lit(1_000_000)
-        ).alias("_bucket"),
+        draw(F.col(id_col), seed).alias("_bucket"),
     )
     totals = (
         base.groupBy("source")
@@ -833,8 +791,6 @@ def dataset_split(
 
     Narrow: zero shuffles, zero joins — one hash + a CASE chain; the
     100 TB cost is the scan itself."""
-    from .dedup import portable_hash64
-
     ws = weights or {"train": 0.9, "val": 0.05, "test": 0.05}
     names = sorted(ws)
     cum, bounds = 0.0, []
@@ -843,9 +799,7 @@ def dataset_split(
         bounds.append((n, int(round(cum * 1_000_000))))
     if abs(cum - 1.0) > 1e-9:
         raise ValueError(f"weights must sum to 1, got {cum}")
-    bucket = F.pmod(
-        portable_hash64(F.col(id_col).cast("string"), seed), F.lit(1_000_000)
-    )
+    bucket = draw(F.col(id_col), seed)
     expr = None
     for n, b in bounds:
         cond = bucket < F.lit(b)
@@ -889,7 +843,7 @@ def length_quantiles(
     ``token_count``, computed scan-side so only (source, n_tokens) ever
     shuffles. Quantiles are ROUND(x, 6) per the cross-engine float rule.
     """
-    n_tok = F.size(F.filter(F.split(F.col(text_col), " "), lambda t: t != ""))
+    n_tok = F.size(tokens(F.col(text_col)))
     base = docs.select(F.col(group_col).alias("source"), n_tok.alias("n_tokens"))
 
     def q(p: float):
@@ -925,8 +879,6 @@ def shuffle_order(
     ``_two_phase_offsets`` scheme over (shuffle_key, doc_id) — md5-uniform
     keys, so ranges balance by construction — with unit weights, so the
     exclusive prefix sum IS the 0-based rank."""
-    from .dedup import portable_hash64
-
     d = docs.select(
         F.col(id_col).alias("doc_id"),
         portable_hash64(F.col(id_col).cast("string"), seed).alias("shuffle_key"),
@@ -959,11 +911,7 @@ def shard_manifest(
     token-count weights — range Exchange + P-row collect + broadcast
     offsets; no single-task sort, no join. Docs with zero tokens are
     excluded (they have no bytes to shard)."""
-    from .dedup import portable_hash64
-
-    n_tok = F.size(
-        F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    )
+    n_tok = F.size(tokens(F.col(text_col)))
     d = docs.select(
         F.col(id_col).alias("doc_id"),
         portable_hash64(F.col(id_col).cast("string"), seed).alias("shuffle_key"),
@@ -997,7 +945,7 @@ def dsir_weights(
     "looks like the target domain".
 
     Features are the paper's: unigrams + bigrams, hashed into ``n_buckets``
-    buckets via the engine-portable md5 hash (`dedup.portable_hash64`), each
+    buckets via the engine-portable md5 hash (`functions.text.portable_hash64`), each
     distribution add-``alpha`` smoothed over the FIXED bucket space (a
     constant, so cross-engine exact). Deterministic end to end: counting +
     log arithmetic, no RNG, no trained artifact — the per-bucket log-ratio
@@ -1019,11 +967,10 @@ def dsir_weights(
     """
     from pyspark.sql import Window
 
-    from .dedup import portable_hash64
-
     def occurrences(df: DataFrame) -> DataFrame:
-        arr = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-        base = df.select(F.col(id_col).alias("doc_id"), arr.alias("arr")).filter(
+        base = df.select(
+            F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("arr")
+        ).filter(
             F.size("arr") > 0
         )
         unis = base.select("doc_id", F.explode("arr").alias("gram"))

@@ -122,7 +122,7 @@ def main(argv: list[str] | None = None) -> int:
         return df
 
     if args.input_format == "warc":
-        from pmcanalysis_spark.operators.dedup import portable_hash64
+        from pmcanalysis_spark.functions.text import portable_hash64
         from pmcanalysis_spark.operators.textstats import lang_id
         from pmcanalysis_spark.sources.warc import parse_warc_records
 

@@ -886,3 +886,67 @@ def test_hamming_pairs_first_band_dedup_on_duplicate_heavy_input(spark):
         if h <= 2:
             exp.add((min(a, b), max(a, b), h))
     assert got == exp and len(got) == len(exp)
+
+
+def test_caller_arguments_raise_value_error(spark):
+    """Bad caller arguments raise ValueError — a check that survives
+    ``python -O``: more than 16 MinHash slots (the affine family is sized
+    for 16), a band count that does not divide the slots (the trailing
+    slots would silently drop out of every band key), and Hamming banding
+    without the pigeonhole guarantee or with uneven bands."""
+    import pytest
+
+    from pmcanalysis_spark.operators.dedup import (
+        hamming_pairs,
+        minhash_jaccard_estimate,
+        neardup_incremental,
+        neardup_signature_store,
+    )
+
+    docs = _docs(spark)
+    with pytest.raises(ValueError):
+        minhash_signatures(docs, num_hashes=17)
+    with pytest.raises(ValueError):
+        neardup_signature_store(docs, num_hashes=20, bands=4)
+    for op in (minhash_lsh_pairs, neardup_signature_store, minhash_jaccard_estimate):
+        with pytest.raises(ValueError):
+            op(docs, num_hashes=8, bands=3)
+    with pytest.raises(ValueError):
+        neardup_incremental(docs, neardup_signature_store(docs, num_hashes=8, bands=4),
+                            num_hashes=8, bands=3)
+    sigs = spark.createDataFrame([(1, 5), (2, 7)], "doc_id long, sig long")
+    with pytest.raises(ValueError):
+        hamming_pairs(sigs, n_bits=64, max_hamming=4, bands=4)
+    with pytest.raises(ValueError):
+        hamming_pairs(sigs, n_bits=64, max_hamming=2, bands=6)
+
+
+def test_incremental_neardup_agrees_with_batch(spark):
+    """Admitting the new docs (doc_id % 5 == 0) against the store of the
+    old ones yields exactly the batch near-dup pairs that touch a new doc:
+    both paths band the same signatures and confirm over the same h1
+    shingle-hash sets, so pairs and Jaccard values match (the batch side
+    runs without the hot-shingle drop, which the incremental confirm does
+    not apply)."""
+    from pyspark.sql import functions as F
+
+    from pmcanalysis_spark.operators.dedup import (
+        neardup_incremental,
+        neardup_signature_store,
+        neardup_text_scalable,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    old = docs.filter(F.col("doc_id") % 5 != 0)
+    new = docs.filter(F.col("doc_id") % 5 == 0)
+    args = dict(n=3, threshold=0.5, num_hashes=8, bands=4)
+    store = neardup_signature_store(old, n=3, num_hashes=8, bands=4)
+    inc, _ = neardup_incremental(new, store, **args)
+    got = {(r.a_id, r.b_id): r.jaccard for r in inc.collect()}
+    batch = {
+        (r.a_id, r.b_id): r.jaccard
+        for r in neardup_text_scalable(docs, max_shingle_df=None, **args).collect()
+        if r.a_id % 5 == 0 or r.b_id % 5 == 0
+    }
+    assert len(batch) > 0
+    assert got == batch

@@ -168,9 +168,9 @@ def test_stratified_sample_deterministic_rule(spark):
 
 
 def test_keep_filter_consistent_with_standalone_signals(spark):
-    """keep_filter's inlined quality/dup_frac/pred_lang must equal the
-    standalone operators row-for-row (the consistency pin for the fused
-    one-scan implementation), and the keep/reasons logic must follow."""
+    """keep_filter's quality/dup_frac/pred_lang (the builders it shares
+    with the standalone operators) must equal those operators row-for-row
+    in its one fused scan, and the keep/reasons logic must follow."""
     from pmcanalysis_spark.operators.textstats import (
         keep_filter,
         lang_id,
