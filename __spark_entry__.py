@@ -727,8 +727,8 @@ def q_lex_autocomplete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_term_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A10 over terms: xref/name-shared terms merged by connected
-    components; min term_id elected canonical (entities table shape)."""
+    """A10 over terms: xref/name-shared terms merged by a driver
+    union-find; min term_id elected canonical (entities table shape)."""
     from pmcanalysis_spark.canonicalize import canonicalize_terms
 
     lex = _lex_df(spark).withColumn("kind", F.lit("name"))
@@ -911,68 +911,26 @@ def q_mm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     extract_media_features must recover width/height and exact 0/1 channel
     means through the real decoders — the oracle recomputes the truth from
     the construction rule alone."""
-    import zlib
-
     import pandas as pd
 
+    from pmcanalysis_spark.fixtures import const_gray_gif, const_gray_jpeg, solid_rgb_png
     from pmcanalysis_spark.multimodal import extract_media_features
 
     def build(batches):
-        def chunk(t: bytes, d: bytes) -> bytes:
-            return (
-                len(d).to_bytes(4, "big") + t + d
-                + (zlib.crc32(t + d) & 0xFFFFFFFF).to_bytes(4, "big")
-            )
-
-        const_gray_jpeg = _const_gray_jpeg
-
         for pdf in batches:
             rows = {"media_id": [], "kind": [], "mime": [], "n_bytes": [], "payload": []}
             for doc_id in pdf["doc_id"]:
                 doc_id = int(doc_id)
                 w, h = doc_id % 7 + 2, doc_id % 5 + 2
-                rgb = bytes(
-                    [255 * (doc_id % 3 == 0), 255 * (doc_id % 3 == 1),
-                     255 * (doc_id % 3 == 2)]
-                )
+                v = 255 * (doc_id % 3 == 0)
                 if doc_id % 4 == 2:  # baseline JPEG, solid gray
-                    v = 255 * (doc_id % 3 == 0)
-                    payload = const_gray_jpeg(w, h, v)
-                    mime = "image/jpeg"
+                    payload, mime = const_gray_jpeg(w, h, v), "image/jpeg"
                 elif doc_id % 2 == 0:  # PNG, filters cycle 0..4 per scanline
-                    raw = bytearray()
-                    row_px = rgb * w
-                    prev = bytes(3 * w)
-                    for y in range(h):
-                        ft = y % 5
-                        raw.append(ft)
-                        for x in range(3 * w):
-                            a = row_px[x - 3] if x >= 3 else 0
-                            b = prev[x]
-                            c = prev[x - 3] if x >= 3 else 0
-                            pred = (
-                                0 if ft == 0 else a if ft == 1 else b if ft == 2
-                                else (a + b) >> 1 if ft == 3
-                                else _paeth(a, b, c)
-                            )
-                            raw.append((row_px[x] - pred) & 0xFF)
-                        prev = row_px
-                    ihdr = (
-                        w.to_bytes(4, "big") + h.to_bytes(4, "big")
-                        + bytes([8, 2, 0, 0, 0])
-                    )
-                    payload = (
-                        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-                        + chunk(b"IEND", b"")
-                    )
-                    mime = "image/png"
+                    rgb = bytes([255 * (doc_id % 3 == c) for c in range(3)])
+                    payload, mime = solid_rgb_png(w, h, rgb), "image/png"
                 elif doc_id % 4 == 3:  # GIF, solid gray via 2-entry palette
-                    v = 255 * (doc_id % 3 == 0)
-                    payload = _const_gray_gif(w, h, v)
-                    mime = "image/gif"
+                    payload, mime = const_gray_gif(w, h, v), "image/gif"
                 else:  # binary PGM, solid gray 0 or 255
-                    v = 255 * (doc_id % 3 == 0)
                     payload = f"P5 {w} {h} 255\n".encode() + bytes([v]) * (w * h)
                     mime = "image/x-portable-graymap"
                 rows["media_id"].append(str(doc_id))
@@ -998,82 +956,6 @@ def q_mm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    return a if pa <= pb and pa <= pc else b if pb <= pc else c
-
-
-def _jpeg_seg(marker: int, body: bytes) -> bytes:
-    return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
-
-
-def _const_gray_jpeg(w: int, h: int, v: int) -> bytes:
-    """Single-MCU baseline JPEG of a solid gray v (w, h <= 8): one DC
-    coefficient (v-128)*8, AC all zero — tiny hand-built canonical tables
-    (DC cats 0..11 at 6 bits, AC just EOB). Shared by the image and video
-    driver-gate payload builders."""
-    dc = (v - 128) * 8
-    t = 0
-    a = abs(dc)
-    while a:
-        t += 1
-        a >>= 1
-    dcval = dc if dc >= 0 else dc + (1 << t) - 1
-    bits = format(t, "06b")  # DC table: symbol s has 6-bit code s
-    if t:
-        bits += format(dcval, f"0{t}b")
-    bits += "00"  # AC table: EOB has 2-bit code 0
-    bits += "1" * ((8 - len(bits) % 8) % 8)
-    ecs = bytearray(int(bits[i : i + 8], 2) for i in range(0, len(bits), 8))
-    for i in range(len(ecs) - 1, -1, -1):  # byte stuffing
-        if ecs[i] == 0xFF:
-            ecs.insert(i + 1, 0x00)
-    dc_bits = bytes([0, 0, 0, 0, 0, 12] + [0] * 10)
-    ac_bits = bytes([0, 1] + [0] * 14)
-    return (
-        b"\xff\xd8"
-        + _jpeg_seg(0xDB, bytes([0]) + bytes([1] * 64))
-        + _jpeg_seg(0xC0, bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-                    + bytes([1, 1, 0x11, 0]))
-        + _jpeg_seg(0xC4, bytes([0x00]) + dc_bits + bytes(range(12)))
-        + _jpeg_seg(0xC4, bytes([0x10]) + ac_bits + bytes([0x00]))
-        + _jpeg_seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-        + bytes(ecs)
-        + b"\xff\xd9"
-    )
-
-
-def _const_gray_gif(w: int, h: int, v: int) -> bytes:
-    """Solid-gray GIF via a 4-entry palette (black at 0, white at 1) and a
-    trivially conformant LZW stream: CLEAR before every literal keeps the
-    code width constant at 3 bits (min code size 2) — the decoder still
-    runs its full LZW machinery."""
-    idx = 1 if v else 0
-    acc = nbits = 0
-    data = bytearray()
-    for code in [c for _ in range(w * h) for c in (4, idx)] + [5]:  # CLEAR,px..,END
-        acc |= code << nbits
-        nbits += 3
-        while nbits >= 8:
-            data.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-    if nbits:
-        data.append(acc & 0xFF)
-    out = bytearray(b"GIF89a")
-    out += w.to_bytes(2, "little") + h.to_bytes(2, "little")
-    out += bytes([0x81, 0, 0])  # GCT present, depth 2 (4 entries)
-    out += bytes([0, 0, 0, 255, 255, 255]) + b"\x00" * 6
-    out += b"\x2c" + b"\x00\x00\x00\x00"
-    out += w.to_bytes(2, "little") + h.to_bytes(2, "little") + b"\x00"
-    out += bytes([2])  # LZW min code size
-    for i in range(0, len(data), 255):
-        blk = data[i : i + 255]
-        out += bytes([len(blk)]) + bytes(blk)
-    return bytes(out + b"\x00\x3b")
-
-
 def q_mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL WAV decode through the driver gate: per doc a constant-sample
     PCM-16 mono WAV (rate 1024, n = 64 + doc_id % 50 samples, constant
@@ -1081,27 +963,18 @@ def q_mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (c*32768 is an integer, sqrt(c²) == |c|, n/1024 is dyadic), so the
     float32 feature slots carry exact values the oracle recomputes from the
     construction rule."""
-    import struct
-
     import pandas as pd
 
+    from pmcanalysis_spark.fixtures import const_pcm16_wav
     from pmcanalysis_spark.multimodal import extract_media_features
 
     def build(batches):
-        fmt_body = struct.pack("<HHIIHH", 1, 1, 1024, 2048, 2, 16)
         for pdf in batches:
             rows = {"media_id": [], "kind": [], "mime": [], "n_bytes": [], "payload": []}
             for doc_id in pdf["doc_id"]:
                 doc_id = int(doc_id)
-                nsamp = 64 + doc_id % 50
-                val = (doc_id % 5) * 4096  # c * 32768 with c = (doc_id%5)/8
-                raw = struct.pack("<h", val) * nsamp
-                body = (
-                    b"WAVE"
-                    + b"fmt " + (16).to_bytes(4, "little") + fmt_body
-                    + b"data" + len(raw).to_bytes(4, "little") + raw
-                )
-                payload = b"RIFF" + len(body).to_bytes(4, "little") + body
+                # c * 32768 with c = (doc_id%5)/8
+                payload = const_pcm16_wav(64 + doc_id % 50, (doc_id % 5) * 4096)
                 rows["media_id"].append(str(doc_id))
                 rows["kind"].append("audio")
                 rows["mime"].append("audio/wav")
@@ -1134,6 +1007,7 @@ def q_mm_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle regenerates (frame_idx, dims, mean) from the rule."""
     import pandas as pd
 
+    from pmcanalysis_spark.fixtures import const_gray_jpeg
     from pmcanalysis_spark.multimodal import extract_media_features
 
     def build(batches):
@@ -1144,7 +1018,7 @@ def q_mm_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
                 w, h = doc_id % 7 + 2, doc_id % 5 + 2
                 movi = b"movi"
                 for i in range(doc_id % 3 + 1):
-                    fr = _const_gray_jpeg(w, h, 255 * ((doc_id + i) % 2 == 0))
+                    fr = const_gray_jpeg(w, h, 255 * ((doc_id + i) % 2 == 0))
                     movi += b"00dc" + len(fr).to_bytes(4, "little") + fr
                     if len(fr) & 1:
                         movi += b"\x00"

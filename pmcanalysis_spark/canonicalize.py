@@ -19,14 +19,16 @@ records) is never dropped and never fully crossed: it is sub-keyed by a
 coauthor-MinHash block so the n² is per block, with `mega_key_stats` as the
 lineage surface for which keys took that path (see pair_scores). Label
 propagation with the pointer-doubling compression step converges in
-O(log d) iterations for diameter d; each iteration is two shuffles; we
-localCheckpoint every few iterations to truncate lineage.
+O(log d) iterations for diameter d; each iteration is two shuffles and
+a localCheckpoint that truncates lineage.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def _jaccard(a, b):
@@ -144,23 +146,23 @@ def _score_pairs(pairs: DataFrame) -> DataFrame:
     )
 
 
+def _band_min(b: int, blocking_col: str):
+    """Band ``b``'s 1-permutation MinHash of the blocking token set (the
+    hash salted with b; NULL for an empty set)."""
+    # NB: the lambda must stay single-parameter — F.transform treats a 2-arg
+    # lambda as (element, index), so a `_b=b` default would bind the array
+    # index, not the band salt, collapsing every band into one block
+    return F.array_min(F.transform(F.col(blocking_col), lambda c: F.xxhash64(F.lit(b), c)))
+
+
 def _block_expr(n_bands: int, blocking_col: str = "coauthors"):
     """Blocking keys for a mega author_key record: one 1-permutation MinHash
     of the blocking token set per band (band b salts the hash with b, so the
     bands are independent permutations). A record with an EMPTY blocking set
     gets a per-(doc, band) unique key — it can never meet a partner, i.e. it
     degrades to a singleton rather than joining a catch-all mega block."""
-    # NB: the per-band lambda must stay single-parameter — F.transform treats
-    # a 2-arg lambda as (element, index), so a `_b=b` default would bind the
-    # array index, not the band salt, collapsing every band into one block
-    def band(b):
-        return lambda c: F.xxhash64(F.lit(b), c)
-
     return F.array(*[
-        F.coalesce(
-            F.array_min(F.transform(F.col(blocking_col), band(b))),
-            F.xxhash64(F.lit(-1 - b), F.col("doc_id")),
-        )
+        F.coalesce(_band_min(b, blocking_col), F.xxhash64(F.lit(-1 - b), F.col("doc_id")))
         for b in range(n_bands)
     ])
 
@@ -310,13 +312,7 @@ def pair_scores(
         "coauthors", "mesh", "title_tokens", "affiliation_tokens",
     ).distinct()
 
-    def _pband(b_):
-        return lambda c: F.xxhash64(F.lit(b_), c)
-
-    profile_bands = F.array(*[
-        F.array_min(F.transform(F.col(blocking_col), _pband(b_)))
-        for b_ in range(n_blocking_bands)
-    ])
+    profile_bands = F.array(*[_band_min(b_, blocking_col) for b_ in range(n_blocking_bands)])
     pblocked = (
         prof.filter(F.size(F.col(blocking_col)) > 0)
         .withColumn("_bands", profile_bands)
@@ -393,10 +389,9 @@ def similarity_edges(
     return scored.filter(similar).select("author_key", "src", "dst", "simm")
 
 
-def _label_with_union_find(edge_rows, vertices: DataFrame) -> DataFrame:
-    """Driver-side union-find over collected (src, dst) rows -> vertices
-    labeled (id, component) with the min id of their component, broadcast
-    back; a vertex on no edge labels itself."""
+def _union_find(pairs) -> dict:
+    """Driver union-find over (a, b) id pairs -> {id: min id of its
+    component} for every id on a pair."""
     parent: dict = {}
 
     def find(x):
@@ -405,20 +400,29 @@ def _label_with_union_find(edge_rows, vertices: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    for r in edge_rows:
-        a, b = r["src"], r["dst"]
+    for a, b in pairs:
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    labels = [(k, find(k)) for k in parent]
-    spark = vertices.sparkSession
-    if labels:
-        lmap = spark.createDataFrame(labels, ["id", "component"])
-    else:
-        lmap = spark.createDataFrame([], vertices.select(
-            F.col("id"), F.col("id").alias("component")).schema)
+    return {k: find(k) for k in parent}
+
+
+def _local_map(df: DataFrame, key: str, value: str, ids, labels: dict) -> DataFrame:
+    """Rows ``(i, labels.get(i, i))`` for ``i`` in ``ids`` as an Arrow
+    LocalRelation typed like ``df[key]``: collecting it starts no Spark job."""
+    schema = to_arrow_schema(df.select(F.col(key), F.col(key).alias(value)).schema)
+    table = pa.table({key: ids, value: [labels.get(i, i) for i in ids]}, schema=schema)
+    return df.sparkSession.createDataFrame(table)
+
+
+def _label_with_union_find(edge_rows, vertices: DataFrame) -> DataFrame:
+    """Driver-side union-find over collected (src, dst) rows -> vertices
+    labeled (id, component) with the min id of their component, broadcast
+    back; a vertex on no edge labels itself."""
+    labels = _union_find((r["src"], r["dst"]) for r in edge_rows)
+    lmap = _local_map(vertices, "id", "component", list(labels), labels)
     return vertices.join(F.broadcast(lmap), "id", "left").select(
         "id", F.coalesce("component", F.col("id")).alias("component")
     )
@@ -593,29 +597,25 @@ def connected_components(
 
 def canonicalize_terms(lexicon: DataFrame) -> DataFrame:
     """Ontology-term entity canonicalization: terms that share an xref or an
-    exact name are the same real-world entity; merge via connected
-    components and elect the min term_id as canonical.
+    exact name are the same real-world entity; merge them and elect the min
+    term_id as canonical.
 
     Input: lexicon(name, term_id, kind). Output: (term_id, canonical_id) for
-    EVERY term (singletons map to themselves). The triples table is then
-    rewritten by two broadcast joins (subj, obj) — the "canonicalize before
-    materializing" stage of the north_star. Edge construction is a self-join
-    on the shared key (name/xref), the same salted-groupBy shape as J4.
+    EVERY distinct term_id (singletons map to themselves, NULL to NULL).
+    ``name`` and ``xref`` rows share one key space; other kinds and NULL
+    names never merge. The lexicon is driver-sized by contract
+    (``build_triples`` builds its trie on the driver): it is read once with
+    ``toArrow()`` (one Spark job), merged by a driver union-find and returned
+    as an Arrow LocalRelation, which ``rewrite_triples_canonical``'s two
+    broadcasts read without rescanning the lexicon.
     """
-    keys = lexicon.filter(F.col("kind").isin("xref", "name")).select(
-        "name", "term_id"
-    ).distinct()
-    a = keys.select(F.col("name"), F.col("term_id").alias("src"))
-    b = keys.select(F.col("name"), F.col("term_id").alias("dst"))
-    shared = (
-        a.join(b, "name")
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    verts = lexicon.select(F.col("term_id").alias("id")).distinct()
-    comp = connected_components(shared, vertices=verts)
-    return comp.select(F.col("id").alias("term_id"), F.col("component").alias("canonical_id"))
+    t = lexicon.select("name", "term_id", "kind").toArrow().to_pydict()
+    by_key: dict = {}
+    for name, tid, kind in zip(t["name"], t["term_id"], t["kind"]):
+        if kind in ("xref", "name") and name is not None and tid is not None:
+            by_key.setdefault(name, []).append(tid)
+    labels = _union_find((g[0], i) for g in by_key.values() for i in g[1:])
+    return _local_map(lexicon, "term_id", "canonical_id", list(dict.fromkeys(t["term_id"])), labels)
 
 
 def rewrite_triples_canonical(triples: DataFrame, canon: DataFrame) -> DataFrame:

@@ -12,11 +12,15 @@ Tables produced (as lists of plain-Python rows; callers wrap in
   hierarchy(term_id, ancestor_id)   -- transitive closure
   author_records(...)
   rates(x, y)                        -- known trapezoid AUC
+and the byte-level JPEG/GIF/PNG/WAV payloads of the real-decode driver
+queries.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import struct
+import zlib
 from dataclasses import dataclass
 
 EPOCH = _dt.datetime(2024, 1, 1, 0, 0, 0)
@@ -323,3 +327,126 @@ def build_author_records_scaled(n: int) -> list[dict]:
             "affiliation_tokens": ["lab"],
         })
     return rows
+
+
+# ---------------------------------------------------------------------------
+# Byte-level media payloads for the real-decode driver queries
+# (mm_image_features, mm_audio_features, mm_video_frames)
+# ---------------------------------------------------------------------------
+
+def _paeth(a: int, b: int, c: int) -> int:
+    p = a + b - c
+    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+    return a if pa <= pb and pa <= pc else b if pb <= pc else c
+
+
+def _jpeg_seg(marker: int, body: bytes) -> bytes:
+    return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
+
+
+def const_gray_jpeg(w: int, h: int, v: int) -> bytes:
+    """Single-MCU baseline JPEG of a solid gray v (w, h <= 8): one DC
+    coefficient (v-128)*8, AC all zero — tiny hand-built canonical tables
+    (DC cats 0..11 at 6 bits, AC just EOB). Shared by the image and video
+    driver-gate payload builders."""
+    dc = (v - 128) * 8
+    t = 0
+    a = abs(dc)
+    while a:
+        t += 1
+        a >>= 1
+    dcval = dc if dc >= 0 else dc + (1 << t) - 1
+    bits = format(t, "06b")  # DC table: symbol s has 6-bit code s
+    if t:
+        bits += format(dcval, f"0{t}b")
+    bits += "00"  # AC table: EOB has 2-bit code 0
+    bits += "1" * ((8 - len(bits) % 8) % 8)
+    ecs = bytearray(int(bits[i : i + 8], 2) for i in range(0, len(bits), 8))
+    for i in range(len(ecs) - 1, -1, -1):  # byte stuffing
+        if ecs[i] == 0xFF:
+            ecs.insert(i + 1, 0x00)
+    dc_bits = bytes([0, 0, 0, 0, 0, 12] + [0] * 10)
+    ac_bits = bytes([0, 1] + [0] * 14)
+    return (
+        b"\xff\xd8"
+        + _jpeg_seg(0xDB, bytes([0]) + bytes([1] * 64))
+        + _jpeg_seg(0xC0, bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
+                    + bytes([1, 1, 0x11, 0]))
+        + _jpeg_seg(0xC4, bytes([0x00]) + dc_bits + bytes(range(12)))
+        + _jpeg_seg(0xC4, bytes([0x10]) + ac_bits + bytes([0x00]))
+        + _jpeg_seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
+        + bytes(ecs)
+        + b"\xff\xd9"
+    )
+
+
+def const_gray_gif(w: int, h: int, v: int) -> bytes:
+    """Solid-gray GIF via a 4-entry palette (black at 0, white at 1) and a
+    trivially conformant LZW stream: CLEAR before every literal keeps the
+    code width constant at 3 bits (min code size 2) — the decoder still
+    runs its full LZW machinery."""
+    idx = 1 if v else 0
+    acc = nbits = 0
+    data = bytearray()
+    for code in [c for _ in range(w * h) for c in (4, idx)] + [5]:  # CLEAR,px..,END
+        acc |= code << nbits
+        nbits += 3
+        while nbits >= 8:
+            data.append(acc & 0xFF)
+            acc >>= 8
+            nbits -= 8
+    if nbits:
+        data.append(acc & 0xFF)
+    out = bytearray(b"GIF89a")
+    out += w.to_bytes(2, "little") + h.to_bytes(2, "little")
+    out += bytes([0x81, 0, 0])  # GCT present, depth 2 (4 entries)
+    out += bytes([0, 0, 0, 255, 255, 255]) + b"\x00" * 6
+    out += b"\x2c" + b"\x00\x00\x00\x00"
+    out += w.to_bytes(2, "little") + h.to_bytes(2, "little") + b"\x00"
+    out += bytes([2])  # LZW min code size
+    for i in range(0, len(data), 255):
+        blk = data[i : i + 255]
+        out += bytes([len(blk)]) + bytes(blk)
+    return bytes(out + b"\x00\x3b")
+
+
+def solid_rgb_png(w: int, h: int, rgb: bytes) -> bytes:
+    """8-bit RGB PNG of one solid color whose scanline filter cycles through
+    types 0..4 (None, Sub, Up, Average, Paeth), zlib-deflated."""
+    def chunk(t: bytes, d: bytes) -> bytes:
+        return len(d).to_bytes(4, "big") + t + d + (zlib.crc32(t + d) & 0xFFFFFFFF).to_bytes(4, "big")
+
+    raw = bytearray()
+    row_px = rgb * w
+    prev = bytes(3 * w)
+    for y in range(h):
+        ft = y % 5
+        raw.append(ft)
+        for x in range(3 * w):
+            a = row_px[x - 3] if x >= 3 else 0
+            b = prev[x]
+            c = prev[x - 3] if x >= 3 else 0
+            pred = (
+                0 if ft == 0 else a if ft == 1 else b if ft == 2
+                else (a + b) >> 1 if ft == 3
+                else _paeth(a, b, c)
+            )
+            raw.append((row_px[x] - pred) & 0xFF)
+        prev = row_px
+    ihdr = w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([8, 2, 0, 0, 0])
+    return (
+        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b"")
+    )
+
+
+def const_pcm16_wav(n_samples: int, value: int) -> bytes:
+    """Mono PCM-16 WAV at 1024 Hz holding ``n_samples`` copies of the
+    sample ``value``."""
+    raw = struct.pack("<h", value) * n_samples
+    body = (
+        b"WAVE"
+        + b"fmt " + (16).to_bytes(4, "little") + struct.pack("<HHIIHH", 1, 1, 1024, 2048, 2, 16)
+        + b"data" + len(raw).to_bytes(4, "little") + raw
+    )
+    return b"RIFF" + len(body).to_bytes(4, "little") + body

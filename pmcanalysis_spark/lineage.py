@@ -79,14 +79,24 @@ def _fingerprint(df: DataFrame, extra: str = "") -> str:
     addresses are dropped, while DATA LITERALS survive untouched (an r2
     blanket-regex version rewrote ``'tag#1'``/hex-string constants too, so
     two genuinely different filters could fingerprint-equal and silently
-    resume a stale snapshot). Prefer an explicit fingerprint for production
-    jobs (argv hash) — UDF *bodies* are not captured by any plan string
-    (only the function name is).
+    resume a stale snapshot). A LocalRelation prints no rows, so the rows
+    of each LocalRelation leaf (a ``createDataFrame(pyarrow.Table)`` map
+    such as ``canonicalize_terms``'s) are folded into the hash too. Rows
+    behind a ``createDataFrame(list)`` input live in a Python RDD that no
+    plan shows: a stage reading one needs an explicit fingerprint. Prefer
+    an explicit fingerprint for production jobs (argv hash) — UDF *bodies*
+    are not captured by any plan string (only the function name is).
     """
     import hashlib
 
-    plan = df._jdf.queryExecution().analyzed().canonicalized().toString()
-    return hashlib.md5((plan + "|" + extra).encode()).hexdigest()
+    plan = df._jdf.queryExecution().analyzed()
+    h = hashlib.md5((plan.canonicalized().toString() + "|" + extra).encode())
+    leaves = plan.collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LocalRelation":
+            h.update(leaf.data().toString().encode())
+    return h.hexdigest()
 
 
 def try_resume(

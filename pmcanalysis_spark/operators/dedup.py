@@ -420,8 +420,8 @@ def neardup_signature_store(
     num_hashes: int = 16,
     bands: int = 4,
 ) -> DataFrame:
-    """Per-doc near-dup signature store row:
-    ``(doc_id, buckets array<string>[bands], sh array<bigint> sorted)`` —
+    """Per-doc near-dup signature store row: ``(doc_id, buckets
+    array<string>[bands], sh array<bigint> sorted, params string)`` —
     everything incremental dedup needs to admit FUTURE batches without
     ever touching this batch's text again. ``buckets[b]`` is the MinHash
     LSH band key (identical to ``minhash_lsh_pairs`` banding); ``sh`` is
@@ -434,7 +434,9 @@ def neardup_signature_store(
 
     The store is a plain table you append per crawl. ONE corpus
     scan, ONE groupBy(doc): minhash mins, the bucket keys, and the sorted
-    hash set all come out of the same aggregate.
+    hash set all come out of the same aggregate. ``params`` records the
+    ``n``/``num_hashes``/``bands`` the row was built with, so
+    ``neardup_incremental`` can refuse rows built with other ones.
     """
     # duplicate-invariant consumers only (min + collect_set): raw grams,
     # no distinct exchange
@@ -444,7 +446,14 @@ def neardup_signature_store(
         F.sort_array(F.collect_set("h1")).alias("sh"),
     )
     buckets = _band_keys([F.col(f"h{i}") for i in range(num_hashes)], bands)
-    return agg.select("doc_id", buckets.alias("buckets"), "sh")
+    return agg.select(
+        "doc_id", buckets.alias("buckets"), "sh",
+        F.lit(_store_params(n, num_hashes, bands)).alias("params"),
+    )
+
+
+def _store_params(n: int, num_hashes: int, bands: int) -> str:
+    return f"n={n} num_hashes={num_hashes} bands={bands}"
 
 
 def neardup_incremental(
@@ -481,11 +490,27 @@ def neardup_incremental(
     bound df² explosion in the full-corpus confirm join), so a
     boilerplate shingle costs candidates only what the banding already
     admitted. Every shuffle key (band buckets, doc ids) is uniform.
+
+    A store row built with other ``n``/``num_hashes``/``bands`` (its
+    ``params``) is banded and hashed in another space than the new batch,
+    so its near-dups would be missed without a word: the store scan of the
+    candidate join raises instead, in the join's own job.
     """
+    if "params" not in store.columns:
+        raise ValueError(
+            "neardup_incremental: the signature store has no params column; "
+            "rebuild it with neardup_signature_store"
+        )
     new_store = neardup_signature_store(
         new_docs, id_col, text_col, n, num_hashes, bands
     )
-    all_store = store.unionByName(new_store)
+    want = _store_params(n, num_hashes, bands)
+    mismatch = F.raise_error(F.concat(
+        F.lit("neardup_incremental: signature store row built with "),
+        F.coalesce(F.col("params"), F.lit("no params")), F.lit(f", admitting with {want}"),
+    ))
+    checked = store.filter(F.when(F.col("params") == want, F.lit(True)).otherwise(mismatch))
+    all_store = checked.unionByName(new_store)
     new_b = new_store.select(
         F.col("doc_id").alias("n_id"), F.posexplode("buckets").alias("band", "bucket")
     )

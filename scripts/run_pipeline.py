@@ -235,9 +235,10 @@ def main(argv: list[str] | None = None) -> int:
     lex_df = spark.createDataFrame(
         [(n, t, "name") for n, t in lex], "name string, term_id string, kind string"
     )
-    entities = canonicalize_terms(lex_df)
-    ents, eres = materialize_stage(
-        entities, "entities", args.output, key_col="term_id", fingerprint=stage_fp
+    # canonicalize_terms reads the lexicon when called: check the manifest first
+    ents, eres = try_resume(spark, args.output, "entities", stage_fp) or materialize_stage(
+        canonicalize_terms(lex_df), "entities", args.output, key_col="term_id",
+        fingerprint=stage_fp,
     )
     canon_triples = rewrite_triples_canonical(
         out.select("subj", "pred", "obj", "nab", "na", "nb", "npmi"), ents

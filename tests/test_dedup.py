@@ -950,3 +950,31 @@ def test_incremental_neardup_agrees_with_batch(spark):
     }
     assert len(batch) > 0
     assert got == batch
+
+
+def test_incremental_neardup_refuses_a_store_built_with_other_params(spark):
+    """A store row records the n/num_hashes/bands it was built with; admitting
+    against it with other ones bands and hashes in another space, so it must
+    fail loudly instead of returning no near-dups. With matching ones the
+    exact duplicate is found."""
+    import pytest
+
+    from pmcanalysis_spark.operators.dedup import (
+        neardup_incremental,
+        neardup_signature_store,
+    )
+
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    old = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    new = spark.createDataFrame([(2, text)], "doc_id long, text string")
+    store = neardup_signature_store(old, num_hashes=8, bands=4)
+    pairs, _ = neardup_incremental(new, store, num_hashes=8, bands=4)
+    assert [(r.a_id, r.b_id) for r in pairs.collect()] == [(1, 2)]
+    for args in (dict(num_hashes=16, bands=4), dict(num_hashes=8, bands=2), dict(n=2)):
+        kw = {"num_hashes": 8, "bands": 4, **args}
+        pairs, _ = neardup_incremental(new, store, **kw)
+        with pytest.raises(Exception, match="signature store row built with n=3 num_hashes=8"):
+            pairs.collect()
+    # a store written before rows recorded their params
+    with pytest.raises(ValueError, match="no params column"):
+        neardup_incremental(new, store.drop("params"), num_hashes=8, bands=4)

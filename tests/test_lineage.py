@@ -107,6 +107,45 @@ def test_fingerprint_stable_across_udf_rebuild(spark):
 
 
 
+def test_changed_local_map_does_not_resume(spark, tmp_path):
+    """A canonical map is an Arrow LocalRelation whose plan prints no rows:
+    its rows are part of the fingerprint, so a stage over a changed map is
+    rebuilt instead of resuming the stale snapshot, and an unchanged map
+    still resumes."""
+    from pmcanalysis_spark.canonicalize import canonicalize_terms, rewrite_triples_canonical
+    from pmcanalysis_spark.lineage import _fingerprint
+
+    base = str(tmp_path / "stages")
+    triples = spark.createDataFrame(
+        [("HP:2", "p", "DOID:1", 3, 10, 5, 0.5), ("MP:2", "p", "DOID:1", 4, 8, 5, 0.7)],
+        "subj string, pred string, obj string, nab long, na long, nb long, npmi double",
+    )
+
+    def stage(rows):
+        lex = spark.createDataFrame(rows, "name string, term_id string, kind string")
+        canon = rewrite_triples_canonical(triples, canonicalize_terms(lex))
+        return materialize_stage(canon, "triples_canonical", base, key_col="subj")
+
+    merged = [("tremor", "HP:2", "name"), ("tremor", "MP:2", "name"), ("x", "DOID:1", "name")]
+    apart = [("tremor", "HP:2", "name"), ("tremble", "MP:2", "name"), ("x", "DOID:1", "name")]
+    out, r1 = stage(merged)
+    assert [(r.subj, r.nab) for r in out.collect()] == [("HP:2", 7)]
+    with pytest.warns(UserWarning, match="replacing it"):
+        out, r2 = stage(apart)
+    assert not r2.resumed and r2.input_fingerprint != r1.input_fingerprint
+    assert sorted((r.subj, r.nab) for r in out.collect()) == [("HP:2", 3), ("MP:2", 4)]
+    _, r3 = stage(apart)
+    assert r3.resumed and r3.run_id == r2.run_id
+    # the rows, not the plan text, tell two driver-local maps apart
+    import pyarrow as pa
+
+    def local(v):
+        return spark.createDataFrame(pa.table({"k": ["a", "b"], "v": ["x", v]}))
+
+    assert _fingerprint(local("y")) == _fingerprint(local("y"))
+    assert _fingerprint(local("y")) != _fingerprint(local("z"))
+
+
 def _spark_lineage(spark, base, stage, key_col):
     """The lineage a full scan would give: count/min/max of ``key_col`` per
     written file, keyed by the partition id in the file name."""

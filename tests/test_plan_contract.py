@@ -469,3 +469,19 @@ def test_dsir_log_ratio_table_is_broadcast(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_canonicalize_terms_reads_the_lexicon_once(spark):
+    """canonicalize_terms reads the lexicon with ONE Spark job, merges on
+    the driver, and hands back an Arrow LocalRelation: collecting the map
+    (as each broadcast of rewrite_triples_canonical does) starts none."""
+    from test_lineage import _jobs_started
+
+    from pmcanalysis_spark.canonicalize import canonicalize_terms
+    from pmcanalysis_spark.schemas import LEXICON
+
+    lex = spark.createDataFrame([(e.name, e.term_id, e.kind) for e in build_lexicon()], LEXICON)
+    built = []
+    assert _jobs_started(spark, "canon-build", lambda: built.append(canonicalize_terms(lex))) == 1
+    assert _plan(built[0]).startswith("LocalTableScan")
+    assert _jobs_started(spark, "canon-collect", lambda: built[0].collect()) == 0
